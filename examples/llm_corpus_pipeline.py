@@ -42,6 +42,15 @@ is the reconciliation a production run logs.  At 100 TB nothing here is
 pairwise or single-partition: LSH buckets bound the near-dup candidates,
 the shingle probe is a shuffle-on-shingle semi-join, and packing uses
 the two-phase distributed prefix sum.
+
+One pin per counted stage: every stage a later stage reads is cut with
+a LAZY ``cut_lineage`` right before its funnel count, so the count
+materializes the stage once and everything downstream reads the pinned
+rows instead of re-running ingest, tokenization, the gates and both
+dedups from the source at every count.  The lang-id count is a single
+filter over the union pin and needs none (its rows are pinned with the
+Gopher gates).  An eager cut there would only add one job per stage:
+its own count, before the funnel's.
 """
 
 from __future__ import annotations
@@ -80,7 +89,8 @@ def run(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     )
     funnel["ingest_parquet"] = docs.count()
 
-    raw_dir = os.path.join(out_dir, "_raw_drop")
+    # no leading "_": Spark's file index treats such paths as hidden
+    raw_dir = os.path.join(out_dir, "raw_drop")
     os.makedirs(raw_dir, exist_ok=True)
     for r in docs.orderBy("doc_id").limit(16).collect():  # 16-file fixture
         with open(os.path.join(raw_dir, f"doc_{r['doc_id']:08d}.txt"), "w") as f:
@@ -99,8 +109,11 @@ def run(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     )
     funnel["ingest_rawfiles"] = raw.count()
     # cross-source id dedup: parquet wins (anti-join the raw side)
-    docs = docs.unionByName(
-        raw.join(docs.select("doc_id"), "doc_id", "left_anti")
+    docs = cut_lineage(
+        docs.unionByName(
+            raw.join(docs.select("doc_id"), "doc_id", "left_anti")
+        ),
+        eager=False,
     )
     funnel["after_union_dedup"] = docs.count()
 
@@ -130,17 +143,20 @@ def run(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     n_alpha = (
         F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]"))).cast("bigint")
     )
-    docs = docs.filter(
-        (n_words >= 30) & (n_words <= 100000)
-        & (sum_chars >= 3 * n_words) & (sum_chars <= 10 * n_words)
-        & (n_stop >= 2)
-        & (10 * n_sym <= n_words)
-        & (10 * n_alpha >= 8 * n_words)
+    docs = cut_lineage(
+        docs.filter(
+            (n_words >= 30) & (n_words <= 100000)
+            & (sum_chars >= 3 * n_words) & (sum_chars <= 10 * n_words)
+            & (n_stop >= 2)
+            & (10 * n_sym <= n_words)
+            & (10 * n_alpha >= 8 * n_words)
+        ),
+        eager=False,
     )
     funnel["after_gopher_gates"] = docs.count()
 
     # -- 3. exact dedup (q_dedup_exact) -----------------------------------
-    docs = exact_dedup(docs, "text", "doc_id")
+    docs = cut_lineage(exact_dedup(docs, "text", "doc_id"), eager=False)
     funnel["after_exact_dedup"] = docs.count()
 
     # -- 4. near dedup (q_dedup_near_clusters: keep cluster min) ----------
@@ -150,7 +166,7 @@ def run(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     losers = clusters.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id")
     )
-    docs = cut_lineage(docs.join(losers, "doc_id", "left_anti"))
+    docs = cut_lineage(docs.join(losers, "doc_id", "left_anti"), eager=False)
     funnel["after_near_dedup"] = docs.count()
 
     # -- 5. + 6. split on the ingestion clock, then decontaminate --------
@@ -190,7 +206,9 @@ def run(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
         .select("doc_id")
         .distinct()
     )
-    docs = docs.join(contaminated, "doc_id", "left_anti")
+    docs = cut_lineage(
+        docs.join(contaminated, "doc_id", "left_anti"), eager=False
+    )
     funnel["after_decontamination"] = docs.count()
 
     # -- 7. domain mixing weights (q_domain_mixing_weights) ---------------
@@ -269,7 +287,7 @@ def run(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
         )
         .select("doc_id")
     )
-    docs = cut_lineage(docs.join(keep, "doc_id", "left_semi"))
+    docs = cut_lineage(docs.join(keep, "doc_id", "left_semi"), eager=False)
     funnel["after_dsir_selection"] = docs.count()
 
     # -- 7c. language temperature sampling report (alpha = 0.7) ----------

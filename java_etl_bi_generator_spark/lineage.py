@@ -57,6 +57,13 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     (recomputable from storage after executor loss — the only safe form
     on a 1000-executor cluster), else ``localCheckpoint`` (executor
     block storage; fine where driver and executor share a fate).
+
+    ``eager=True`` materializes now, with a count job of its own.
+    ``eager=False`` defers that to the first action on the result (a
+    stage's funnel count, a loop's convergence aggregate), which saves
+    that one job.  It does not fold the upstream into a single job:
+    with AQE on, the first action still runs each shuffle stage under
+    the cut as a job of its own.
     """
     if checkpoint_dir(df.sparkSession) is not None:
         return df.checkpoint(eager=eager)

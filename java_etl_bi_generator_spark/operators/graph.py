@@ -87,8 +87,12 @@ def connected_components(
         )
         # pointer jumping: follow the component's own (possibly smaller)
         # label; the propagate result is pinned first because the
-        # self-join consumes it on both sides.  Both cuts LAZY — the
-        # sum aggregate below is the round's one action (r11 lesson).
+        # self-join consumes it on both sides.  Both cuts are LAZY, so
+        # the sum aggregate below is the round's one ACTION — but not
+        # its one job: with AQE on, that action still runs each shuffle
+        # stage under the two cuts as its own job (4 + 3 + 2 = 9 jobs
+        # per round in a profile).  Lazy only saves each cut's own
+        # eager count job (r11 lesson).
         stepped = cut_lineage(new_labels, eager=False)
         roots = stepped.select(
             F.col("node").alias("__cnode"),
@@ -105,7 +109,12 @@ def connected_components(
             )
         )
         labels = cut_lineage(jumped, eager=False)
-        cur_sum = labels.agg(F.sum("component")).first()[0]
+        # Exact DECIMAL(38,0) sum: a bigint sum overflows (an ANSI error)
+        # on hashed 64-bit ids.  Labels only ever decrease, so an equal
+        # exact sum still means no label changed.
+        cur_sum = labels.agg(
+            F.sum(F.col("component").cast("decimal(38,0)"))
+        ).first()[0]
         if cur_sum == prev_sum:
             converged = True
             break
@@ -220,6 +229,10 @@ def _star_contract(
             .distinct()
         )
         stars = cut_lineage(ss, eager=False)
+        # E must stay free of duplicate edges: the fused head would
+        # count a repeated edge twice, and __nc > 1 would then read as
+        # a node with two parents (a false violation).  ss's distinct,
+        # with every star edge s > t, guarantees it.
         E = stars.select(F.col("s").alias("u"), F.col("t").alias("v")).unionAll(
             stars.select(F.col("t").alias("u"), F.col("s").alias("v"))
         )

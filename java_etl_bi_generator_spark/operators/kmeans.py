@@ -54,7 +54,7 @@ def nearest_cell(vec_col: Column | str, centroids: list[list[float]]) -> Column:
     Same one-parse literal-table + ``transform`` loop as the integer
     twin (``_nearest_cands``) — the unrolled per-centroid form cost
     k×dim py4j round-trips per call and a same-sized tree per job
-    (see _centroid_table).  ``repr(float)`` round-trips, so the parsed
+    (see bigint_literal).  ``repr(float)`` round-trips, so the parsed
     double literals are bit-identical to the F.lit form."""
     v = as_double_array(vec_col)
     body = ",".join(
@@ -175,31 +175,37 @@ def quantize_micro(vec_col: Column | str) -> Column:
     )
 
 
-def _sq_dist_int(vec: Column, centroid: list[int]) -> Column:
+def bigint_literal(values: list[int] | list[list[int]]) -> Column:
+    """Literal ``array<bigint>`` of a list of ints — or
+    ``array<array<bigint>>`` of a list of int lists (a centroid or
+    lookup table) — built from ONE parsed SQL string.  Building every
+    component as its own ``F.lit(..).cast(..)`` Column costs one py4j
+    round-trip per element and a literal tree of the same size for the
+    analyzer to walk on every job; for the PQ trainer (m·k·subdim
+    literals rebuilt each Lloyd round) that construction+analysis
+    overhead was the query's wall clock (q_pq_train_sampled: 12.5 s of
+    a 14 s warm run spent in pq_fit_int driving 3 tiny jobs —
+    OPTIMIZATION_r11.md).  One ``F.expr`` parse hands the whole value
+    to the JVM at once; the values, types and nullability are those of
+    the per-element form."""
+
+    def sql(v) -> str:
+        if isinstance(v, (list, tuple)):
+            return "array(" + ",".join(sql(x) for x in v) + ")"
+        return f"{int(v)}L"
+
+    return F.expr(sql(values))
+
+
+def sq_dist_int(vec: Column, centroid: list[int]) -> Column:
     """Exact bigint squared L2 between an array<bigint> column and a
-    literal integer centroid."""
-    c = F.array(*[F.lit(int(x)).cast("bigint") for x in centroid])
+    literal integer vector."""
+    c = bigint_literal(centroid)
     return F.aggregate(
         F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-
-
-def _centroid_table(centroids: list[list[int]]) -> Column:
-    """Literal array<array<bigint>> of the centroids, built from ONE
-    parsed SQL string.  The earlier unrolled form created every
-    component as its own ``F.lit(..).cast(..)`` Column — k×dim py4j
-    round-trips per call site and a k×dim-literal tree for the analyzer
-    to walk on EVERY job; for the PQ trainer (m·k·subdim literals
-    rebuilt each Lloyd round) that construction+analysis overhead was
-    the query's wall clock (q_pq_train_sampled: 12.5 s of a 14 s warm
-    run spent in pq_fit_int driving 3 tiny jobs — OPTIMIZATION_r11.md).
-    One ``F.expr`` parse hands the whole table to the JVM at once."""
-    body = ",".join(
-        "array(" + ",".join(f"{int(x)}L" for x in c) + ")" for c in centroids
-    )
-    return F.expr(f"array({body})")
 
 
 def _nearest_cands(vec: Column, centroids: list[list[int]]) -> Column:
@@ -208,7 +214,7 @@ def _nearest_cands(vec: Column, centroids: list[list[int]]) -> Column:
     one-literal centroid table instead of k unrolled distance subtrees
     (identical values, types and struct-min tie-break; the arithmetic
     is the same zip_with/aggregate fold per centroid)."""
-    tbl = _centroid_table(centroids)
+    tbl = bigint_literal(centroids)
     k = len(centroids)
     return F.transform(
         F.sequence(F.lit(0), F.lit(k - 1)),

@@ -2741,13 +2741,11 @@ def q_vector_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     available as operators/similarity.py ``ivf_topk``; this integer form
     is the reproducible twin.  At 100 TB: centroid build is one bounded
     shuffle, the probe list broadcasts, candidates prune by cell."""
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import bigint_literal, quantize_micro
 
     em = T(spark, sf_dir, "embeddings")
     query = _query_vector(spark, sf_dir)
-    q_micro = F.array(
-        *[F.lit(int(math.floor(x * 1e6 + 0.5))).cast("bigint") for x in query]
-    )
+    q_micro = bigint_literal([math.floor(x * 1e6 + 0.5) for x in query])
     cents = (
         em.select(
             "label", F.posexplode(quantize_micro("embedding")).alias("pos", "xi")
@@ -2791,7 +2789,7 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_fit_int,
         nearest_cell_int,
         quantize_micro,
-        _sq_dist_int,
+        sq_dist_int,
     )
 
     em = T(spark, sf_dir, "embeddings")
@@ -2799,7 +2797,7 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
     assigned = qv.withColumn("cell", nearest_cell_int(F.col("__q"), model))
     dist_cols = [
-        F.when(F.col("cell") == i, _sq_dist_int(F.col("__q"), c))
+        F.when(F.col("cell") == i, sq_dist_int(F.col("__q"), c))
         for i, c in enumerate(model)
     ]
     return (
@@ -16547,7 +16545,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     (production batches thousands of probes through the ANN index
     instead — q_ivfpq_topk — then exact-reranks; this is the exact
     ground-truth variant that also EVALUATES that index)."""
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import quantize_micro, sq_dist_int
 
     em = T(spark, sf_dir, "embeddings")
     qv = cut_lineage(
@@ -16558,16 +16556,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = qv.filter(F.col("vec_id") < 5).collect()  # 5-row pull
     parts = []
     for p in probes:
-        qlit = F.array(
-            *[F.lit(int(x)).cast("bigint") for x in p["__q"]]
-        )
-        d = F.aggregate(
-            F.zip_with(
-                F.col("__q"), qlit, lambda x, y: (x - y) * (x - y)
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
+        d = sq_dist_int(F.col("__q"), p["__q"])
         parts.append(
             qv.filter(
                 (F.col("label") != F.lit(int(p["label"])))
@@ -18580,6 +18569,7 @@ def _ivfpq_index(
     process instead of re-running it (round-7 verdict task 3).  Both
     models are plain integer lists — deterministic, session-independent."""
     from .operators.kmeans import (
+        bigint_literal,
         kmeans_fit_int,
         nearest_cell_int,
         pq_fit_int,
@@ -18590,12 +18580,7 @@ def _ivfpq_index(
         return _IVFPQ_INDEX_CACHE[cache_key]
     coarse = kmeans_fit_int(em, k=_IVFPQ_COARSE_K, iters=2)
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    coarse_lit = F.array(
-        *[
-            F.array(*[F.lit(int(c)).cast("bigint") for c in cent])
-            for cent in coarse
-        ]
-    )
+    coarse_lit = bigint_literal(coarse)
     rv = cut_lineage(
         qv.withColumn("cell", nearest_cell_int(F.col("__q"), coarse))
         .withColumn(
@@ -18633,7 +18618,7 @@ def q_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     interaction scan shape: per-row arithmetic linear in (query tokens
     × doc tokens), one ordered projection out; the IVF/PQ family
     upstream prunes candidates when the corpus is too big to scan."""
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import bigint_literal, quantize_micro
 
     M, SUB = 4, 16
     em = T(spark, sf_dir, "embeddings")
@@ -18641,12 +18626,7 @@ def q_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_micro = qv.filter(F.col("vec_id") == 0).first()["__q"]
 
     def dot(qs: int, ds: int) -> F.Column:
-        qlit = F.array(
-            *[
-                F.lit(int(x)).cast("bigint")
-                for x in q_micro[qs * SUB : (qs + 1) * SUB]
-            ]
-        )
+        qlit = bigint_literal(q_micro[qs * SUB : (qs + 1) * SUB])
         return F.aggregate(
             F.zip_with(
                 F.slice(F.col("__q"), ds * SUB + 1, SUB),
@@ -18715,7 +18695,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from functools import reduce
     from operator import add
 
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import bigint_literal, quantize_micro
 
     em = T(spark, sf_dir, "embeddings")
     enc, models, subdim = _pq_encoded(em, cache_key=sf_dir)
@@ -18739,10 +18719,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = reduce(
         add,
         [
-            F.element_at(
-                F.array(*[F.lit(int(d)).cast("bigint") for d in adc[s]]),
-                F.col(f"code{s}") + 1,
-            )
+            F.element_at(bigint_literal(adc[s]), F.col(f"code{s}") + 1)
             for s in range(_PQ_M)
         ],
     )
@@ -18796,6 +18773,7 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operator import add
 
     from .operators.kmeans import (
+        bigint_literal,
         nearest_cell_int,
         nearest_cell_int_struct,
         quantize_micro,
@@ -18807,12 +18785,7 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = len(coarse[0])
     subdim = dim // _PQ_M
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    coarse_lit = F.array(
-        *[
-            F.array(*[F.lit(int(c)).cast("bigint") for c in cent])
-            for cent in coarse
-        ]
-    )
+    coarse_lit = bigint_literal(coarse)
     rv = cut_lineage(
         qv.withColumn("cell", nearest_cell_int(F.col("__q"), coarse))
         .withColumn(
@@ -18870,13 +18843,7 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
             add,
             [
                 F.element_at(
-                    F.array(
-                        *[
-                            F.lit(int(d)).cast("bigint")
-                            for d in tables[c][s]
-                        ]
-                    ),
-                    F.col(f"code{s}") + 1,
+                    bigint_literal(tables[c][s]), F.col(f"code{s}") + 1
                 )
                 for s in range(_PQ_M)
             ],
@@ -18908,7 +18875,7 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ranking hash-check (the q_ivfpq_recall discipline).  Output:
     vec_id, adc_dist (the stage-1 estimate), exact_dist (the stage-2
     truth) — keeping both makes the quantization error visible data."""
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import quantize_micro, sq_dist_int
 
     short = (
         _ivfpq_adc_scored(spark, sf_dir)
@@ -18918,12 +18885,7 @@ def q_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = T(spark, sf_dir, "embeddings")
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
     q_micro = qv.filter(F.col("vec_id") == 0).first()["__q"]
-    qlit = F.array(*[F.lit(int(x)).cast("bigint") for x in q_micro])
-    d_exact = F.aggregate(
-        F.zip_with(F.col("__q"), qlit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d_exact = sq_dist_int(F.col("__q"), q_micro)
     return (
         qv.join(short, "vec_id")
         .select("vec_id", "adc_dist", d_exact.alias("exact_dist"))
@@ -18941,17 +18903,12 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     query because both lists are deterministic integer arithmetic, so
     the recall itself hash-checks (the q_pq_recall / q_ann_recall
     discipline, now covering every retriever in the ladder)."""
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import quantize_micro, sq_dist_int
 
     em = T(spark, sf_dir, "embeddings")
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
     q_micro = qv.filter(F.col("vec_id") == 0).first()["__q"]
-    qlit = F.array(*[F.lit(int(x)).cast("bigint") for x in q_micro])
-    d_exact = F.aggregate(
-        F.zip_with(F.col("__q"), qlit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d_exact = sq_dist_int(F.col("__q"), q_micro)
     exact = (
         qv.filter(F.col("vec_id") != 0)
         .select("vec_id", d_exact.alias("d"))
@@ -18981,7 +18938,7 @@ def q_embed_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the q_pq_recall discipline).  Scale: two TakeOrderedAndProject
     scans — the truncated one reads 4× fewer bytes once vectors are
     stored column-sliced — joined on 10 rows."""
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import quantize_micro, sq_dist_int
 
     TRUNC = 16
     em = T(spark, sf_dir, "embeddings")
@@ -18989,18 +18946,7 @@ def q_embed_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_micro = qv.filter(F.col("vec_id") == 0).first()["__q"]
 
     def topk(width: int):
-        qlit = F.array(
-            *[F.lit(int(x)).cast("bigint") for x in q_micro[:width]]
-        )
-        d = F.aggregate(
-            F.zip_with(
-                F.slice(F.col("__q"), 1, width),
-                qlit,
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
+        d = sq_dist_int(F.slice(F.col("__q"), 1, width), q_micro[:width])
         return (
             qv.filter(F.col("vec_id") != 0)
             .select("vec_id", d.alias("d"))
@@ -19032,19 +18978,14 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (trained codes + micro-unit distances), so the recall itself is
     hash-checkable.  One row: k, hits, recall.  Scale: both lists are
     TakeOrderedAndProject scans; the eval joins two 10-row frames."""
-    from .operators.kmeans import quantize_micro
+    from .operators.kmeans import quantize_micro, sq_dist_int
 
     em = T(spark, sf_dir, "embeddings")
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
     q_micro = (
         qv.filter(F.col("vec_id") == 0).select("__q").first()["__q"]
     )
-    qlit = F.array(*[F.lit(int(x)).cast("bigint") for x in q_micro])
-    d_exact = F.aggregate(
-        F.zip_with(F.col("__q"), qlit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d_exact = sq_dist_int(F.col("__q"), q_micro)
     exact = (
         qv.filter(F.col("vec_id") != 0)
         .select("vec_id", d_exact.alias("d"))
@@ -19085,9 +19026,11 @@ def q_pq_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operator import add
 
     from .operators.kmeans import (
+        bigint_literal,
         nearest_cell_int_struct,
         pq_fit_int,
         quantize_micro,
+        sq_dist_int,
     )
 
     SAMPLE_MOD = 4
@@ -19121,10 +19064,7 @@ def q_pq_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = reduce(
         add,
         [
-            F.element_at(
-                F.array(*[F.lit(int(d)).cast("bigint") for d in adc[s]]),
-                F.col(f"code{s}") + 1,
-            )
+            F.element_at(bigint_literal(adc[s]), F.col(f"code{s}") + 1)
             for s in range(_PQ_M)
         ],
     )
@@ -19135,12 +19075,7 @@ def q_pq_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select("vec_id")
     )
-    qlit = F.array(*[F.lit(int(x)).cast("bigint") for x in q_micro])
-    d_exact = F.aggregate(
-        F.zip_with(F.col("__q"), qlit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d_exact = sq_dist_int(F.col("__q"), q_micro)
     exact = (
         qv.filter(F.col("vec_id") != 0)
         .select("vec_id", d_exact.alias("d"))

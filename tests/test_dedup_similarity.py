@@ -124,6 +124,9 @@ def test_connected_components_large_star_small_star(spark):
         "self_loops_and_edges": [(5, 5), (7, 8), (9, 9), (8, 11)],
         "sibling_stars": [(100, i) for i in range(1, 8)]
         + [(200, i) for i in range(4, 12)],
+        # hashed 64-bit ids: a bigint fixpoint sum over these overflows
+        # (ANSI ARITHMETIC_OVERFLOW)
+        "ids_near_2_62": [(2**62, 2**62 + 1), (2**62 + 1, 2**62 + 2)],
     }
     for name, pairs in cases.items():
         df = spark.createDataFrame(
