@@ -16,8 +16,8 @@ parquet binary roundtrip is byte-identical (the emitted ``blob_hex``
 column), and the header parsers' offset arithmetic is correct.
 
 Both queries.py and oracles.py import THIS module, so the container
-magic bytes, the parameter derivations, and the little/big-endian
-field encodings are single-sourced — the cross-engine match is by
+magic bytes, the parameter tables, and the little/big-endian field
+encodings are single-sourced — the cross-engine match is by
 construction, not by parallel maintenance (the resample.py /
 linkage.py idiom).
 
@@ -49,18 +49,13 @@ WAVE_HEX = "57415645"  # b"WAVE"
 FMT_HEX = "666d7420"  # b"fmt "
 DATA_HEX = "64617461"  # b"data"
 
-# Parameter derivations (pure integer functions of doc_id; multipliers
-# coprime to the moduli so the small-SF fixture already exercises many
-# distinct dims).  WAV bits stay multiples of 8 so byte_rate and
-# block_align are exact integers.
-PNG_W = "16 + (doc_id * 37) % 4080"
-PNG_H = "16 + (doc_id * 61) % 2160"
-GIF_W = "16 + (doc_id * 37) % 60000"
-GIF_H = "16 + (doc_id * 61) % 60000"
-WAV_CH = "1 + doc_id % 2"
+# Parameter tables indexed by doc_id (the scalar derivations — pure
+# integer functions of doc_id, multipliers coprime to the moduli so the
+# small-SF fixture already exercises many distinct dims — are written
+# inline in each query/oracle pair).  WAV bits stay multiples of 8 so
+# byte_rate and block_align are exact integers.
 WAV_RATES = [8000, 16000, 22050, 44100, 48000]  # index doc_id % 5
 WAV_BITS = [8, 16, 32]  # index (doc_id % 7) % 3
-WAV_DATA = "1000 + (doc_id * 97) % 100000"
 
 
 # -- WAVE_FORMAT_EXTENSIBLE canonical fixture (round 9, VERDICT r8
@@ -215,10 +210,6 @@ MVHD_HEX = "6d766864"  # b"mvhd"
 MP4_BRANDS = ["isom", "mp42", "avc1", "dash"]  # index doc_id % 4
 MP4_BRAND_HEX = [bytes(b, "ascii").hex() for b in MP4_BRANDS]
 MP4_TIMESCALES = [600, 1000, 90000, 44100, 48000]  # index doc_id % 5
-MP4_MINOR = "(doc_id * 3) % 512"
-MP4_CREATED = "3000000000 + (doc_id * 17) % 100000"  # > 2^31: parse as i64
-MP4_DURATION = "1 + (doc_id * 131) % 1000000"
-MP4_NEXT_TRACK = 2
 # rate 1.0 + volume 1.0 + 10 reserved bytes + unity matrix
 # {0x10000,0,0, 0,0x10000,0, 0,0,0x40000000} + 24 predefined bytes —
 # constant for every canonical file (76 bytes).
@@ -257,8 +248,6 @@ JPEG_SOI_APP0_HEX = "ffd8" + "ffe0" + "0010" + "4a46494600" + "0101" + "01"
 JPEG_THUMB_HEX = "0000"  # no thumbnail
 JPEG_SOF0_HEX = "ffc0" + "0011" + "08"  # SOF0, len 17, 8-bit precision
 JPEG_COMPONENTS_HEX = "012200" + "021101" + "031101"  # Y 2x2, Cb, Cr
-JPEG_W = "16 + (doc_id * 37) % 4080"
-JPEG_H = "16 + (doc_id * 61) % 2160"
 JPEG_DENSITIES = [72, 96, 150, 300]  # index doc_id % 4; units=1 (dpi)
 
 
@@ -290,7 +279,7 @@ def be16_col(col):
 # like every other fixture in this module (CRC-32's bitwise reflection
 # is not worth 32 rounds of codegen; the parsers never check CRC).
 # Entropy-coded IDAT (fixed/dynamic Huffman) still needs a real
-# inflate and stays honestly stubbed (sources/multimodal.py:66).
+# inflate, which is out of scope here.
 #
 # Layout (1-based byte offsets), total 68 + L bytes where
 # rowbytes = 1 + 3·w (filter byte + RGB triples) and L = h·rowbytes:

@@ -90,15 +90,6 @@ def dsum_wide(c: Column, scale: int = 2) -> Column:
     )
 
 
-def dsum_wide_sql(expr: str, scale: int = 2) -> str:
-    """DuckDB twin of ``dsum_wide`` (HUGEINT accumulator — exact)."""
-    s = 10**scale
-    return (
-        f"(CAST(sum(CAST(floor((({expr}) * {s}.0) + 0.5) AS HUGEINT)) "
-        f"AS DOUBLE) / {s}.0)"
-    )
-
-
 # Routing headroom: keep the projected scaled total under 2^62 (half the
 # BIGINT range) so skew, magnitude underestimates, and future growth
 # don't walk a query into the ANSI overflow the bound exists to prevent.

@@ -262,17 +262,6 @@ def _star_contract(
     )
 
 
-def dedup_keep_representatives(
-    df: DataFrame, pairs: DataFrame, id_col: str
-) -> DataFrame:
-    """Drop all but the min-id member of every duplicate cluster."""
-    comps = connected_components(pairs)
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, on=id_col, how="left_anti")
-
-
 def pagerank_integer(
     edges: DataFrame,
     iterations: int = 5,

@@ -1,26 +1,40 @@
-"""Distributed k-means (Lloyd's) over an embedding column — the missing
-trainer for the IVF index (similarity.py's ``ivf_topk`` consumes any cell
-assignment; until now only the testdata's pre-existing ``label`` or a
-caller-provided clustering existed).  Public algorithm (Lloyd 1982; the
-IVF coarse quantizer in FAISS is exactly this).
+"""Distributed integer-pinned k-means (Lloyd's) over an embedding column
+— the trainer for the IVF coarse quantizer and the PQ codebooks
+(similarity.py's ``ivf_topk`` consumes any cell assignment).  Public
+algorithm (Lloyd 1982; the IVF coarse quantizer in FAISS is exactly
+this).
+
+Every quantity is an exact integer, so training is bit-identical across
+engines AND across partitionings (the DuckDB oracles unroll the same
+arithmetic):
+
+- components quantize to micro-units: xi = floor(x·1e6 + 0.5) (the
+  per-row IEEE step both engines evaluate identically);
+- distances are exact bigint Σ(xi−ci)²;
+- means are FLOOR-DIVIDED integer centroids (sum // n, the pinned
+  ((s % n) + n) % n remainder form in SQL) — at most one micro-unit of
+  centroid precision traded for cross-engine reproducibility;
+- seeds order by (md5(vec_id), vec_id) — hash order decorrelates the
+  seeds from ingestion order, with an explicit total-order tiebreak.
 
 Scale shape — the part that matters at 100 TB:
 
-- The **model** (k × dim doubles) lives on the driver and is folded into
-  the plan as literal arrays each iteration.  k ≤ a few thousand and
-  dim ≤ a few thousand ⇒ at most a few MB of literals — the standard
-  "broadcast the model, shuffle only the sufficient statistics" layout.
-- **Assignment is a pure map**: per row, squared-L2 to each of the k
-  literal centroids via ``aggregate(zip_with(...))`` higher-order
-  functions (JVM-side, no UDF), argmin via ``array_min`` over
-  ``struct(dist, idx)`` (struct ordering ⇒ ties break to the lowest
-  index, deterministically).  No join, no shuffle.
+- The **model** (k × dim micro-units) lives on the driver and is folded
+  into the plan as one literal table per iteration (``bigint_literal``).
+  k ≤ a few thousand and dim ≤ a few thousand ⇒ at most a few MB of
+  literals — the standard "broadcast the model, shuffle only the
+  sufficient statistics" layout.  Past ``ARROW_ASSIGN_LITERAL_LIMIT``
+  the model ships in the task closure instead (Arrow argmin).
+- **Assignment is a pure map**: per row, squared-L2 to each literal
+  centroid via ``aggregate(zip_with(...))`` higher-order functions
+  (JVM-side, no UDF), argmin via ``array_min`` over ``struct(dist,
+  idx)`` (struct ordering ⇒ ties break to the lowest index,
+  deterministically).  No join, no shuffle.
 - **Update shuffles only k × dim rows**: ``posexplode`` the vector,
   partial-aggregate ``sum(v), count`` per (cell, pos) map-side, final
   combine is k × dim rows regardless of corpus size.
 - Per iteration: one scan + one tiny shuffle + one k×dim collect.
-  ``iters`` is fixed (no convergence-dependent row counts), so results
-  are deterministic for a given input and seed order.
+  ``iters`` is fixed (no convergence-dependent row counts).
 
 Empty cells keep their previous centroid (documented standard choice;
 re-seeding would break determinism).
@@ -33,133 +47,6 @@ from pyspark.sql import Column, DataFrame
 
 from ..functions.vectors import as_double_array
 
-
-def _sq_dist(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance between an array<double> column and a literal
-    centroid, accumulated left-to-right in double (bit-reproducible)."""
-    c = F.array(*[F.lit(float(x)) for x in centroid]).cast("array<double>")
-    return F.aggregate(
-        F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def nearest_cell(vec_col: Column | str, centroids: list[list[float]]) -> Column:
-    """Index (0-based int) of the nearest centroid by squared L2.
-
-    ``array_min`` over ``struct(dist, idx)`` compares field-by-field, so
-    equal distances deterministically pick the lower index.
-
-    Same one-parse literal-table + ``transform`` loop as the integer
-    twin (``_nearest_cands``) — the unrolled per-centroid form cost
-    k×dim py4j round-trips per call and a same-sized tree per job
-    (see bigint_literal).  ``repr(float)`` round-trips, so the parsed
-    double literals are bit-identical to the F.lit form."""
-    v = as_double_array(vec_col)
-    body = ",".join(
-        "array(" + ",".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c) + ")"
-        for c in centroids
-    )
-    tbl = F.expr(f"array({body})")
-    k = len(centroids)
-    cands = F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda ci: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    v,
-                    F.element_at(tbl, ci + F.lit(1)),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            ci.alias("i"),
-        ),
-    )
-    return F.array_min(cands)["i"]
-
-
-def _seed_centroids(
-    embeddings: DataFrame, k: int, id_col: str, vec_col: str
-) -> list[list[float]]:
-    """Deterministic pseudo-random init: the k vectors whose md5(id) sorts
-    first.  Hash order decorrelates the seeds from ingestion order (the
-    first-k-rows trap: a sorted corpus seeds all centroids in one corner)
-    while staying seedless and engine-portable.  TakeOrderedAndProject ⇒
-    per-partition heaps, only k rows reach the driver."""
-    rows = (
-        embeddings.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            as_double_array(vec_col).alias("__v"),
-        )
-        .orderBy("__h")
-        .limit(k)
-        .collect()
-    )
-    return [list(r["__v"]) for r in rows]
-
-
-def kmeans_fit(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Train k centroids with ``iters`` Lloyd rounds; returns the model as
-    a plain list-of-lists (k × dim) — small enough to embed in any plan."""
-    if k < 1:
-        raise ValueError(f"kmeans_fit: k must be >= 1, got {k}")
-    centroids = _seed_centroids(embeddings, k, id_col, vec_col)
-    if not centroids:
-        raise ValueError("kmeans_fit: no input vectors to seed from")
-    if len(centroids) < k:
-        # fewer distinct vectors than requested cells: train what exists
-        # (duplicating seeds would create permanently-empty twin cells)
-        k = len(centroids)
-    dim = len(centroids[0])
-    vecs = embeddings.select(as_double_array(vec_col).alias("__v"))
-    for _ in range(iters):
-        assigned = vecs.withColumn("__cell", nearest_cell(F.col("__v"), centroids))
-        stats = (
-            assigned.select(
-                "__cell", F.posexplode("__v").alias("__pos", "__x")
-            )
-            .groupBy("__cell", "__pos")
-            .agg(F.sum("__x").alias("__s"), F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        nxt = [list(c) for c in centroids]  # empty cells keep their centroid
-        acc: dict[int, list[float]] = {}
-        for r in stats:
-            acc.setdefault(r["__cell"], [0.0] * dim)[r["__pos"]] = (
-                r["__s"] / r["__n"]
-            )
-        for cell, mean in acc.items():
-            nxt[cell] = mean
-        centroids = nxt
-    return centroids
-
-
-# ---------------------------------------------------------------------------
-# Integer-pinned Lloyd's (round-5: promotes the IVF family to
-# hash-checkability).  Same scale shape as kmeans_fit — model literals in
-# the plan, k×dim sufficient-statistic shuffle — but every quantity is an
-# exact integer, so training is bit-identical across engines AND across
-# partitionings:
-#   - components quantize to micro-units: xi = floor(x·1e6 + 0.5) (the
-#     per-row IEEE step both engines evaluate identically),
-#   - distances are exact bigint Σ(xi−ci)²,
-#   - means are FLOOR-DIVIDED integer centroids (sum // n, the pinned
-#     ((s % n) + n) % n remainder form in SQL),
-#   - seeds order by (md5(vec_id), vec_id) — hash order with an explicit
-#     total-order tiebreak.
-# Float Lloyd's (kmeans_fit above) keeps the classical semantics for
-# consumers that want true means; the integer twin trades ≤1 micro-unit
-# of centroid precision for cross-engine reproducibility.
-# ---------------------------------------------------------------------------
 
 MICRO = 1_000_000  # micro-unit quantization scale shared with the oracles
 
@@ -375,60 +262,6 @@ def assign_cells_arrow_int(
             yield pdf
 
     return df.mapInPandas(_assign, schema=out_schema)
-
-
-def assign_cells(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """Tag each vector with its nearest trained centroid — the IVF index
-    build.  Pure map (no shuffle); write the result partitioned/bucketed
-    by ``cell_col`` and ``ivf_topk`` probes prune whole partitions."""
-    return embeddings.withColumn(
-        cell_col, nearest_cell(F.col(vec_col), centroids)
-    )
-
-
-def write_ivf_index(
-    assigned: DataFrame, path: str, cell_col: str = "cell"
-) -> None:
-    """Persist the IVF index as cell-partitioned parquet: one directory
-    per cell.  A probe filtering on ``cell_col`` then binds to the
-    directory listing at plan time (``PartitionFilters`` in explain) and
-    reads ONLY the probed cells' files — at 100 TB the nprobe/ncells
-    pruning happens in the filesystem metadata, before any I/O."""
-    assigned.write.mode("overwrite").partitionBy(cell_col).parquet(path)
-
-
-def probe_ivf_index(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """Approximate top-k against a persisted cell-partitioned index.
-
-    Cell scoring runs on the (k × dim) model driver-side — squared-L2 to
-    the query, ties to the lower cell id, mirroring ``nearest_cell`` —
-    and the survivors become a partition-pruning IN filter.  The exact
-    rerank inside the probed cells is `brute_force_topk` (per-partition
-    heaps, only k rows cross the final exchange)."""
-    from .similarity import brute_force_topk
-
-    scored = sorted(
-        (sum((x - y) ** 2 for x, y in zip(query_vec, c)), i)
-        for i, c in enumerate(centroids)
-    )
-    probed = [i for _, i in scored[:nprobe]]
-    df = spark.read.parquet(path).filter(F.col(cell_col).isin(probed))
-    return brute_force_topk(df, query_vec, k, id_col, vec_col)
 
 
 def pq_fit_int(

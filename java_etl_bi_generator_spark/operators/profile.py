@@ -69,26 +69,3 @@ def validate_expectations(df: DataFrame, rules: dict[str, F.Column]) -> DataFram
         for name in rules
     ]
     return wide.select(F.explode(F.array(*per_rule)).alias("r")).select("r.*")
-
-
-def quarantine(
-    df: DataFrame, rules: dict[str, F.Column]
-) -> tuple[DataFrame, DataFrame]:
-    """Split into (good, bad): ``bad`` carries ``failed_rules`` — the
-    array of rule names the row violates — the standard ETL quarantine
-    lane for reprocessing/audit.  Pure row-local expressions, so both
-    outputs are narrow over the source scan (two consumers => the scan
-    runs twice unless the caller persists; at 100 TB write ``bad`` first
-    — it is tiny — then anti-join or re-filter for ``good``)."""
-    failed = F.array_compact(
-        F.array(
-            *[
-                F.when(~F.coalesce(col, F.lit(False)), F.lit(name))
-                for name, col in rules.items()
-            ]
-        )
-    )
-    tagged = df.withColumn("failed_rules", failed)
-    good = tagged.filter(F.size("failed_rules") == 0).drop("failed_rules")
-    bad = tagged.filter(F.size("failed_rules") > 0)
-    return good, bad

@@ -1,7 +1,7 @@
-"""Dimension maintenance: MERGE-style upsert and SCD Type 2 history — the
-ETL operations the reference's star schema needs for incremental loads
-(the reference itself only does full rebuilds; FullETLGenerator.java has
-no incremental path).
+"""Dimension maintenance: MERGE-style upsert — the ETL operation the
+reference's star schema needs for incremental loads (the reference
+itself only does full rebuilds; FullETLGenerator.java has no incremental
+path).
 
 Without a transactional table format (Delta/Iceberg), merge is expressed
 relationally: anti-join survivors + updates.  On a real lake the same
@@ -11,7 +11,6 @@ or none if both sides are bucketed on it) is identical.
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
@@ -20,46 +19,3 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     unmatched update rows are inserted.  Columns must align."""
     survivors = target.join(updates.select(key), on=key, how="left_anti")
     return survivors.unionByName(updates)
-
-
-def scd2_apply(
-    current: DataFrame,
-    changes: DataFrame,
-    key: str,
-    effective_col: str = "valid_from",
-    end_col: str = "valid_to",
-    current_flag: str = "is_current",
-    open_end: str = "9999-12-31",
-) -> DataFrame:
-    """Slowly-changing-dimension type 2: close out current rows whose key
-    appears in ``changes`` (their ``valid_to`` becomes the change's
-    ``valid_from``) and append the changes as new current rows.
-
-    ``current`` must carry (key, attributes..., valid_from, valid_to,
-    is_current); ``changes`` carries (key, attributes..., valid_from).
-    """
-    chg_dates = changes.select(
-        F.col(key), F.col(effective_col).alias("__new_from")
-    )
-    closed = (
-        current.join(chg_dates, on=key, how="left")
-        .withColumn(
-            end_col,
-            F.when(
-                (F.col(current_flag) == 1) & F.col("__new_from").isNotNull(),
-                F.col("__new_from"),
-            ).otherwise(F.col(end_col)),
-        )
-        .withColumn(
-            current_flag,
-            F.when(
-                F.col("__new_from").isNotNull() & (F.col(current_flag) == 1),
-                F.lit(0),
-            ).otherwise(F.col(current_flag)),
-        )
-        .drop("__new_from")
-    )
-    opened = changes.withColumn(end_col, F.lit(open_end).cast("date")).withColumn(
-        current_flag, F.lit(1)
-    )
-    return closed.unionByName(opened)

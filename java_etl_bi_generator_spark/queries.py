@@ -2394,6 +2394,8 @@ def q_blocking_quality(
     ``truth_k=None``."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from .operators.dedup import exact_dedup, minhash_lsh_candidates
 
     docs = cut_lineage(
@@ -2404,6 +2406,8 @@ def q_blocking_quality(
     # §2.6): the sampled-truth chain and the LSH candidate chain are
     # independent job-latency-bound pipelines; building them
     # concurrently overlaps their job floors without touching results.
+    # inheritable_thread_target hands the worker thread the caller's
+    # job group, description and tags, so its jobs stay attributable.
     def _build_truth():
         samp = cut_lineage(_truth_sample(docs, truth_k))
         truth = cut_lineage(
@@ -2414,7 +2418,7 @@ def q_blocking_quality(
         return samp, truth
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _truth_f = _pool.submit(_build_truth)
+        _truth_f = _pool.submit(inheritable_thread_target(spark)(_build_truth))
         cand = cut_lineage(
             minhash_lsh_candidates(docs, "text", "doc_id").select(
                 "id_a", "id_b"
@@ -2489,6 +2493,8 @@ def q_dedup_cluster_quality(
     corpus — only the ground-truth side is sampled."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from .operators.dedup import exact_dedup, minhash_lsh_dup_clusters
 
     docs = cut_lineage(
@@ -2523,7 +2529,7 @@ def q_dedup_cluster_quality(
         )
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _truth_f = _pool.submit(_build_truth)
+        _truth_f = _pool.submit(inheritable_thread_target(spark)(_build_truth))
         comp = _build_comp()
         samp, truth = _truth_f.result()
     samp_ids = samp.select(F.col("doc_id").alias("node"))
@@ -2827,7 +2833,7 @@ def q_vector_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine top-k.  Probe selection runs driver-side on the k×dim model
     (no job); candidates prune to the probed cells before any scoring —
     at 100 TB, with the index written cell-partitioned
-    (operators/kmeans.py write_ivf_index), that pruning happens in file
+    (``df.write.partitionBy(cell)``), that pruning happens in file
     metadata."""
     from .operators.kmeans import (
         kmeans_fit_int,
@@ -7769,12 +7775,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate index ships with, here as a DECLARED query because both
     lists are cross-engine exact (pinned cosine + the bit-identical LSH
     bucket of q_vector_topk_lsh), so the recall number itself is
-    hash-checkable — unlike IVF recall, which stays a pytest property
-    (float-trained centroids).  Scale shape: two TakeOrderedAndProject
-    corpus scans; the overlap join and the three count aggregates run
-    on ≤k rows.  recall = n_overlap/k is one exact-int division.  All
-    three counts come from ONE full-outer join of the two lists — each
-    corpus scan executes exactly once (TakeOrderedAndProject subtrees
+    hash-checkable (q_ivf_recall is the IVF twin, over integer
+    centroids).  Scale shape: two TakeOrderedAndProject corpus scans;
+    the overlap join and the three count aggregates run on ≤k rows.
+    recall = n_overlap/k is one exact-int division.  All three counts
+    come from ONE full-outer join of the two lists — each corpus scan
+    executes exactly once (TakeOrderedAndProject subtrees
     are not exchange-reusable, so a per-count re-consumption would
     re-score the corpus)."""
     from .operators.similarity import lsh_bucket_topk
@@ -10243,9 +10249,9 @@ def q_analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JOIN-KEY SKEW pre-flight — the report a pipeline runs BEFORE a
     big shuffle decides between plain hash join, salting, and AQE skew
-    handling (operators/skew.py implements the cures; this measures
-    the disease): per candidate key, distinct keys, row count, the
-    heaviest key's frequency and share, the floor-div average
+    handling (q_skew_join_salted and q_salted_groupby build the cures;
+    this measures the disease): per candidate key, distinct keys, row
+    count, the heaviest key's frequency and share, the floor-div average
     frequency, and how many keys exceed 10× average (the salting
     candidates).  A max/avg ratio near 1 means hash partitioning
     balances; a 100× ratio at 100 TB means one reducer gets 100× the
@@ -16329,7 +16335,7 @@ def q_bpe_train_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark and DuckDB replace() agree byte-for-byte.  The per-round
     argmax is a
     1-row collect — the model rides the plan as a literal, the
-    kmeans_fit discipline.  Output: (round, merged_pair, pair_count)."""
+    kmeans_fit_int discipline.  Output: (round, merged_pair, pair_count)."""
     _, merges = _bpe_train(spark, sf_dir, rounds=3)
     return spark.createDataFrame(
         merges, "round int, merged_pair string, pair_count bigint"
@@ -18124,7 +18130,7 @@ def q_media_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     health numbers — DC offset (mean sample) and RMS — as pinned
     doubles.  The DuckDB oracle rebuilds the identical hex and replays
     the decode with nibble arithmetic.  JPEG/PNG/MP3 payload decode
-    stays honestly stubbed (real codecs, sources/multimodal.py:66)."""
+    needs a real codec and is out of scope."""
     from .sources.multimodal import wav_pcm_stats
 
     media = _wav_canonical_media(spark, sf_dir, "wav_decode")
@@ -18748,8 +18754,8 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain, residual CTE, four residual-sourced prefixed chains, probe,
     per-cell ADC tables — reproduces the top-10 bit-for-bit.  At 100 TB:
     codes+cell ≈ 5 B/vector in RAM, scan touches nprobe/ncells of the
-    corpus (partition pruning when stored cell-partitioned, the
-    write_ivf_index layout), zero vector arithmetic per candidate.
+    corpus (partition pruning when stored cell-partitioned), zero vector
+    arithmetic per candidate.
     TRAINING cost is measured, not asserted (scripts/scale_probe.py pq;
     SCALING.md round-8 table): 50k vectors → 24.3 s, 500k → 61.0 s on
     local[32] — linear in N per Lloyd's round (k fixed, unlike

@@ -11,6 +11,7 @@ driver testdata's ``events`` table is written as TIMESTAMP(NANOS)).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -65,12 +66,19 @@ def fixture_root() -> str:
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply dynamic confs to a session we did not build (e.g. the driver's)."""
+    """Apply dynamic confs to a session we did not build (e.g. the driver's).
+    A conf the deployment refuses (static, or restricted) is skipped with
+    a warning naming it, so a later failure that depends on it (e.g. an
+    unreadable nanos timestamp) can be traced back here."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-dynamic or restricted in this deployment: keep going
+        except Exception as e:
+            warnings.warn(
+                f"apply_runtime_confs: could not set {k}={v!r}: {e}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return spark
 
 

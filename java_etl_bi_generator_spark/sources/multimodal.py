@@ -1,13 +1,18 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` columns with
 typed metadata (north-star; BASELINE.json).
 
-The Spark-side plumbing is real — schemas, ``binaryFile`` reads,
-Arrow-batched ``mapInPandas`` decode/feature-extract with bounded batch
-sizes — while the actual media decode is STUBBED (image/audio codecs are
-not available in this environment): ``decode_image_real`` raises
-``NotImplementedError``; ``fake_decode_features`` derives deterministic
-pseudo-features from the bytes so the distributed pipeline shape is fully
-testable.
+Everything here is a real parse of the bytes, with no codec installed:
+
+- container headers (PNG/GIF/BMP/JPEG/WAV/MP4) parsed with codegen
+  expressions over the ``binary`` column (``substring``/``hex``/``conv``);
+- the variable-offset layouts (JPEG SOF scan, RIFF chunk walk, MP4 box
+  walk) in bounded Arrow-batched ``mapInPandas`` passes;
+- pixel/sample statistics for the codec-free canonical encodings
+  (uncompressed BMP, stored-block PNG, PCM WAV).
+
+Entropy-coded decode (JPEG scans, deflate-compressed PNG, compressed
+audio/video) needs a real codec and is out of scope.  ``synthetic_media``
+builds a deterministic media table for tests.
 """
 
 from __future__ import annotations
@@ -19,53 +24,12 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
-
-# Canonical multimodal record: opaque payload + typed metadata.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),  # image|audio|video
-        StructField("content", BinaryType(), True),
-        StructField("mime_type", StringType(), True),
-        StructField("byte_len", LongType(), True),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),
-        StructField("byte_len", LongType(), True),
-        StructField("content_sha", StringType(), True),
-        StructField("feat_width", IntegerType(), True),
-        StructField("feat_height", IntegerType(), True),
-    ]
-)
-
-
-def read_binary_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Directory of media files -> (path, modificationTime, length, content).
-    ``binaryFile`` is splittable per-file and prunes ``content`` when not
-    selected — metadata-only queries never read the payload bytes."""
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-
-
-def decode_image_real(content: bytes) -> tuple[int, int]:
-    """Real decode would use PIL/libvips — not available in this container."""
-    raise NotImplementedError(
-        "media codecs not installed; use fake_decode_features for plumbing tests"
-    )
 
 
 def _be32(col: str, pos: int) -> F.Column:
@@ -275,47 +239,6 @@ def image_dims_arrow(media: DataFrame, batch_size: int = 256) -> DataFrame:
     )
 
 
-def _fake_dims(content: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for a decode: dims derived from content hash."""
-    h = hashlib.sha256(content or b"").digest()
-    return 16 + h[0] % 240, 16 + h[1] % 240
-
-
-def extract_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
-    """Arrow-batched feature extraction over the media table.
-
-    ``mapInPandas`` streams bounded pandas batches through the Python
-    worker — the scale-safe shape for per-item decode (each task holds at
-    most ``batch_size`` payloads in memory; no collect, no driver loop).
-    """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = pdf["content"]
-            dims = [
-                _fake_dims(bytes(c) if c is not None else b"") for c in content
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "modality": pdf["modality"],
-                    "byte_len": [
-                        len(c) if c is not None else 0 for c in content
-                    ],
-                    "content_sha": [
-                        hashlib.sha256(bytes(c) if c is not None else b"").hexdigest()
-                        for c in content
-                    ],
-                    "feat_width": [d[0] for d in dims],
-                    "feat_height": [d[1] for d in dims],
-                }
-            )
-
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-    return media.mapInPandas(_extract, schema=FEATURE_SCHEMA)
-
-
 def synthetic_media(spark: SparkSession, n: int = 64) -> DataFrame:
     """Deterministic fake media table for tests (payload = seeded bytes)."""
     rows = [
@@ -331,103 +254,6 @@ def synthetic_media(spark: SparkSession, n: int = 64) -> DataFrame:
         rows, "media_id bigint, modality string, content binary, mime_type string"
     )
     return df.withColumn("byte_len", F.length("content").cast("long"))
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("content", BinaryType(), True),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-    ]
-)
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("ts_ms", LongType(), False),
-        StructField("frame_content", BinaryType(), True),
-    ]
-)
-
-
-def resize_images_real(content: bytes, width: int, height: int) -> bytes:
-    """Real resize would use PIL/libvips — not available in this container."""
-    raise NotImplementedError(
-        "media codecs not installed; use resize_images for plumbing tests"
-    )
-
-
-def resize_images(media: DataFrame, width: int, height: int,
-                  batch_size: int = 256) -> DataFrame:
-    """Arrow-batched image resize over the media table (1 row in -> 1 row
-    out).  The pixel work is a deterministic FAKE (sha256-seeded bytes of
-    width*height/64 length — media codecs are not installed); the Spark
-    shape is the real one: bounded ``mapInPandas`` batches so a task never
-    holds more than ``batch_size`` payloads, and the output schema carries
-    the new dimensions as typed metadata."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_len = max(1, (width * height) // 64)
-        for pdf in batches:
-            content = [
-                bytes(c) if c is not None else b"" for c in pdf["content"]
-            ]
-            fake = [
-                (hashlib.sha256(c).digest() * (out_len // 32 + 1))[:out_len]
-                for c in content
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": fake,
-                    "width": [width] * len(fake),
-                    "height": [height] * len(fake),
-                }
-            )
-
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-    return media.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(media: DataFrame, num_frames: int = 4,
-                  frame_interval_ms: int = 1000,
-                  batch_size: int = 64) -> DataFrame:
-    """Frame sampling over video rows (1 row in -> ``num_frames`` rows out
-    — the table-producing ``mapInPandas`` shape).  The frame decode is a
-    deterministic FAKE (sha256 of payload + frame index); timestamps step
-    by ``frame_interval_ms``.  Batches are kept small because the output
-    is ``num_frames``x the input rows — the bound that matters for
-    executor memory at scale."""
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, tss, frames = [], [], [], []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                payload = bytes(c) if c is not None else b""
-                for k in range(num_frames):
-                    ids.append(mid)
-                    idxs.append(k)
-                    tss.append(k * frame_interval_ms)
-                    frames.append(
-                        hashlib.sha256(payload + k.to_bytes(4, "big")).digest()
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": idxs,
-                    "ts_ms": tss,
-                    "frame_content": frames,
-                }
-            )
-
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
-    return media.filter(F.col("modality") == "video").mapInPandas(
-        _sample, schema=FRAME_SCHEMA
-    )
 
 
 def is_riff_wave(b: bytes) -> bool:
@@ -1160,7 +986,7 @@ def png_stored_pixel_stats(
     construction parameters, so this genuinely decodes whatever bytes
     arrive; non-canonical layouts (multiple IDATs, Huffman blocks,
     other color types) gate to null stats — entropy-coded decode
-    stays honestly stubbed (decode_image_real above).  Emits:
+    needs a real codec and is out of scope.  Emits:
     container, width, height, n_px, per-channel sums (PNG is RGB
     order), the exact Rec.601 ×1000 luma numerator, ``filters_ok``
     (all scanline filter bytes are 0), and ``adler_ok`` (the stored

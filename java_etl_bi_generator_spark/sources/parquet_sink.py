@@ -1,50 +1,18 @@
-"""Parquet sink with the storage layouts that matter at 100 TB:
-
-- **partitioned write** (`partitionBy`): directory-per-value layout so
-  later scans with a partition-column predicate prune whole directories
-  (`PartitionFilters` in the plan — zero I/O for pruned partitions);
-- **bucketed write** (`bucketBy` + ``saveAsTable``): pre-shuffled layout on
-  a join/agg key so repeated joins on that key skip the exchange entirely.
+"""Parquet sink maintenance: small-file compaction with an atomic swap.
 
 The reference writes a flat single-file CSV per table
-(FullETLGenerator.java:63-66) — neither layout exists there; both are the
-standard Spark answers to its scale ceiling.
+(FullETLGenerator.java:63-66).  At 100 TB the written layouts are
+Hive-partitioned (``df.write.partitionBy``: scans with a partition-column
+predicate prune whole directories) and bucketed (``bucketBy`` +
+``saveAsTable``: joins on the bucket key skip the exchange) — both plain
+``DataFrameWriter`` calls, pinned in tests/test_storage_layout.py.  What
+those layouts and incremental writers accrete is small files;
+``compact_parquet`` rewrites them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Hive-style partitioned parquet.  Choose low-cardinality columns
-    (date, region, category) — one directory per distinct combination."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: data pre-hashed into ``num_buckets`` files
-    per partition on ``bucket_col``; joins/aggs on that column read
-    co-located buckets with no shuffle."""
-    (
-        df.write.mode(mode)
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
+from pyspark.sql import SparkSession
 
 
 def compact_parquet(

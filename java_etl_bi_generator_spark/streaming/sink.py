@@ -56,7 +56,7 @@ def list_versions(target: str) -> list[str]:
 
 def snapshot_at(spark: SparkSession, target: str, version: str) -> DataFrame:
     """Time-travel read: the table EXACTLY as published at ``version``
-    (any id from ``list_versions`` that retention has not pruned).
+    (any id from ``list_versions``).
     Every version directory is a complete snapshot, so a historical read
     is a plain parquet scan — no log replay; the pointer file is only
     the 'latest' convenience the default read follows."""
@@ -115,116 +115,6 @@ def apply_merge_batch(
     return True
 
 
-def _publish(target: str, version: str) -> None:
-    ptr_tmp = os.path.join(target, f".{_POINTER}.{version}")
-    with open(ptr_tmp, "w", encoding="ascii") as f:
-        f.write(version)
-    os.replace(ptr_tmp, os.path.join(target, _POINTER))
-
-
-def apply_merge_batch_partitioned(
-    batch_df: DataFrame,
-    batch_id: int,
-    target: str,
-    key_col: str,
-    order_col: str,
-    tiebreak_col: str,
-    num_buckets: int = 16,
-) -> bool:
-    """Incremental-cost merge: the snapshot lives hash-bucket-partitioned
-    (``hb = pmod(hash(key), num_buckets)`` directories) and a batch
-
-    1. computes its touched buckets (a distinct over the batch — tiny),
-    2. reads ONLY those buckets of the current snapshot (directory-level
-       partition pruning; untouched buckets cost zero I/O),
-    3. merges + writes only the touched bucket directories into the new
-       version, and
-    4. HARD-LINKS the untouched buckets' files across (metadata-only;
-       on an object store this step is a manifest entry instead).
-
-    Per-batch cost is O(touched data) + O(total files) metadata rather
-    than ``apply_merge_batch``'s O(table) rewrite — the shape that keeps
-    a 100 TB keyed table maintainable from a trickle of updates.  Same
-    idempotence (existing version dir => replay skip) and atomic pointer
-    publish as the full-rewrite form; Spark's ``hash`` is a fixed-seed
-    Murmur3, so bucket assignment is stable across batches and sessions.
-    """
-    spark = batch_df.sparkSession
-    vdir = os.path.join(target, f"v{batch_id:012d}")
-    if os.path.exists(vdir):
-        return False
-    hb = F.pmod(F.hash(F.col(key_col)), F.lit(num_buckets))
-    touched = sorted(
-        r["hb"] for r in batch_df.select(hb.alias("hb")).distinct().collect()
-    )
-    ptr = os.path.join(target, _POINTER)
-    cur_version = None
-    if os.path.exists(ptr):
-        with open(ptr, encoding="ascii") as f:
-            cur_version = f.read().strip()
-    cur_touched = None
-    if cur_version is not None:
-        cur_touched = (
-            spark.read.parquet(os.path.join(target, cur_version))
-            .filter(F.col("hb").isin([int(t) for t in touched]))
-            .drop("hb")
-        )
-    merged = keep_latest_merge(
-        cur_touched, batch_df, key_col, order_col, tiebreak_col
-    )
-    (
-        merged.withColumn("hb", hb)
-        .write.mode("overwrite")
-        .partitionBy("hb")
-        .parquet(vdir)
-    )
-    if cur_version is not None:
-        cur_dir = os.path.join(target, cur_version)
-        for d in os.listdir(cur_dir):
-            if not d.startswith("hb="):
-                continue
-            if int(d.split("=", 1)[1]) in touched:
-                continue
-            os.makedirs(os.path.join(vdir, d), exist_ok=True)
-            for fn in os.listdir(os.path.join(cur_dir, d)):
-                dst = os.path.join(vdir, d, fn)
-                if not os.path.exists(dst):
-                    os.link(os.path.join(cur_dir, d, fn), dst)
-    _publish(target, f"v{batch_id:012d}")
-    return True
-
-
-def current_snapshot_partitioned(spark: SparkSession, target: str):
-    """Published snapshot of the bucket-partitioned layout, with the
-    internal ``hb`` column dropped."""
-    snap = current_snapshot(spark, target)
-    return None if snap is None else snap.drop("hb")
-
-
-def prune_versions(target: str, keep: int = 3) -> list[str]:
-    """Retention: delete all but the newest ``keep`` version directories
-    (the published one is always kept).  Time travel shrinks to the
-    retained window; the live table is untouched — hard-linked data
-    files stay alive as long as any retained version references them.
-    Returns the deleted version names."""
-    import shutil as _shutil
-
-    ptr = os.path.join(target, _POINTER)
-    published = None
-    if os.path.exists(ptr):
-        with open(ptr, encoding="ascii") as f:
-            published = f.read().strip()
-    versions = sorted(
-        d for d in os.listdir(target)
-        if d.startswith("v") and os.path.isdir(os.path.join(target, d))
-    )
-    retain = set(versions[-keep:]) | ({published} if published else set())
-    dropped = [v for v in versions if v not in retain]
-    for v in dropped:
-        _shutil.rmtree(os.path.join(target, v), ignore_errors=True)
-    return dropped
-
-
 def merge_stream_into_parquet(
     stream_df: DataFrame,
     target: str,
@@ -250,30 +140,4 @@ def merge_stream_into_parquet(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def merge_aggregate_batch(
-    current: DataFrame | None,
-    updates: DataFrame,
-    key_cols: list[str],
-    sum_cols: list[str],
-) -> DataFrame:
-    """Additive aggregate maintenance — the rollup twin of
-    ``keep_latest_merge``: the maintained table holds one row per key
-    with commutative-monoid columns (sums/counts), and a batch folds in
-    by re-aggregating ``current ∪ partial(updates)``.  Both sides first
-    collapse to key grain (map-side partials absorb the batch), so the
-    merge shuffles key-grain rows only.  Associative + commutative =>
-    the maintained table equals the from-scratch aggregate for ANY
-    micro-batch split — same algebra TPC-like IVM (q_ivm_merge) pins in
-    batch form.  Averages and other ratios derive from (sum, count) at
-    READ time; non-decomposable aggregates (exact distinct, median) need
-    sketch columns instead (HLL/KLL), same shape."""
-    partial = updates.groupBy(*key_cols).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-    both = partial if current is None else current.unionByName(partial)
-    return both.groupBy(*key_cols).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
     )

@@ -16,16 +16,13 @@ snapshots.
 default provider stays untouched for the oracle-checked test paths so
 their hashes never depend on a native library), applies to queries
 STARTED AFTER the call (the provider is read at query start from the
-session conf), and is also honored via the ``SPARK_GRAFT_ROCKSDB_STATE``
-environment variable for deployments that cannot edit code.  RocksDB
-ships inside stock Spark (rocksdbjni is bundled since 3.2) — no extra
-package; tests/test_streaming_state.py smoke-proves the provider loads
-and that a stateful query returns the same rows under either backend.
+session conf).  RocksDB ships inside stock Spark (rocksdbjni is bundled
+since 3.2) — no extra package; tests/test_streaming_state.py
+smoke-proves the provider loads and that a stateful query returns the
+same rows under either backend.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import SparkSession
 
@@ -37,15 +34,6 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 _CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
-
-
-def rocksdb_env_opt_in() -> bool:
-    """True when SPARK_GRAFT_ROCKSDB_STATE requests the RocksDB backend."""
-    return os.environ.get("SPARK_GRAFT_ROCKSDB_STATE", "") in (
-        "1",
-        "true",
-        "yes",
-    )
 
 
 def use_rocksdb_state_store(
@@ -70,11 +58,3 @@ def use_rocksdb_state_store(
         "org.apache.spark.sql.execution.streaming.state."
         "HDFSBackedStateStoreProvider",
     )
-
-
-def apply_env_opt_in(spark: SparkSession) -> bool:
-    """Honor the environment opt-in; returns True when RocksDB was set."""
-    if rocksdb_env_opt_in():
-        use_rocksdb_state_store(spark, True)
-        return True
-    return False

@@ -108,113 +108,3 @@ def streaming_user_profiles(
     )
     q.awaitTermination()
     return spark.table(query_name)
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas — the successor API to
-# applyInPandasWithState: named state variables (value/list/map), timers,
-# and a processor object instead of a per-group function.  Requires the
-# RocksDB state store provider AND the python `protobuf` package (the
-# Python<->JVM state-server protocol is protobuf-framed); this container
-# ships no protobuf, so the runner raises a documented ImportError here
-# and the test suite skips — the operator itself is complete and runs on
-# any standard Spark 4 cluster image (protobuf is a pyspark[connect]
-# dependency).
-# ---------------------------------------------------------------------------
-
-def _have_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def make_cumulative_cents_processor():
-    """Build the StatefulProcessor class lazily (the import itself is
-    fine without protobuf; only running it needs the state server)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class CumulativeCentsProcessor(StatefulProcessor):
-        """Per-user exact running total in integer cents.
-
-        State: one ValueState bigint per key — the carried total.  Each
-        batch's rows are sorted (ts_epoch, event_id) inside the group,
-        scaled to cents with the engine-portable floor(x*100+0.5), and
-        emitted with their running cumulative.  Integer arithmetic keeps
-        the emission bit-identical to a batch window cumsum regardless
-        of partitioning — the property that makes the operator
-        oracle-checkable when the input arrives time-ordered.
-        """
-
-        def init(self, handle) -> None:
-            self.total = handle.getValueState("total", "cum bigint")
-
-        def handleInputRows(self, key, rows, timer_values):
-            pdf = pd.concat(list(rows), ignore_index=True)
-            pdf = pdf.sort_values(["ts_epoch", "event_id"], kind="mergesort")
-            prev = self.total.get()[0] if self.total.exists() else 0
-            cents = (pdf["value"] * 100 + 0.5).apply(int)
-            cum = cents.cumsum() + prev
-            self.total.update((int(cum.iloc[-1]),))
-            yield pd.DataFrame(
-                {
-                    "user_id": pdf["user_id"].astype("int64"),
-                    "event_id": pdf["event_id"].astype("int64"),
-                    "ts_epoch": pdf["ts_epoch"].astype("int64"),
-                    "cum_cents": cum.astype("int64"),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return CumulativeCentsProcessor()
-
-
-def streaming_cumulative_cents(
-    spark: SparkSession,
-    events_path: str,
-    query_name: str = "q_stream_tws",
-) -> DataFrame:
-    """Per-user running value totals via ``transformWithStateInPandas``.
-
-    Raises ImportError with a pointed message when `protobuf` is absent
-    (see module note) instead of the opaque worker-crash Spark surfaces.
-    """
-    if not _have_protobuf():
-        raise ImportError(
-            "transformWithStateInPandas needs the python 'protobuf' package "
-            "(state-server protocol); not available in this container — "
-            "runs unchanged on a standard Spark 4 image"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    src = event_stream(spark, events_path).select(
-        "user_id",
-        "event_id",
-        F.unix_timestamp("ts").alias("ts_epoch"),
-        "value",
-    )
-    out = src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_cumulative_cents_processor(),
-        outputStructType=(
-            "user_id bigint, event_id bigint, ts_epoch bigint, "
-            "cum_cents bigint"
-        ),
-        outputMode="Append",
-        timeMode="None",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)

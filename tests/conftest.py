@@ -21,3 +21,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say how many `slow` tests the default `-m "not slow"` smoke run
+    left out, so a green smoke run is not read as the full suite."""
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow") is not None
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow tests deselected by -m {config.option.markexpr!r}; "
+            'the certification run is `pytest -m ""`.'
+        )

@@ -9,7 +9,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from java_etl_bi_generator_spark.operators.kmeans import assign_cells, kmeans_fit
+from java_etl_bi_generator_spark.operators.kmeans import (
+    kmeans_fit_int,
+    nearest_cell_int,
+)
 from java_etl_bi_generator_spark.operators.similarity import (
     brute_force_topk,
     ivf_topk,
@@ -59,8 +62,10 @@ def test_ivf_recall_on_planted_cells(spark, emb):
 def test_ivf_recall_on_trained_cells(spark, emb):
     """Full lifecycle: train k-means, assign, probe — the index built
     with no prior labels must match the planted-cell quality."""
-    model = kmeans_fit(emb, k=8, iters=3)
-    assigned = assign_cells(emb, model).cache()
+    model = kmeans_fit_int(emb, k=8, iters=3)
+    assigned = emb.withColumn(
+        "cell", nearest_cell_int("embedding", model)
+    ).cache()
     recalls = []
     for _, qv in _queries(emb).items():
         exact = [r["vec_id"] for r in brute_force_topk(emb, qv, k=10).collect()]

@@ -65,7 +65,6 @@ def test_ivf_recall_against_brute_force(spark):
 def test_connected_components_clusters(spark):
     from java_etl_bi_generator_spark.operators.graph import (
         connected_components,
-        dedup_keep_representatives,
     )
 
     pairs = spark.createDataFrame(
@@ -76,12 +75,6 @@ def test_connected_components_clusters(spark):
     # {1,2,3,8,9} chain through 9-1; {5,6} separate
     assert comps[1] == comps[2] == comps[3] == comps[8] == comps[9] == 1
     assert comps[5] == comps[6] == 5
-
-    docs = spark.createDataFrame([(i, f"t{i}") for i in range(10)],
-                                 ["doc_id", "text"])
-    kept = {r["doc_id"]
-            for r in dedup_keep_representatives(docs, pairs, "doc_id").collect()}
-    assert kept == {0, 1, 4, 5, 7}  # one representative per cluster
 
 
 def test_connected_components_large_star_small_star(spark):

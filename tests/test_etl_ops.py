@@ -1,50 +1,52 @@
-"""Skew mitigation, upsert/SCD2, and profiling operator behavior."""
+"""Salted join/aggregate equivalence, upsert, profiling, t-closeness,
+as-of, interval and gap-fill operator behavior."""
 
 from __future__ import annotations
-
-import datetime
 
 import pyspark.sql.functions as F
 
 from java_etl_bi_generator_spark.catalog import load_table
 from java_etl_bi_generator_spark.operators.profile import profile_table
-from java_etl_bi_generator_spark.operators.skew import salted_join, two_phase_agg
-from java_etl_bi_generator_spark.operators.upsert import merge_upsert, scd2_apply
+from java_etl_bi_generator_spark.operators.upsert import merge_upsert
+from java_etl_bi_generator_spark.queries import registry
 
 from .conftest import SF_DIR
 
 
 def test_salted_join_matches_plain_join(spark):
-    li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    od = load_table(spark, SF_DIR, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderstatus"
-    )
-    plain = li.join(od, "l_orderkey").groupBy("o_orderstatus").count()
-    salted = (
-        salted_join(li, od, "l_orderkey", salt_buckets=4)
-        .groupBy("o_orderstatus")
-        .count()
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
+    """q_skew_join_salted's replicated-dim salting gives the unsalted
+    join's per-segment counts."""
+    cu = load_table(spark, SF_DIR, "customer")
+    od = load_table(spark, SF_DIR, "orders")
+    plain = {
+        r["c_mktsegment"]: r["n"]
+        for r in od.join(cu, od.o_custkey == cu.c_custkey)
+        .groupBy("c_mktsegment")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    salted = {
+        r["c_mktsegment"]: r["n_orders"]
+        for r in registry()["q_skew_join_salted"](spark, SF_DIR).collect()
+    }
+    assert salted == plain
 
 
 def test_two_phase_agg_matches_direct(spark):
+    """q_salted_groupby's (key, salt) partial + final merge equals the
+    direct GROUP BY."""
     ev = load_table(spark, SF_DIR, "events")
     direct = {
-        (r["event_type"]): (r["n"], round(r["s"], 2))
+        r["event_type"]: (r["n"], round(r["s"], 2))
         for r in ev.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
         .collect()
     }
     salted = {
-        (r["event_type"]): (r["n"], round(r["s"], 2))
-        for r in two_phase_agg(
-            ev.withColumnsRenamed({"value": "s"}).withColumn("n", F.lit(1)),
-            "event_type",
-            {"n": "count", "s": "sum"},
-        ).collect()
+        r["event_type"]: (r["n_events"], round(r["sum_value"], 2))
+        for r in registry()["q_salted_groupby"](spark, SF_DIR).collect()
     }
-    assert direct == salted
+    assert salted == direct
 
 
 def test_merge_upsert_semantics(spark):
@@ -60,28 +62,6 @@ def test_merge_upsert_semantics(spark):
                    4: ("d", 40.0)}
 
 
-def test_scd2_closes_and_opens_versions(spark):
-    d = datetime.date
-    current = spark.createDataFrame(
-        [
-            (1, "addr_v1", d(2020, 1, 1), d(9999, 12, 31), 1),
-            (2, "addr_b", d(2021, 5, 1), d(9999, 12, 31), 1),
-            (1, "addr_v0", d(2018, 1, 1), d(2020, 1, 1), 0),
-        ],
-        ["k", "addr", "valid_from", "valid_to", "is_current"],
-    )
-    changes = spark.createDataFrame(
-        [(1, "addr_v2", d(2024, 3, 1))], ["k", "addr", "valid_from"]
-    )
-    out = scd2_apply(current, changes, "k").collect()
-    rows = {(r["k"], r["addr"]): (r["valid_to"], r["is_current"]) for r in out}
-    assert rows[(1, "addr_v1")] == (d(2024, 3, 1), 0)     # closed out
-    assert rows[(1, "addr_v2")] == (d(9999, 12, 31), 1)   # new current
-    assert rows[(2, "addr_b")] == (d(9999, 12, 31), 1)    # untouched
-    assert rows[(1, "addr_v0")] == (d(2020, 1, 1), 0)     # history intact
-    assert len(rows) == 4
-
-
 def test_profile_counts(spark):
     df = spark.createDataFrame(
         [(1, "x"), (2, None), (3, "x")], ["id", "s"]
@@ -93,38 +73,6 @@ def test_profile_counts(spark):
     assert prof["s"]["n_nulls"] == 1
     assert prof["s"]["n_distinct"] == 1
     assert prof["s"]["min_str"] == "x"
-
-
-def test_quarantine_splits_and_tags(spark, sf_dir):
-    from java_etl_bi_generator_spark.catalog import load_table
-    from java_etl_bi_generator_spark.operators.profile import (
-        quarantine,
-        validate_expectations,
-    )
-
-    od = load_table(spark, sf_dir, "orders")
-    rules = {
-        "price_cap": F.col("o_totalprice") < 200000,
-        "status_o": F.col("o_orderstatus") == "O",
-    }
-    good, bad = quarantine(od, rules)
-    n = od.count()
-    assert good.count() + bad.count() == n
-    assert "failed_rules" not in good.columns
-    assert bad.filter(F.size("failed_rules") == 0).count() == 0
-    # tags agree with the one-pass summary counts
-    summary = {
-        r["rule"]: r["n_violations"]
-        for r in validate_expectations(od, rules).collect()
-    }
-    tagged = {
-        k: bad.filter(F.array_contains("failed_rules", k)).count()
-        for k in rules
-    }
-    assert summary == tagged
-    # every good row satisfies every rule
-    for name, col in rules.items():
-        assert good.filter(~col).count() == 0, name
 
 
 def test_gap_fill_interpolate_planted_series(spark):

@@ -167,13 +167,11 @@ def test_dsum_wide_survives_bigint_overflow(spark):
 
 
 def test_dsum_wide_sql_twin_matches(spark, sf_dir):
+    """dsum_wide equals DuckDB's exact HUGEINT-accumulated scaled sum."""
     import duckdb
 
     from java_etl_bi_generator_spark.catalog import load_table
-    from java_etl_bi_generator_spark.functions.rounding import (
-        dsum_wide,
-        dsum_wide_sql,
-    )
+    from java_etl_bi_generator_spark.functions.rounding import dsum_wide
 
     li = load_table(spark, sf_dir, "lineitem")
     got = {
@@ -185,7 +183,8 @@ def test_dsum_wide_sql_twin_matches(spark, sf_dir):
     con = duckdb.connect()
     want = dict(
         con.execute(
-            f"SELECT l_returnflag, {dsum_wide_sql('l_extendedprice', 6)} "
+            "SELECT l_returnflag, CAST(sum(CAST(floor(l_extendedprice "
+            "* 1000000.0 + 0.5) AS HUGEINT)) AS DOUBLE) / 1000000.0 "
             f"FROM '{sf_dir}/lineitem.parquet' GROUP BY 1"
         ).fetchall()
     )

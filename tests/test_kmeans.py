@@ -1,17 +1,19 @@
-"""Distributed k-means trainer (operators/kmeans.py): recovery of planted
-clusters, determinism, assignment semantics, and the IVF-trained registry
-queries."""
+"""Distributed integer k-means trainer (operators/kmeans.py): recovery of
+planted clusters, determinism, assignment semantics, and the IVF-trained
+registry queries."""
 
 from __future__ import annotations
+
+import hashlib
 
 import pyspark.sql.functions as F
 import pytest
 
 from java_etl_bi_generator_spark.catalog import load_table
 from java_etl_bi_generator_spark.operators.kmeans import (
-    assign_cells,
-    kmeans_fit,
-    nearest_cell,
+    kmeans_fit_int,
+    nearest_cell_int,
+    quantize_micro,
 )
 
 
@@ -34,28 +36,10 @@ def _planted(spark, n_per=40, dim=8):
     )
 
 
-def test_kmeans_recovers_planted_clusters(spark):
-    df = _planted(spark)
-    model = kmeans_fit(df, k=3, iters=4)
-    assigned = assign_cells(df, model)
-    # every planted cluster maps to exactly one cell and vice versa
-    m = (
-        assigned.groupBy("planted")
-        .agg(F.countDistinct("cell").alias("ncells"), F.first("cell").alias("cell"))
-        .collect()
-    )
-    assert all(r["ncells"] == 1 for r in m)
-    assert len({r["cell"] for r in m}) == 3
-    # each centroid sits within jitter range of its planted center
-    for c in model:
-        lead = round(c[0] / 10) * 10
-        assert all(abs(x - lead) < 0.2 for x in c)
-
-
 def test_kmeans_deterministic(spark):
     df = _planted(spark)
-    m1 = kmeans_fit(df, k=3, iters=3)
-    m2 = kmeans_fit(df, k=3, iters=3)
+    m1 = kmeans_fit_int(df, k=3, iters=3)
+    m2 = kmeans_fit_int(df, k=3, iters=3)
     assert m1 == m2
 
 
@@ -63,7 +47,9 @@ def test_nearest_cell_tie_breaks_low_index(spark):
     # equidistant centroids -> lowest index wins (struct ordering)
     df = spark.createDataFrame([([0.0, 0.0],)], "embedding array<double>")
     cell = df.select(
-        nearest_cell(F.col("embedding"), [[1.0, 0.0], [-1.0, 0.0]]).alias("c")
+        nearest_cell_int(
+            quantize_micro("embedding"), [[1_000_000, 0], [-1_000_000, 0]]
+        ).alias("c")
     ).first()["c"]
     assert cell == 0
 
@@ -75,9 +61,23 @@ def test_empty_cell_keeps_centroid(spark):
         [(i, [float(i % 2) * 100.0, 0.0]) for i in range(10)],
         "vec_id bigint, embedding array<double>",
     )
-    model = kmeans_fit(df, k=3, iters=3)
+    model = kmeans_fit_int(df, k=3, iters=3)
     assert len(model) == 3
-    assert all(all(x == x for x in c) for c in model)  # no NaN
+    # seeds are the k vectors first in (md5(vec_id), vec_id) order
+    seed_ids = sorted(
+        range(10), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )[:3]
+    seeds = [[(i % 2) * 100_000_000, 0] for i in seed_ids]
+    sizes = {
+        r["cell"]: r["count"]
+        for r in df.select(
+            nearest_cell_int(quantize_micro("embedding"), model).alias("cell")
+        ).groupBy("cell").count().collect()
+    }
+    empty = [c for c in range(3) if c not in sizes]
+    assert empty, "3 cells over 2 distinct points must leave one empty"
+    for c in empty:
+        assert model[c] == seeds[c]
 
 
 def test_ivf_trained_query_matches_bruteforce_head(spark, sf_dir):
@@ -100,44 +100,6 @@ def test_kmeans_cells_query_shape(spark, sf_dir):
     assert all(r["sum_sq_dist"] >= 0 for r in rows)
 
 
-def test_ivf_index_probe_is_partition_pruned(spark, sf_dir):
-    """The persisted index turns the nprobe pruning into a metadata
-    operation: the probe's scan must carry PartitionFilters on cell and
-    match the in-memory IVF result."""
-    import tempfile
-
-    from java_etl_bi_generator_spark.catalog import load_table
-    from java_etl_bi_generator_spark.operators.kmeans import (
-        assign_cells,
-        kmeans_fit,
-        probe_ivf_index,
-        write_ivf_index,
-    )
-    from java_etl_bi_generator_spark.operators.similarity import ivf_topk
-    from java_etl_bi_generator_spark.plans.plan_tools import explain_formatted
-
-    em = load_table(spark, sf_dir, "embeddings")
-    model = kmeans_fit(em, k=8, iters=2)
-    assigned = assign_cells(em, model)
-    path = tempfile.mkdtemp(prefix="ivf_index_") + "/index"
-    write_ivf_index(assigned, path)
-
-    qv = [
-        float(x)
-        for x in em.filter(F.col("vec_id") == 0).first()["embedding"]
-    ]
-    probe = probe_ivf_index(spark, path, model, qv, k=10, nprobe=3)
-    plan = explain_formatted(probe)
-    assert "PartitionFilters" in plan and "cell" in plan
-
-    got = [(r["vec_id"], r["cosine"]) for r in probe.collect()]
-    want = [
-        (r["vec_id"], r["cosine"])
-        for r in ivf_topk(assigned, qv, k=10, nprobe=3, cell_col="cell").collect()
-    ]
-    assert got == want
-
-
 def test_kmeans_degenerate_inputs(spark):
     import pytest as _pytest
 
@@ -146,54 +108,17 @@ def test_kmeans_degenerate_inputs(spark):
         "vec_id bigint, embedding array<double>",
     )
     with _pytest.raises(ValueError, match="k must be"):
-        kmeans_fit(df, k=0)
+        kmeans_fit_int(df, k=0)
     with _pytest.raises(ValueError, match="no input"):
-        kmeans_fit(df.filter("vec_id < 0"), k=2)
+        kmeans_fit_int(df.filter("vec_id < 0"), k=2)
     # more cells than rows: trains only what exists, no crash
-    model = kmeans_fit(df, k=10, iters=2)
+    model = kmeans_fit_int(df, k=10, iters=2)
     assert 1 <= len(model) <= 4
 
 
-def test_lloyds_objective_never_increases(spark):
-    """Each Lloyd round must not increase the mean within-cell squared
-    distance — the convergence guarantee of the algorithm, checked on the
-    actual distributed implementation."""
-    from java_etl_bi_generator_spark.operators.kmeans import (
-        _sq_dist,
-        assign_cells,
-        kmeans_fit,
-    )
-
-    df = _planted(spark, n_per=60, dim=6)
-
-    def objective(model):
-        assigned = assign_cells(df, model)
-        d = F.coalesce(
-            *[
-                F.when(
-                    F.col("cell") == i,
-                    _sq_dist(F.col("embedding").cast("array<double>"), c),
-                )
-                for i, c in enumerate(model)
-            ]
-        )
-        return assigned.agg(F.avg(d)).first()[0]
-
-    objs = [objective(kmeans_fit(df, k=3, iters=it)) for it in (1, 2, 3, 4)]
-    for a, b in zip(objs, objs[1:]):
-        assert b <= a + 1e-9
-
-
 def test_kmeans_int_recovers_planted_clusters(spark):
-    """The integer-pinned trainer finds the same planted structure as the
-    float trainer, and its centroids agree with the float means to the
-    1-micro-unit quantization bound."""
-    from java_etl_bi_generator_spark.operators.kmeans import (
-        kmeans_fit_int,
-        nearest_cell_int,
-        quantize_micro,
-    )
-
+    """The integer-pinned trainer finds the planted structure, and its
+    centroids sit within jitter range of the planted centers."""
     df = _planted(spark)
     model = kmeans_fit_int(df, k=3, iters=4)
     assigned = df.withColumn(
@@ -214,9 +139,7 @@ def test_kmeans_int_recovers_planted_clusters(spark):
 
 def test_kmeans_int_partition_invariant(spark):
     """Integer training is EXACTLY partitioning-invariant (bigint sums are
-    order-free; float kmeans_fit can only promise this per fixed plan)."""
-    from java_etl_bi_generator_spark.operators.kmeans import kmeans_fit_int
-
+    order-free; a float trainer could only promise this per fixed plan)."""
     df = _planted(spark)
     m1 = kmeans_fit_int(df.repartition(1), k=3, iters=3)
     m2 = kmeans_fit_int(df.repartition(13), k=3, iters=3)
@@ -234,8 +157,6 @@ def test_arrow_assign_matches_literal_path(spark):
 
     from java_etl_bi_generator_spark.operators.kmeans import (
         assign_cells_arrow_int,
-        nearest_cell_int,
-        quantize_micro,
     )
 
     rows = [
@@ -277,10 +198,7 @@ def test_pq_fit_fused_matches_independent_runs(spark, sf_dir):
     import pyspark.sql.functions as F
 
     from java_etl_bi_generator_spark.catalog import load_table
-    from java_etl_bi_generator_spark.operators.kmeans import (
-        kmeans_fit_int,
-        pq_fit_int,
-    )
+    from java_etl_bi_generator_spark.operators.kmeans import pq_fit_int
 
     em = load_table(spark, sf_dir, "embeddings")
     m, k, iters = 4, 16, 2

@@ -138,110 +138,6 @@ def test_merge_split_invariance_property(spark, events):
     check()
 
 
-def test_partitioned_merge_rewrites_only_touched_buckets(spark, events):
-    from java_etl_bi_generator_spark.streaming.sink import (
-        apply_merge_batch_partitioned,
-        current_snapshot_partitioned,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="merge_part_")
-    try:
-        target = os.path.join(tmp, "table")
-        os.makedirs(target)
-        b0 = events  # full backfill
-        assert apply_merge_batch_partitioned(
-            b0, 0, target, "user_id", "ts", "event_id", num_buckets=8
-        )
-        v0 = os.path.join(target, "v" + "0" * 12)
-        inode_by_bucket = {
-            d: {
-                fn: os.stat(os.path.join(v0, d, fn)).st_ino
-                for fn in os.listdir(os.path.join(v0, d))
-            }
-            for d in os.listdir(v0)
-            if d.startswith("hb=")
-        }
-
-        # batch 1 touches ONE user -> at most one bucket rewritten
-        b1 = events.filter(F.col("user_id") == 7).limit(5)
-        assert b1.count() > 0
-        assert apply_merge_batch_partitioned(
-            b1, 1, target, "user_id", "ts", "event_id", num_buckets=8
-        )
-        v1 = os.path.join(target, "v" + "0" * 11 + "1")
-        rewritten, linked = 0, 0
-        for d, files in inode_by_bucket.items():
-            new_dir = os.path.join(v1, d)
-            same = all(
-                os.path.exists(os.path.join(new_dir, fn))
-                and os.stat(os.path.join(new_dir, fn)).st_ino == ino
-                for fn, ino in files.items()
-            )
-            if same:
-                linked += 1
-            else:
-                rewritten += 1
-        assert rewritten == 1  # exactly the touched bucket
-        assert linked == len(inode_by_bucket) - 1
-
-        # replay idempotence
-        assert not apply_merge_batch_partitioned(
-            b1, 1, target, "user_id", "ts", "event_id", num_buckets=8
-        )
-
-        # final state equals the algebraic keep-latest over both batches
-        got = current_snapshot_partitioned(spark, target)
-        want = keep_latest_merge(
-            keep_latest_merge(None, b0, "user_id", "ts", "event_id"),
-            b1,
-            "user_id",
-            "ts",
-            "event_id",
-        )
-        w = want.select(*got.columns)
-        assert got.exceptAll(w).count() == 0 and w.exceptAll(got).count() == 0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_prune_versions_keeps_published_table_alive(spark, events):
-    from java_etl_bi_generator_spark.streaming.sink import prune_versions
-
-    tmp = tempfile.mkdtemp(prefix="merge_prune_")
-    try:
-        target = _run_stream(spark, events, tmp, n_files=3)
-        before = sorted(current_snapshot(spark, target).collect())
-        dropped = prune_versions(target, keep=1)
-        assert len(dropped) == 2
-        left = [d for d in os.listdir(target) if d.startswith("v")]
-        assert len(left) == 1
-        assert sorted(current_snapshot(spark, target).collect()) == before
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_aggregate_maintenance_equals_from_scratch(spark, events):
-    """Additive rollup maintenance: folding any batch split yields the
-    same table as aggregating everything at once."""
-    from java_etl_bi_generator_spark.streaming.sink import (
-        merge_aggregate_batch,
-    )
-
-    prepared = events.select(
-        "user_id", F.lit(1).alias("n"), F.col("value").cast("decimal(18,2)").alias("v")
-    )
-    rows = prepared.collect()
-    thirds = [rows[i::3] for i in range(3)]
-    cur = None
-    for chunk in thirds:
-        cdf = spark.createDataFrame(chunk, prepared.schema)
-        cur = merge_aggregate_batch(cur, cdf, ["user_id"], ["n", "v"])
-    scratch = merge_aggregate_batch(None, prepared, ["user_id"], ["n", "v"])
-    a = sorted(map(tuple, cur.collect()))
-    b = sorted(map(tuple, scratch.collect()))
-    assert a == b
-
-
 def test_time_travel_reads_intermediate_version(spark, events):
     """snapshot_at(version k) must equal keep-latest over exactly the
     first k+1 micro-batches — each version directory is a full,

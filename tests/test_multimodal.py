@@ -1,69 +1,8 @@
-"""Multimodal plumbing tests: binary columns + Arrow-batched feature
-extraction (decode itself is stubbed — see sources/multimodal.py)."""
+"""Multimodal tests: codegen header parsers, the Arrow-batched
+variable-offset walks, and codec-free pixel/sample decoders over binary
+columns (sources/multimodal.py)."""
 
 from __future__ import annotations
-
-import pytest
-
-from java_etl_bi_generator_spark.sources.multimodal import (
-    decode_image_real,
-    extract_features,
-    synthetic_media,
-)
-
-
-def test_extract_features_schema_and_determinism(spark):
-    media = synthetic_media(spark, n=32)
-    feats = extract_features(media).collect()
-    assert len(feats) == 32
-    by_id = {r["media_id"]: r for r in feats}
-    assert by_id[0]["modality"] == "image"
-    assert by_id[0]["byte_len"] == 32  # sha256 digest * 1
-    assert len(by_id[0]["content_sha"]) == 64
-    assert 16 <= by_id[0]["feat_width"] <= 255
-    # deterministic across runs
-    again = {r["media_id"]: r["content_sha"]
-             for r in extract_features(media).collect()}
-    assert again == {k: v["content_sha"] for k, v in by_id.items()}
-
-
-def test_real_decode_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"\x89PNG")
-
-
-def test_resize_images_shape_and_determinism(spark):
-    from java_etl_bi_generator_spark.sources.multimodal import resize_images
-
-    media = synthetic_media(spark, n=12)
-    out = resize_images(media, width=64, height=64).collect()
-    assert len(out) == 12
-    assert all(r["width"] == 64 and r["height"] == 64 for r in out)
-    assert all(len(r["content"]) == 64 * 64 // 64 for r in out)
-    again = resize_images(media, width=64, height=64).collect()
-    assert {r["media_id"]: bytes(r["content"]) for r in out} == {
-        r["media_id"]: bytes(r["content"]) for r in again
-    }
-
-
-def test_sample_frames_expands_video_rows(spark):
-    from java_etl_bi_generator_spark.sources.multimodal import sample_frames
-
-    media = synthetic_media(spark, n=12)  # 4 of 12 are video (i % 3 == 2)
-    frames = sample_frames(media, num_frames=3, frame_interval_ms=500).collect()
-    assert len(frames) == 4 * 3
-    one = sorted(
-        (r for r in frames if r["media_id"] == 2), key=lambda r: r["frame_idx"]
-    )
-    assert [r["ts_ms"] for r in one] == [0, 500, 1000]
-    assert len({bytes(r["frame_content"]) for r in one}) == 3  # distinct per frame
-
-
-def test_resize_real_is_explicit_stub():
-    from java_etl_bi_generator_spark.sources.multimodal import resize_images_real
-
-    with pytest.raises(NotImplementedError):
-        resize_images_real(b"\x89PNG", 64, 64)
 
 
 def test_image_header_dims_parses_real_png_and_gif(spark):

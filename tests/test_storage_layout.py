@@ -9,11 +9,6 @@ import pyspark.sql.functions as F
 
 from java_etl_bi_generator_spark.catalog import load_table
 from java_etl_bi_generator_spark.plans import explain_formatted, explain_simple
-from java_etl_bi_generator_spark.sources.parquet_sink import (
-    read_partitioned,
-    write_bucketed,
-    write_partitioned,
-)
 
 
 def test_partitioned_write_enables_pruning(spark, sf_dir):
@@ -21,9 +16,9 @@ def test_partitioned_write_enables_pruning(spark, sf_dir):
         "order_year", F.year("o_orderdate")
     )
     out = tempfile.mkdtemp(prefix="part_write_") + "/orders_by_year"
-    write_partitioned(od, out, ["order_year"])
+    od.write.mode("overwrite").partitionBy("order_year").parquet(out)
 
-    back = read_partitioned(spark, out).filter(F.col("order_year") == 1997)
+    back = spark.read.parquet(out).filter(F.col("order_year") == 1997)
     plan = explain_formatted(back)
     # attribute ids are appended (order_year#NN) — match the prefix
     assert "PartitionFilters: [isnotnull(order_year" in plan
@@ -42,9 +37,9 @@ def test_dynamic_partition_pruning(spark, sf_dir):
         "order_year", F.year("o_orderdate")
     )
     out = tempfile.mkdtemp(prefix="dpp_write_") + "/orders_by_year"
-    write_partitioned(od, out, ["order_year"])
+    od.write.mode("overwrite").partitionBy("order_year").parquet(out)
 
-    fact = read_partitioned(spark, out)
+    fact = spark.read.parquet(out)
     dim = spark.createDataFrame(
         [(y, "keep" if y == 1997 else "drop") for y in range(1992, 1999)],
         "dim_year int, tag string",
@@ -62,10 +57,17 @@ def test_dynamic_partition_pruning(spark, sf_dir):
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     cu = load_table(spark, sf_dir, "customer")
     od = load_table(spark, sf_dir, "orders")
-    write_bucketed(cu, "cust_b", "c_custkey", 8)
-    write_bucketed(
-        od.withColumn("o_custkey_b", F.col("o_custkey")), "ord_b", "o_custkey_b", 8
-    )
+    for df, table, key in (
+        (cu, "cust_b", "c_custkey"),
+        (od.withColumn("o_custkey_b", F.col("o_custkey")), "ord_b", "o_custkey_b"),
+    ):
+        (
+            df.write.mode("overwrite")
+            .bucketBy(8, key)
+            .sortBy(key)
+            .format("parquet")
+            .saveAsTable(table)
+        )
     try:
         joined = (
             spark.table("cust_b")

@@ -4,7 +4,6 @@ data, the streaming results must equal their batch equivalents."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from java_etl_bi_generator_spark.catalog import load_table
 from java_etl_bi_generator_spark.functions.rounding import pround
@@ -87,63 +86,6 @@ def test_stream_dedup_one_row_per_key(spark, sf_dir):
     keys = [(r["user_id"], r["event_type"]) for r in out]
     assert len(keys) == len(set(keys))
     assert len(keys) > 0
-
-
-def test_tws_processor_logic_without_state_server(spark):
-    """transformWithStateInPandas can't run here (no protobuf — see
-    stateful.py module note), but the processor's batch logic is pure
-    pandas: drive handleInputRows directly with a fake ValueState and
-    pin the integer-cents running total against a hand computation."""
-    import pandas as pd
-
-    from java_etl_bi_generator_spark.streaming.stateful import (
-        make_cumulative_cents_processor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, t):
-            self.v = t
-
-    proc = make_cumulative_cents_processor()
-    proc.total = FakeState()
-
-    b1 = pd.DataFrame(
-        {"user_id": [7, 7], "event_id": [2, 1],
-         "ts_epoch": [100, 50], "value": [1.25, 2.00]}
-    )
-    out1 = pd.concat(list(proc.handleInputRows((7,), iter([b1]), None)))
-    # sorted by ts: 2.00 first (200c), then 1.25 (125c) -> 200, 325
-    assert out1["cum_cents"].tolist() == [200, 325]
-    assert proc.total.get() == (325,)
-
-    b2 = pd.DataFrame(
-        {"user_id": [7], "event_id": [3], "ts_epoch": [150], "value": [0.10]}
-    )
-    out2 = pd.concat(list(proc.handleInputRows((7,), iter([b2]), None)))
-    assert out2["cum_cents"].tolist() == [335]  # carried across batches
-
-
-def test_tws_runner_raises_pointed_importerror_without_protobuf(spark, sf_dir):
-    from java_etl_bi_generator_spark.streaming.stateful import (
-        _have_protobuf,
-        streaming_cumulative_cents,
-    )
-
-    if _have_protobuf():
-        got = streaming_cumulative_cents(spark, f"{sf_dir}/events.parquet")
-        assert got.count() > 0
-    else:
-        with pytest.raises(ImportError, match="protobuf"):
-            streaming_cumulative_cents(spark, f"{sf_dir}/events.parquet")
 
 
 def test_watermark_drops_late_rows_across_batches(spark, tmp_path):

@@ -36,16 +36,3 @@ def test_rocksdb_provider_roundtrip(spark):
     # the switch is fully reversible
     restored = use_rocksdb_state_store(spark, False)
     assert "HDFSBackedStateStoreProvider" in restored
-
-
-def test_env_opt_in(spark, monkeypatch):
-    from java_etl_bi_generator_spark.streaming import state
-
-    monkeypatch.setenv("SPARK_GRAFT_ROCKSDB_STATE", "1")
-    try:
-        assert state.apply_env_opt_in(spark) is True
-        assert spark.conf.get(state._PROVIDER_CONF) == ROCKSDB_PROVIDER
-    finally:
-        use_rocksdb_state_store(spark, False)
-    monkeypatch.delenv("SPARK_GRAFT_ROCKSDB_STATE")
-    assert state.rocksdb_env_opt_in() is False

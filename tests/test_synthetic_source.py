@@ -140,8 +140,8 @@ def test_documents_source_determinism_and_dup_structure(spark):
 
 def test_embeddings_source_structure(spark):
     from java_etl_bi_generator_spark.operators.kmeans import (
-        assign_cells,
-        kmeans_fit,
+        kmeans_fit_int,
+        nearest_cell_int,
     )
     from java_etl_bi_generator_spark.sources.synthetic import (
         SyntheticEmbeddingsDataSource,
@@ -168,9 +168,9 @@ def test_embeddings_source_structure(spark):
     assert len(first["embedding"]) == 64
 
     # planted clusters are separable: k-means recovers a 1:1 mapping
-    model = kmeans_fit(df, k=4, iters=4)
+    model = kmeans_fit_int(df, k=4, iters=4)
     m = (
-        assign_cells(df, model)
+        df.withColumn("cell", nearest_cell_int("embedding", model))
         .groupBy("label")
         .agg(F.count_distinct("cell").alias("nc"), F.first("cell").alias("c"))
         .collect()
