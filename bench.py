@@ -175,27 +175,25 @@ def main() -> None:
     # re-measured min-of-6 in a fresh session, and the HEADLINE totals
     # are sums of best-known-per-query (min of the two columns), so a
     # shared-JVM bad lap can no longer move the round-over-round story.
-    # Disable with SPARK_GRAFT_BENCH_ISOLATED=0.
     isolated: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_ISOLATED", "1") != "0":
-        heavy = [n for n in HEADLINE if times[n] > ISOLATION_THRESHOLD]
-        spark.stop()
-        spark = get_spark(app_name="bench-isolated")
-        for name in heavy:
-            try:
-                qs[name](spark, warm_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-            except Exception:
-                pass
-            for _ in range(6):
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                dt = round(time.time() - t0, 3)
-                if name not in isolated or dt < isolated[name]:
-                    isolated[name] = dt
+    heavy = [n for n in HEADLINE if times[n] > ISOLATION_THRESHOLD]
+    spark.stop()
+    spark = get_spark(app_name="bench-isolated")
+    for name in heavy:
+        try:
+            qs[name](spark, warm_dir).write.mode("overwrite").format(
+                "noop"
+            ).save()
+        except Exception:
+            pass
+        for _ in range(6):
+            t0 = time.time()
+            qs[name](spark, sf_dir).write.mode("overwrite").format(
+                "noop"
+            ).save()
+            dt = round(time.time() - t0, 3)
+            if name not in isolated or dt < isolated[name]:
+                isolated[name] = dt
 
     best = {n: min(times[n], isolated.get(n, times[n])) for n in HEADLINE}
     total = round(sum(best.values()), 3)

@@ -28,12 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def checkpoint_dir(spark: SparkSession) -> str | None:
     """The configured reliable checkpoint directory, if any."""
-    try:
-        d = spark.sparkContext.getCheckpointDir()
-    except Exception:  # very old PySpark: fall through to the JVM handle
-        opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-        d = opt.get() if opt.isDefined() else None
-    return d
+    return spark.sparkContext.getCheckpointDir()
 
 
 def configure_checkpoint_dir(

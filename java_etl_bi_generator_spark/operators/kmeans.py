@@ -17,24 +17,31 @@ arithmetic):
 - seeds order by (md5(vec_id), vec_id) — hash order decorrelates the
   seeds from ingestion order, with an explicit total-order tiebreak.
 
+One Lloyd loop (``_lloyd_int``) trains both model kinds: a product
+quantizer of m codebooks over contiguous subspace slices, with plain
+k-means as its m=1 case.  ``kmeans_fit_int`` and ``pq_fit_int`` are
+thin entry points over it.
+
 Scale shape — the part that matters at 100 TB:
 
-- The **model** (k × dim micro-units) lives on the driver and is folded
-  into the plan as one literal table per iteration (``bigint_literal``).
-  k ≤ a few thousand and dim ≤ a few thousand ⇒ at most a few MB of
-  literals — the standard "broadcast the model, shuffle only the
-  sufficient statistics" layout.  Past ``ARROW_ASSIGN_LITERAL_LIMIT``
-  the model ships in the task closure instead (Arrow argmin).
-- **Assignment is a pure map**: per row, squared-L2 to each literal
-  centroid via ``aggregate(zip_with(...))`` higher-order functions
-  (JVM-side, no UDF), argmin via ``array_min`` over ``struct(dist,
-  idx)`` (struct ordering ⇒ ties break to the lowest index,
-  deterministically).  No join, no shuffle.
-- **Update shuffles only k × dim rows**: ``posexplode`` the vector,
-  partial-aggregate ``sum(v), count`` per (cell, pos) map-side, final
-  combine is k × dim rows regardless of corpus size.
-- Per iteration: one scan + one tiny shuffle + one k×dim collect.
-  ``iters`` is fixed (no convergence-dependent row counts).
+- The **model** (m × k × subdim micro-units) lives on the driver and is
+  folded into the plan as one literal table per subspace and iteration
+  (``bigint_literal``).  k ≤ a few thousand and dim ≤ a few thousand ⇒
+  at most a few MB of literals — the standard "broadcast the model,
+  shuffle only the sufficient statistics" layout.
+- **Assignment is a pure map** (``assign_cells_int``): per row,
+  squared-L2 to each literal centroid via ``aggregate(zip_with(...))``
+  higher-order functions (JVM-side, no UDF), argmin via ``array_min``
+  over ``struct(dist, idx)`` (struct ordering ⇒ ties break to the
+  lowest index, deterministically).  No join, no shuffle.  Past
+  ``ARROW_ASSIGN_LITERAL_LIMIT`` k×subdim components the model ships in
+  the task closure instead (Arrow argmin, bit-identical).
+- **Update shuffles only m × k × subdim rows**: ``posexplode`` the
+  vector, partial-aggregate ``sum(v), count`` per (cell of the
+  coordinate's subspace, coordinate) map-side, final combine is
+  m × k × subdim rows regardless of corpus size.
+- Per iteration: one scan + one tiny shuffle + one collect.  ``iters``
+  is fixed (no convergence-dependent row counts).
 
 Empty cells keep their previous centroid (documented standard choice;
 re-seeding would break determinism).
@@ -143,74 +150,6 @@ def nearest_cell_int_struct(
     return F.array_min(_nearest_cands(v, centroids))
 
 
-def kmeans_fit_int(
-    embeddings: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pre_quantized: bool = False,
-) -> list[list[int]]:
-    """Integer-pinned Lloyd's: returns k × dim micro-unit centroids that
-    any engine reproduces bit-for-bit from the same input.  Per
-    iteration: one scan (assignment is a pure map over plan-literal
-    centroids), one k×dim sufficient-statistics shuffle, one k×dim
-    collect; Python's ``//`` floor division on the driver matches the
-    pinned SQL remainder form exactly.  ``pre_quantized=True`` takes
-    ``vec_col`` as array<bigint> micro-units directly — the IVF-PQ
-    residual trainer needs this: residuals are exact integer
-    differences, and re-quantizing a double form could drift by one
-    micro-unit."""
-    if k < 1:
-        raise ValueError(f"kmeans_fit_int: k must be >= 1, got {k}")
-    qcol = (
-        F.col(vec_col) if pre_quantized else quantize_micro(vec_col)
-    )
-    seeds = (
-        embeddings.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__id"),
-            qcol.alias("__v"),
-        )
-        .orderBy("__h", "__id")
-        .limit(k)
-        .collect()
-    )
-    if not seeds:
-        raise ValueError("kmeans_fit_int: no input vectors to seed from")
-    centroids = [list(r["__v"]) for r in seeds]
-    k = len(centroids)
-    dim = len(centroids[0])
-    vecs = embeddings.select(qcol.alias("__v"))
-    for _ in range(iters):
-        if k * dim > ARROW_ASSIGN_LITERAL_LIMIT:
-            assigned = assign_cells_arrow_int(
-                vecs, centroids, vec_col="__v", cell_col="__cell"
-            )
-        else:
-            assigned = vecs.withColumn(
-                "__cell", nearest_cell_int(F.col("__v"), centroids)
-            )
-        stats = (
-            assigned.select(
-                "__cell", F.posexplode("__v").alias("__pos", "__x")
-            )
-            .groupBy("__cell", "__pos")
-            .agg(F.sum("__x").alias("__s"), F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        nxt = [list(c) for c in centroids]  # empty cells keep their centroid
-        acc: dict[int, list[int]] = {}
-        for r in stats:
-            acc.setdefault(r["__cell"], [0] * dim)[r["__pos"]] = (
-                int(r["__s"]) // int(r["__n"])
-            )
-        for cell, mean in acc.items():
-            nxt[cell] = mean
-        centroids = nxt
-    return centroids
-
-
 # Model-size switch between the two exact assignment paths: the
 # literal-plan form (nearest_cell_int — zero Python, whole-stage
 # codegen) is unbeatable while the k×dim literal count stays small, but
@@ -264,6 +203,120 @@ def assign_cells_arrow_int(
     return df.mapInPandas(_assign, schema=out_schema)
 
 
+
+
+def assign_cells_int(
+    df: DataFrame,
+    centroids: list[list[int]],
+    vec_col: str,
+    cell_col: str = "cell",
+) -> DataFrame:
+    """``df`` plus ``cell_col``, the index of each row's nearest integer
+    centroid.  The path is chosen by model size: the literal plan
+    (nearest_cell_int) up to ``ARROW_ASSIGN_LITERAL_LIMIT`` k×dim
+    components, the Arrow argmin (assign_cells_arrow_int) past it.  Both
+    are exact and bit-identical, so the choice never changes a result.
+    ``vec_col`` must already be array<bigint> micro-units."""
+    if len(centroids) * len(centroids[0]) > ARROW_ASSIGN_LITERAL_LIMIT:
+        return assign_cells_arrow_int(df, centroids, vec_col, cell_col)
+    return df.withColumn(cell_col, nearest_cell_int(F.col(vec_col), centroids))
+
+
+def _lloyd_int(
+    embeddings: DataFrame,
+    m: int,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    pre_quantized: bool,
+    name: str,
+) -> list[list[list[int]]]:
+    """The one Lloyd loop: m × k × subdim micro-unit centroids, one
+    codebook per contiguous subspace slice (m=1 is plain k-means).
+    Seeds are the first k vectors in (md5(id), id) order, sliced per
+    subspace.  Each round assigns every subspace (assign_cells_int),
+    shuffles one sum/count row per (cell, coordinate) and floor-divides
+    on the driver; empty cells keep their centroid."""
+    qcol = F.col(vec_col) if pre_quantized else quantize_micro(vec_col)
+    seeds = (
+        embeddings.select(
+            F.md5(F.col(id_col).cast("string")).alias("__h"),
+            F.col(id_col).alias("__id"),
+            qcol.alias("__v"),
+        )
+        .orderBy("__h", "__id")
+        .limit(k)
+        .collect()
+    )
+    if not seeds:
+        raise ValueError(f"{name}: no input vectors to seed from")
+    dim = len(seeds[0]["__v"])
+    if dim % m != 0:
+        raise ValueError(f"{name}: dim {dim} not divisible by m {m}")
+    subdim = dim // m
+    models = [
+        [list(r["__v"])[s * subdim : (s + 1) * subdim] for r in seeds]
+        for s in range(m)
+    ]
+    vecs = embeddings.select(qcol.alias("__v"))
+    subs = ["__v"]
+    if m > 1:
+        subs = [f"__v{s}" for s in range(m)]
+        vecs = vecs.select(
+            "__v",
+            *[
+                F.slice("__v", s * subdim + 1, subdim).alias(sub)
+                for s, sub in enumerate(subs)
+            ],
+        )
+    cells = [f"__c{s}" for s in range(m)]
+    # the cell of coordinate __pos is the one of its subspace (m=1 skips
+    # the array lookup); the driver splits __pos back into (subspace,
+    # position in subspace)
+    cell = F.col("__c0") if m == 1 else F.element_at(
+        F.array(*cells), F.expr(f"CAST(__pos div {subdim} AS INT)") + 1
+    )
+    for _ in range(iters):
+        assigned = vecs
+        for s, sub in enumerate(subs):
+            assigned = assign_cells_int(assigned, models[s], sub, cells[s])
+        stats = (
+            assigned.select(*cells, F.posexplode("__v").alias("__pos", "__x"))
+            .groupBy(cell.alias("__cell"), "__pos")
+            .agg(F.sum("__x").alias("__sum"), F.count(F.lit(1)).alias("__n"))
+            .collect()
+        )
+        nxt = [[list(c) for c in ms] for ms in models]
+        for r in stats:
+            s, p = divmod(r["__pos"], subdim)
+            nxt[s][r["__cell"]][p] = int(r["__sum"]) // int(r["__n"])
+        models = nxt
+    return models
+
+
+def kmeans_fit_int(
+    embeddings: DataFrame,
+    k: int = 8,
+    iters: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    pre_quantized: bool = False,
+) -> list[list[int]]:
+    """Integer-pinned Lloyd's: returns k × dim micro-unit centroids that
+    any engine reproduces bit-for-bit from the same input (the m=1 case
+    of the shared loop).  ``pre_quantized=True`` takes ``vec_col`` as
+    array<bigint> micro-units directly — the IVF-PQ residual trainer
+    needs this: residuals are exact integer differences, and
+    re-quantizing a double form could drift by one micro-unit."""
+    if k < 1:
+        raise ValueError(f"kmeans_fit_int: k must be >= 1, got {k}")
+    return _lloyd_int(
+        embeddings, 1, k, iters, id_col, vec_col, pre_quantized,
+        "kmeans_fit_int",
+    )[0]
+
+
 def pq_fit_int(
     embeddings: DataFrame,
     m: int,
@@ -285,61 +338,7 @@ def pq_fit_int(
     micro-unit centroids."""
     if k < 1 or m < 1:
         raise ValueError(f"pq_fit_int: m and k must be >= 1, got {m}, {k}")
-    qcol = F.col(vec_col) if pre_quantized else quantize_micro(vec_col)
-    seeds = (
-        embeddings.select(
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__id"),
-            qcol.alias("__v"),
-        )
-        .orderBy("__h", "__id")
-        .limit(k)
-        .collect()
+    return _lloyd_int(
+        embeddings, m, k, iters, id_col, vec_col, pre_quantized,
+        "pq_fit_int",
     )
-    if not seeds:
-        raise ValueError("pq_fit_int: no input vectors to seed from")
-    dim = len(seeds[0]["__v"])
-    if dim % m != 0:
-        raise ValueError(f"pq_fit_int: dim {dim} not divisible by m {m}")
-    subdim = dim // m
-    models = [
-        [
-            list(r["__v"])[s * subdim : (s + 1) * subdim]
-            for r in seeds
-        ]
-        for s in range(m)
-    ]
-    vecs = embeddings.select(qcol.alias("__v"))
-    for _ in range(iters):
-        cells = F.array(
-            *[
-                nearest_cell_int(
-                    F.slice(F.col("__v"), s * subdim + 1, subdim),
-                    models[s],
-                )
-                for s in range(m)
-            ]
-        )
-        stats = (
-            vecs.withColumn("__cells", cells)
-            .select("__cells", F.posexplode("__v").alias("__pos", "__x"))
-            .select(
-                F.expr(f"CAST(__pos div {subdim} AS INT)").alias("__s"),
-                F.element_at(
-                    F.col("__cells"),
-                    F.expr(f"CAST(__pos div {subdim} AS INT)") + 1,
-                ).alias("__cell"),
-                F.expr(f"__pos % {subdim}").alias("__p"),
-                F.col("__x"),
-            )
-            .groupBy("__s", "__cell", "__p")
-            .agg(F.sum("__x").alias("__sum"), F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        nxt = [[list(c) for c in ms] for ms in models]
-        for r in stats:
-            nxt[r["__s"]][r["__cell"]][r["__p"]] = (
-                int(r["__sum"]) // int(r["__n"])
-            )
-        models = nxt
-    return models

@@ -76,6 +76,7 @@ from .operators.star import (
     dedup_first_row,
 )
 from .sources.csv_ref import read_reference_csv, write_reference_csv
+from .streaming.source import run_finite_stream
 from .streaming.windows import (
     session_agg,
     sliding_agg,
@@ -1748,13 +1749,7 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped) — proving batch/stream unification against the oracle; the
     multi-batch late-drop semantics are pinned by
     tests/test_streaming.py."""
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    return streaming_tumbling_with_watermark(
-        spark, f"{sf_dir}/events.parquet", schema
-    )
+    return streaming_tumbling_with_watermark(spark, f"{sf_dir}/events.parquet")
 
 
 @q("q_stream_session")
@@ -1764,13 +1759,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-batch availableNow backfill (hence the shared oracle)."""
     from .streaming.windows import streaming_session_with_watermark
 
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    return streaming_session_with_watermark(
-        spark, f"{sf_dir}/events.parquet", schema
-    )
+    return streaming_session_with_watermark(spark, f"{sf_dir}/events.parquet")
 
 
 @q("q_stream_topk")
@@ -1959,18 +1948,11 @@ def q_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day", "bucket")
         .agg(F.max("rho").alias("reg"))
     )
-    qname = "tbl_" + os.path.basename(tmp)
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    regs_out = run_finite_stream(
+        regs, "tbl_" + os.path.basename(tmp), "complete"
     )
-    q.awaitTermination()
     stats = (
-        spark.table(qname)
-        .select(
+        regs_out.select(
             "day",
             F.expr(
                 "shiftleft(CAST(1 AS BIGINT), CAST(32 - reg AS INT))"
@@ -2046,16 +2028,10 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("cents_sum"),
     )
-    qname = "tbl_" + os.path.basename(tmp)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    agg_out = run_finite_stream(
+        agg, "tbl_" + os.path.basename(tmp), "complete"
     )
-    q.awaitTermination()
-    return spark.table(qname).select(
+    return agg_out.select(
         "segment",
         "event_type",
         F.col("n_events").cast("bigint").alias("n_events"),
@@ -2116,22 +2092,16 @@ def q_stream_hist_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    qname = "tbl_" + os.path.basename(tmp)
-    q_ = (
-        hist.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    hist_out = run_finite_stream(
+        hist, "tbl_" + os.path.basename(tmp), "complete"
     )
-    q_.awaitTermination()
     w_cum = (
         Window.partitionBy("day")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_tot = Window.partitionBy("day")
-    cum = spark.table(qname).select(
+    cum = hist_out.select(
         "day",
         "bucket",
         F.sum("c").over(w_cum).alias("cum"),
@@ -2200,21 +2170,15 @@ def q_stream_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("j", "slot")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    qname = "tbl_" + os.path.basename(tmp)
-    q_ = (
-        counters.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    counters_out = run_finite_stream(
+        counters, "tbl_" + os.path.basename(tmp), "complete"
     )
-    q_.awaitTermination()
     base = spark.read.parquet(src).select("user_id")
     probes = base.distinct().select("user_id", js).select(
         "user_id", "j", slot
     )
     est = (
-        probes.join(spark.table(qname), ["j", "slot"])
+        probes.join(counters_out, ["j", "slot"])
         .groupBy("user_id")
         .agg(F.min("c").alias("est_count"))
     )
@@ -2711,11 +2675,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator checks against a plain grouped aggregate oracle."""
     from .streaming.stateful import streaming_user_profiles
 
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint, event_type string, "
-        "value double, props string"
-    )
-    return streaming_user_profiles(spark, f"{sf_dir}/events.parquet", schema)
+    return streaming_user_profiles(spark, f"{sf_dir}/events.parquet")
 
 
 def _query_vector(spark: SparkSession, sf_dir: str) -> list[float]:
@@ -17256,23 +17216,14 @@ def semdedup_census(em: DataFrame, k: int, iters: int = 2) -> DataFrame:
     q_semdedup_cells docstring for semantics and the integer threshold
     form."""
     from .operators.kmeans import (
-        ARROW_ASSIGN_LITERAL_LIMIT,
-        assign_cells_arrow_int,
+        assign_cells_int,
         kmeans_fit_int,
-        nearest_cell_int,
         quantize_micro,
     )
 
     model = kmeans_fit_int(em, k=k, iters=iters)
     base = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    if len(model) * len(model[0]) > ARROW_ASSIGN_LITERAL_LIMIT:
-        assigned = assign_cells_arrow_int(
-            base, model, vec_col="__q", cell_col="cell"
-        )
-    else:
-        assigned = base.withColumn(
-            "cell", nearest_cell_int(F.col("__q"), model)
-        )
+    assigned = assign_cells_int(base, model, vec_col="__q", cell_col="cell")
     qv = cut_lineage(
         assigned.select(
             "vec_id",

@@ -3,15 +3,20 @@
 Both use the Structured Streaming micro-batch engine with watermarks
 bounding state retention:
 
-- ``streaming_interval_join``: clicks x purchases per user within a time
-  interval — state on both sides is purged once the watermark passes the
-  join window (the canonical funnel/attribution join).
+- ``streaming_interval_join`` (inner), ``_outer`` (left outer) and
+  ``_full`` (full outer): clicks x purchases per user within a time
+  interval.  One builder, ``_click_purchase_join``, makes the two
+  watermarked event streams and the interval join for any join type;
+  the three public functions differ only in the join type and their
+  projection.  State on both sides is purged once the watermark passes
+  the join window (the canonical funnel/attribution join).
 - ``streaming_dedup``: ``dropDuplicatesWithinWatermark`` keeps one row per
   id with state bounded by the watermark horizon (exactly-once-ish ingest
   hygiene for at-least-once sources).
 
-Run with availableNow + memory sink for the finite testdata; on a real
-cluster the same code runs continuously against kafka/delta.
+Each runs to completion through ``source.run_finite_stream``
+(availableNow + memory sink) on the finite testdata; on a real cluster
+the same code runs continuously against kafka/delta.
 """
 
 from __future__ import annotations
@@ -20,15 +25,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .source import event_stream as _event_stream
+from .source import run_finite_stream
 
 
-def streaming_interval_join(
-    spark: SparkSession,
-    events_path: str,
-    interval: str = "30 minutes",
-    query_name: str = "q_stream_join",
+def _click_purchase_join(
+    spark: SparkSession, events_path: str, interval: str, how: str
 ) -> DataFrame:
-    """Purchases within ``interval`` after a click, per user."""
+    """Clicks joined (``how``) to the same user's purchases landing within
+    ``interval`` after the click; both streams carry a 1-hour watermark."""
     clicks = (
         _event_stream(spark, events_path)
         .filter(F.col("event_type") == "click")
@@ -50,12 +54,27 @@ def streaming_interval_join(
         )
         .withWatermark("purchase_ts", "1 hour")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"interval {interval}")),
-        "inner",
+        & (
+            F.col("purchase_ts")
+            <= F.col("click_ts") + F.expr(f"interval {interval}")
+        ),
+        how,
+    )
+
+
+def streaming_interval_join(
+    spark: SparkSession,
+    events_path: str,
+    interval: str = "30 minutes",
+    query_name: str = "q_stream_join",
+) -> DataFrame:
+    """Purchases within ``interval`` after a click, per user."""
+    joined = _click_purchase_join(
+        spark, events_path, interval, "inner"
     ).select(
         "click_id",
         "purchase_id",
@@ -64,15 +83,7 @@ def streaming_interval_join(
         F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
         "purchase_value",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_finite_stream(joined, query_name, "append")
 
 
 def streaming_dedup(
@@ -96,15 +107,7 @@ def streaming_dedup(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_finite_stream(stream, query_name, "append")
 
 
 def streaming_interval_join_outer(
@@ -131,36 +134,8 @@ def streaming_interval_join_outer(
     and are deliberately NOT emitted.  The DuckDB oracle reproduces
     exactly that rule in batch SQL, making the eviction semantics
     themselves the thing the hash-check verifies."""
-    clicks = (
-        _event_stream(spark, events_path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _event_stream(spark, events_path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"interval {interval}")
-        ),
-        "left_outer",
+    joined = _click_purchase_join(
+        spark, events_path, interval, "left_outer"
     ).select(
         "click_id",
         "user_id",
@@ -169,15 +144,7 @@ def streaming_interval_join_outer(
         F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
         "purchase_value",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_finite_stream(joined, query_name, "append")
 
 
 def streaming_interval_join_full(
@@ -207,36 +174,8 @@ def streaming_interval_join_full(
     oracle reproduces BOTH eviction rules in batch SQL, so the
     hash-check certifies the full-outer state machine, not just that
     it ran."""
-    clicks = (
-        _event_stream(spark, events_path)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        _event_stream(spark, events_path)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"interval {interval}")
-        ),
-        "full_outer",
+    joined = _click_purchase_join(
+        spark, events_path, interval, "full_outer"
     ).select(
         "click_id",
         F.coalesce("user_id", "p_user_id").alias("user_id"),
@@ -245,12 +184,4 @@ def streaming_interval_join_full(
         F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
         "purchase_value",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_finite_stream(joined, query_name, "append")

@@ -1,5 +1,6 @@
 """Streaming source for the ``events`` table — single choke point mirroring
-``catalog.load_table``'s timestamp normalization.
+``catalog.load_table``'s timestamp normalization — and the one runner
+that takes a streaming frame over a finite input to completion.
 
 ``readStream`` needs an explicit schema, and the driver fixture has shipped
 ``ts`` in three physical shapes across regenerations: TIMESTAMP(NANOS)
@@ -7,6 +8,11 @@
 (Spark 4 infers TIMESTAMP_NTZ), and plain TIMESTAMP.  Probing the parquet
 footer via a one-off batch read keeps every streaming operator agnostic:
 downstream code always sees ``ts`` as TIMESTAMP (session tz pinned UTC).
+
+``run_finite_stream`` is the harness every ``q_stream_*`` operator
+shares: an availableNow trigger drains what the source holds now into a
+memory sink, and the sink's table is the result.  On a real cluster the
+same streaming frame runs under a continuous trigger into kafka/delta.
 """
 
 from __future__ import annotations
@@ -46,3 +52,20 @@ def event_stream(spark: SparkSession, events_path: str) -> DataFrame:
     if file_name is not None:
         reader = reader.option("pathGlobFilter", file_name)
     return reader.parquet(base_dir).withColumn("ts", ts_expr)
+
+
+def run_finite_stream(
+    stream: DataFrame, query_name: str, output_mode: str
+) -> DataFrame:
+    """Run ``stream`` over everything its source holds now (availableNow
+    trigger) into the memory sink ``query_name`` with ``output_mode``,
+    wait for it to finish, and return the sink's table."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream.sparkSession.table(query_name)

@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .source import event_stream, run_finite_stream
+
 OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -80,13 +82,10 @@ def _update_profile(
 def streaming_user_profiles(
     spark: SparkSession,
     events_path: str,
-    schema: str | None = None,  # kept for API compat; source probes the file
     query_name: str = "q_stream_stateful",
 ) -> DataFrame:
     """File stream -> per-user stateful profile, run to completion with
     availableNow, materialized through a memory sink."""
-    from .source import event_stream
-
     stream = (
         event_stream(spark, events_path)
         .withColumn("epoch", F.unix_timestamp("ts"))
@@ -99,12 +98,4 @@ def streaming_user_profiles(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_finite_stream(stream, query_name, "update")

@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.rounding import dsum
+from .source import event_stream, run_finite_stream
 
 
 def tumbling_agg(
@@ -82,7 +83,6 @@ def session_agg(
 def streaming_tumbling_with_watermark(
     spark,
     events_path: str,
-    schema=None,  # kept for API compat; source probes the file schema itself
     duration: str = "5 minutes",
     watermark: str = "10 minutes",
     query_name: str = "q_stream_watermark",
@@ -95,8 +95,6 @@ def streaming_tumbling_with_watermark(
     state (late events beyond it are dropped), availableNow becomes a
     real trigger, and the memory sink becomes kafka/delta.
     """
-    from .source import event_stream
-
     stream = (
         event_stream(spark, events_path)
         .withWatermark("ts", watermark)
@@ -112,15 +110,7 @@ def streaming_tumbling_with_watermark(
             "sum_value",
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_finite_stream(stream, query_name, "complete")
 
 
 def streaming_windowed_topk(
@@ -144,8 +134,6 @@ def streaming_windowed_topk(
     the serving query."""
     from pyspark.sql import Window
 
-    from .source import event_stream
-
     stream = (
         event_stream(spark, events_path)
         .withWatermark("ts", watermark)
@@ -157,15 +145,7 @@ def streaming_windowed_topk(
             "n_events",
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = spark.table(query_name)
+    state = run_finite_stream(stream, query_name, "complete")
     w = Window.partitionBy("win_start").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
@@ -184,7 +164,6 @@ def streaming_windowed_topk(
 def streaming_session_with_watermark(
     spark,
     events_path: str,
-    schema=None,  # kept for API compat; source probes the file schema itself
     gap: str = "5 minutes",
     watermark: str = "10 minutes",
     query_name: str = "q_stream_session",
@@ -193,8 +172,6 @@ def streaming_session_with_watermark(
     state per (session, user) — sessions close when the watermark passes
     their gap, so state is bounded by active sessions, not history.
     Same availableNow/memory-sink harness as the tumbling variant."""
-    from .source import event_stream
-
     stream = (
         event_stream(spark, events_path)
         .withWatermark("ts", watermark)
@@ -210,12 +187,4 @@ def streaming_session_with_watermark(
             "sum_value",
         )
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return run_finite_stream(stream, query_name, "complete")

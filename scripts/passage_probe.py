@@ -31,9 +31,7 @@ from java_etl_bi_generator_spark.operators.dedup import (  # noqa: E402
     duplicated_passages,
 )
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
-from java_etl_bi_generator_spark.sources.synthetic import (  # noqa: E402
-    SyntheticDocumentsDataSource,
-)
+from synthetic_tables import write_table  # noqa: E402
 
 BASE_DOCS = 5_000  # sf0.1 grain
 
@@ -41,20 +39,14 @@ BASE_DOCS = 5_000  # sf0.1 grain
 def main() -> None:
     factors = [int(a) for a in sys.argv[1:]] or [1, 10, 100]
     spark = get_spark(app_name="passage_probe")
-    spark.dataSource.register(SyntheticDocumentsDataSource)
     print("| docs | spans (rows) | detect+cut sec | hashed-key sec |")
     print("|---|---|---|---|")
     for f in factors:
         tmp = tempfile.mkdtemp(prefix=f"passage_probe_{f}x_")
         try:
-            (
-                spark.read.format("synthetic_documents")
-                .option("rows", BASE_DOCS * f)
-                .option("partitions", 32)
-                .load()
-                .write.parquet(os.path.join(tmp, "documents.parquet"))
+            docs = spark.read.parquet(
+                write_table(spark, tmp, "documents", BASE_DOCS * f)
             )
-            docs = spark.read.parquet(os.path.join(tmp, "documents.parquet"))
             n_spans = None
             best = {}
             for hashed in (False, True):

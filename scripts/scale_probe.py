@@ -23,13 +23,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pyspark.sql.functions as F  # noqa: E402
-
 from java_etl_bi_generator_spark.queries import registry  # noqa: E402
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
-from java_etl_bi_generator_spark.sources.synthetic import (  # noqa: E402
-    SyntheticEventsDataSource,
-)
+from synthetic_tables import write_table  # noqa: E402
 
 EVENT_PROBES = [
     "q_window_tumbling",
@@ -127,11 +123,6 @@ def main() -> None:
     qs = registry()
 
     if mode == "events":
-        from java_etl_bi_generator_spark.sources.synthetic import (
-            SyntheticEventsDataSource,
-        )
-
-        spark.dataSource.register(SyntheticEventsDataSource)
         volumes = [int(float(a)) for a in args] or [
             100_000, 1_000_000, 10_000_000,
         ]
@@ -139,35 +130,16 @@ def main() -> None:
         print("|" + "---|" * (len(EVENT_PROBES) + 2))
         for n in volumes:
             tmp = tempfile.mkdtemp(prefix=f"scale_probe_{n}_")
-            (
-                spark.read.format("synthetic_events")
-                .option("rows", n)
-                .option("partitions", 32)
-                .option("numUsers", max(1000, n // 100))
-                .load()
-                .withColumn("props", F.lit(None).cast("string"))
-                .write.parquet(os.path.join(tmp, "events.parquet"))
-            )
+            write_table(spark, tmp, "events", n, num_users=max(1000, n // 100))
             _probe(spark, qs, EVENT_PROBES, tmp, "events", n)
             shutil.rmtree(tmp, ignore_errors=True)
     elif mode == "documents":
-        from java_etl_bi_generator_spark.sources.synthetic import (
-            SyntheticDocumentsDataSource,
-        )
-
-        spark.dataSource.register(SyntheticDocumentsDataSource)
         volumes = [int(float(a)) for a in args] or [5_000, 50_000, 500_000]
         print("| docs | " + " | ".join(DOC_PROBES) + " | total |")
         print("|" + "---|" * (len(DOC_PROBES) + 2))
         for n in volumes:
             tmp = tempfile.mkdtemp(prefix=f"scale_probe_docs_{n}_")
-            (
-                spark.read.format("synthetic_documents")
-                .option("rows", n)
-                .option("partitions", 32)
-                .load()
-                .write.parquet(os.path.join(tmp, "documents.parquet"))
-            )
+            write_table(spark, tmp, "documents", n)
             _probe(spark, qs, DOC_PROBES, tmp, "documents", n)
             shutil.rmtree(tmp, ignore_errors=True)
     elif mode == "semdedup":
@@ -181,27 +153,13 @@ def main() -> None:
         import math
 
         from java_etl_bi_generator_spark.queries import semdedup_census
-        from java_etl_bi_generator_spark.sources.synthetic import (
-            SyntheticEmbeddingsDataSource,
-        )
-
-        spark.dataSource.register(SyntheticEmbeddingsDataSource)
         volumes = [int(float(a)) for a in args] or [50_000, 500_000]
         print("| vectors | k=sqrt(N) | train_s | census_s | cells | "
               "avg_cell | max_cell | skew | sum_sz2 | dropped | total_s |")
         print("|" + "---|" * 11)
         for n in volumes:
             tmp = tempfile.mkdtemp(prefix=f"scale_probe_sem_{n}_")
-            (
-                spark.read.format("synthetic_embeddings")
-                .option("rows", n)
-                .option("partitions", 32)
-                .load()
-                .write.parquet(os.path.join(tmp, "embeddings.parquet"))
-            )
-            em = spark.read.parquet(
-                os.path.join(tmp, "embeddings.parquet")
-            )
+            em = spark.read.parquet(write_table(spark, tmp, "embeddings", n))
             k = int(math.isqrt(n))
             t0 = time.time()
             census = semdedup_census(em, k=k, iters=2)
@@ -239,26 +197,12 @@ def main() -> None:
         from java_etl_bi_generator_spark.operators.kmeans import (
             pq_fit_int,
         )
-        from java_etl_bi_generator_spark.sources.synthetic import (
-            SyntheticEmbeddingsDataSource,
-        )
-
-        spark.dataSource.register(SyntheticEmbeddingsDataSource)
         volumes = [int(float(a)) for a in args] or [50_000, 500_000]
         print("| vectors | pq_train_s | ivfpq_train_s (coarse+residual) |")
         print("|" + "---|" * 3)
         for n in volumes:
             tmp = tempfile.mkdtemp(prefix=f"scale_probe_pq_{n}_")
-            (
-                spark.read.format("synthetic_embeddings")
-                .option("rows", n)
-                .option("partitions", 32)
-                .load()
-                .write.parquet(os.path.join(tmp, "embeddings.parquet"))
-            )
-            em = spark.read.parquet(
-                os.path.join(tmp, "embeddings.parquet")
-            )
+            em = spark.read.parquet(write_table(spark, tmp, "embeddings", n))
             t0 = time.time()
             pq_fit_int(em, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)
             t_pq = time.time() - t0
@@ -300,23 +244,12 @@ def main() -> None:
             _probe(spark, qs, STAR_PROBES, tmp, "star", n)
             shutil.rmtree(tmp, ignore_errors=True)
     else:
-        from java_etl_bi_generator_spark.sources.synthetic import (
-            SyntheticEmbeddingsDataSource,
-        )
-
-        spark.dataSource.register(SyntheticEmbeddingsDataSource)
         volumes = [int(float(a)) for a in args] or [50_000, 500_000]
         print("| vectors | " + " | ".join(EMB_PROBES) + " | total |")
         print("|" + "---|" * (len(EMB_PROBES) + 2))
         for n in volumes:
             tmp = tempfile.mkdtemp(prefix=f"scale_probe_emb_{n}_")
-            (
-                spark.read.format("synthetic_embeddings")
-                .option("rows", n)
-                .option("partitions", 32)
-                .load()
-                .write.parquet(os.path.join(tmp, "embeddings.parquet"))
-            )
+            write_table(spark, tmp, "embeddings", n)
             _probe(spark, qs, EMB_PROBES, tmp, "embeddings", n)
             shutil.rmtree(tmp, ignore_errors=True)
 

@@ -39,54 +39,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pyspark.sql.functions as F  # noqa: E402
-
 from java_etl_bi_generator_spark.queries import registry  # noqa: E402
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
-from java_etl_bi_generator_spark.sources.synthetic import (  # noqa: E402
-    SyntheticDocumentsDataSource,
-    SyntheticEmbeddingsDataSource,
-    SyntheticEventsDataSource,
-)
-from java_etl_bi_generator_spark.sources.synthetic_star import (  # noqa: E402
-    generate_star,
-)
-
-# sf0.1 fixture grains (shared with volume_sweep.py)
-BASE = {
-    "orders": 150_000,
-    "events": 100_000,
-    "documents": 5_000,
-    "embeddings": 5_000,
-}
+from synthetic_tables import write_sf01_multiple  # noqa: E402
 
 
 def _generate(spark, factor: int) -> str:
     tmp = tempfile.mkdtemp(prefix=f"volume_gate_{factor}x_")
-    generate_star(spark, tmp, BASE["orders"] * factor)
-    (
-        spark.read.format("synthetic_events")
-        .option("rows", BASE["events"] * factor)
-        .option("partitions", 32)
-        .option("numUsers", 200 * factor)
-        .load()
-        .withColumn("props", F.lit(None).cast("string"))
-        .write.parquet(os.path.join(tmp, "events.parquet"))
-    )
-    (
-        spark.read.format("synthetic_documents")
-        .option("rows", BASE["documents"] * factor)
-        .option("partitions", 32)
-        .load()
-        .write.parquet(os.path.join(tmp, "documents.parquet"))
-    )
-    (
-        spark.read.format("synthetic_embeddings")
-        .option("rows", BASE["embeddings"] * factor)
-        .option("partitions", 32)
-        .load()
-        .write.parquet(os.path.join(tmp, "embeddings.parquet"))
-    )
+    write_sf01_multiple(spark, tmp, factor)
     return tmp
 
 
@@ -123,9 +83,6 @@ def main() -> None:
         sys.exit(f"unknown queries: {unknown}")
 
     spark = get_spark(app_name="volume_gate")
-    for src in (SyntheticEventsDataSource, SyntheticDocumentsDataSource,
-                SyntheticEmbeddingsDataSource):
-        spark.dataSource.register(src)
     d1 = _generate(spark, 1)
     dF = _generate(spark, factor)
     print(f"generated 1x ({d1}) and {factor}x ({dF})", flush=True)

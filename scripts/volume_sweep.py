@@ -22,22 +22,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pyspark.sql.functions as F  # noqa: E402
-
 from java_etl_bi_generator_spark.queries import registry  # noqa: E402
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
-from java_etl_bi_generator_spark.sources.synthetic import (  # noqa: E402
-    SyntheticDocumentsDataSource,
-    SyntheticEmbeddingsDataSource,
-    SyntheticEventsDataSource,
-)
-from java_etl_bi_generator_spark.sources.synthetic_star import (  # noqa: E402
-    generate_star,
-)
-
-# sf0.1 fixture grains: lineitem 600k (orders 150k), events 100k,
-# documents 5k, embeddings 5k
-BASE = {"orders": 150_000, "events": 100_000, "documents": 5_000, "embeddings": 5_000}
+from synthetic_tables import write_sf01_multiple  # noqa: E402
 
 # Output-grain floors at the default 10x factor (round-4 verdict task 8):
 # time-grain analytics must produce a NON-TRIVIAL number of groups here,
@@ -79,34 +66,8 @@ def main() -> None:
     if unknown:  # a typo must not report a clean 0-query run
         sys.exit(f"unknown queries: {sorted(unknown)}")
     spark = get_spark(app_name="volume_sweep")
-    for src in (SyntheticEventsDataSource, SyntheticDocumentsDataSource,
-                SyntheticEmbeddingsDataSource):
-        spark.dataSource.register(src)
     tmp = tempfile.mkdtemp(prefix=f"volume_sweep_{factor}x_")
-    generate_star(spark, tmp, BASE["orders"] * factor)
-    (
-        spark.read.format("synthetic_events")
-        .option("rows", BASE["events"] * factor)
-        .option("partitions", 32)
-        .option("numUsers", 200 * factor)
-        .load()
-        .withColumn("props", F.lit(None).cast("string"))
-        .write.parquet(os.path.join(tmp, "events.parquet"))
-    )
-    (
-        spark.read.format("synthetic_documents")
-        .option("rows", BASE["documents"] * factor)
-        .option("partitions", 32)
-        .load()
-        .write.parquet(os.path.join(tmp, "documents.parquet"))
-    )
-    (
-        spark.read.format("synthetic_embeddings")
-        .option("rows", BASE["embeddings"] * factor)
-        .option("partitions", 32)
-        .load()
-        .write.parquet(os.path.join(tmp, "embeddings.parquet"))
-    )
+    write_sf01_multiple(spark, tmp, factor)
     print(f"generated all tables at {factor}x sf0.1 in {tmp}", flush=True)
 
     qs = registry()

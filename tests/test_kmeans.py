@@ -212,3 +212,20 @@ def test_pq_fit_fused_matches_independent_runs(spark, sf_dir):
         )
         independent = kmeans_fit_int(sub, k=k, iters=iters)
         assert fused[s] == independent, f"subspace {s} diverged"
+
+
+def test_trainers_arrow_branch_matches_literal_branch(
+    spark, sf_dir, monkeypatch
+):
+    """With the model-size limit at 0 every Lloyd round assigns through
+    the Arrow argmin; both trainers must still return the models the
+    default (literal-plan) branch trains."""
+    from java_etl_bi_generator_spark.operators import kmeans
+    from java_etl_bi_generator_spark.operators.kmeans import pq_fit_int
+
+    em = load_table(spark, sf_dir, "embeddings")
+    km_literal = kmeans_fit_int(em, k=8, iters=2)
+    pq_literal = pq_fit_int(em, m=4, k=16, iters=2)
+    monkeypatch.setattr(kmeans, "ARROW_ASSIGN_LITERAL_LIMIT", 0)
+    assert kmeans_fit_int(em, k=8, iters=2) == km_literal
+    assert pq_fit_int(em, m=4, k=16, iters=2) == pq_literal
