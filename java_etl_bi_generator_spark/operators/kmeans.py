@@ -24,18 +24,14 @@ thin entry points over it.
 
 Scale shape — the part that matters at 100 TB:
 
-- The **model** (m × k × subdim micro-units) lives on the driver and is
-  folded into the plan as one literal table per subspace and iteration
-  (``bigint_literal``).  k ≤ a few thousand and dim ≤ a few thousand ⇒
-  at most a few MB of literals — the standard "broadcast the model,
+- The **model** (m × k × subdim micro-units) lives on the driver and
+  ships to workers in the task closure.  k ≤ a few thousand and dim ≤ a
+  few thousand ⇒ at most a few MB — the standard "broadcast the model,
   shuffle only the sufficient statistics" layout.
-- **Assignment is a pure map** (``assign_cells_int``): per row,
-  squared-L2 to each literal centroid via ``aggregate(zip_with(...))``
-  higher-order functions (JVM-side, no UDF), argmin via ``array_min``
-  over ``struct(dist, idx)`` (struct ordering ⇒ ties break to the
-  lowest index, deterministically).  No join, no shuffle.  Past
-  ``ARROW_ASSIGN_LITERAL_LIMIT`` k×subdim components the model ships in
-  the task closure instead (Arrow argmin, bit-identical).
+- **Assignment is a pure map** (``assign_codes_int``): each Arrow batch
+  runs one exact int64 matmul + argmin per codebook (ties to the lowest
+  index), all m codebooks in one ``mapInPandas`` pass.  No join, no
+  shuffle.  A batch whose arithmetic could leave int64 raises.
 - **Update shuffles only m × k × subdim rows**: ``posexplode`` the
   vector, partial-aggregate ``sum(v), count`` per (cell of the
   coordinate's subspace, coordinate) map-side, final combine is
@@ -51,6 +47,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..functions.vectors import as_double_array
 
@@ -71,17 +68,14 @@ def quantize_micro(vec_col: Column | str) -> Column:
 
 def bigint_literal(values: list[int] | list[list[int]]) -> Column:
     """Literal ``array<bigint>`` of a list of ints — or
-    ``array<array<bigint>>`` of a list of int lists (a centroid or
-    lookup table) — built from ONE parsed SQL string.  Building every
-    component as its own ``F.lit(..).cast(..)`` Column costs one py4j
-    round-trip per element and a literal tree of the same size for the
-    analyzer to walk on every job; for the PQ trainer (m·k·subdim
-    literals rebuilt each Lloyd round) that construction+analysis
-    overhead was the query's wall clock (q_pq_train_sampled: 12.5 s of
-    a 14 s warm run spent in pq_fit_int driving 3 tiny jobs —
-    OPTIMIZATION_r11.md).  One ``F.expr`` parse hands the whole value
-    to the JVM at once; the values, types and nullability are those of
-    the per-element form."""
+    ``array<array<bigint>>`` of a list of int lists (an ADC lookup,
+    residual or query table) — built from ONE parsed SQL string.
+    Building every component as its own ``F.lit(..).cast(..)`` Column
+    costs one py4j round-trip per element and a literal tree of the
+    same size for the analyzer to walk on every job
+    (OPTIMIZATION_r11.md); one ``F.expr`` parse hands the whole value
+    to the JVM at once, with the values, types and nullability of the
+    per-element form."""
 
     def sql(v) -> str:
         if isinstance(v, (list, tuple)):
@@ -102,124 +96,70 @@ def sq_dist_int(vec: Column, centroid: list[int]) -> Column:
     )
 
 
-def _nearest_cands(vec: Column, centroids: list[list[int]]) -> Column:
-    """array<struct<d,i>> of (exact bigint squared L2, centroid index)
-    — the shared candidate builder: a ``transform`` loop over the
-    one-literal centroid table instead of k unrolled distance subtrees
-    (identical values, types and struct-min tie-break; the arithmetic
-    is the same zip_with/aggregate fold per centroid)."""
-    tbl = bigint_literal(centroids)
-    k = len(centroids)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda ci: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.element_at(tbl, ci + F.lit(1)),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            ci.alias("i"),
-        ),
-    )
-
-
-def nearest_cell_int(
-    vec_col: Column | str, centroids: list[list[int]]
-) -> Column:
-    """Index of the nearest integer centroid by exact squared L2; ties
-    deterministically to the lower index (struct min ordering).  Pass a
-    raw embedding by NAME (quantized internally) or an
-    already-quantized ``array<bigint>`` Column."""
-    v = quantize_micro(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.array_min(_nearest_cands(v, centroids))["i"]
-
-
-def nearest_cell_int_struct(
-    vec_col: Column | str, centroids: list[list[int]]
-) -> Column:
-    """``struct(d, i)`` of the nearest integer centroid — the exact
-    squared L2 AND the argmin index from one fold (ties to the lower
-    index via struct-min, like nearest_cell_int).  Product quantization
-    consumes both fields: ``i`` is the code, ``d`` the per-subspace
-    quantization error."""
-    v = quantize_micro(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.array_min(_nearest_cands(v, centroids))
-
-
-# Model-size switch between the two exact assignment paths: the
-# literal-plan form (nearest_cell_int — zero Python, whole-stage
-# codegen) is unbeatable while the k×dim literal count stays small, but
-# Catalyst's analysis + codegen cost grows with the literal count and
-# measured 165 s to TRAIN k=223/dim=64 on 50k vectors (round-7 SemDeDup
-# probe, SCALING.md) — the k~sqrt(N) regime needs the Arrow path below.
-ARROW_ASSIGN_LITERAL_LIMIT = 4096  # k*dim above this → Arrow argmin
-
-
-def assign_cells_arrow_int(
+def assign_codes_int(
     df: DataFrame,
-    centroids: list[list[int]],
+    codebooks: list[list[list[int]]],
     vec_col: str,
-    cell_col: str = "cell",
+    code_cols: list[str],
+    dist_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Exact argmin assignment for LARGE k (the k~sqrt(N) SemDeDup /
-    IVF regime): the k×dim micro-unit model ships to workers in the
-    task closure (a few MB even at k·dim ~ 10⁶ — the standard
-    "broadcast the model" layout), and each Arrow batch computes
-    ``argmin_c(−2·v·c + ‖c‖²)`` as ONE int64 matmul + argmin.  All
-    arithmetic is exact int64 (micro-unit components ≤ ~2e6, dim ≤ a
-    few thousand → |dot| ≤ ~1e15, inside int64) and ``np.argmin``
-    returns the FIRST minimum, matching nearest_cell_int's struct-min
-    ties-to-lowest-index — so the two paths are bit-identical
-    (tests/test_kmeans.py pins this).  ``vec_col`` must already be
-    array<bigint> micro-units (quantize_micro)."""
+    """``df`` plus one int code column per codebook: codebook s assigns
+    the s-th contiguous slice of ``vec_col`` (an array<bigint> of
+    micro-units, see quantize_micro) to its nearest centroid by exact
+    squared L2, ties to the lowest index (``np.argmin`` returns the
+    first minimum).  One codebook is plain k-means assignment; m
+    codebooks are a product quantizer's encode, all m in one pass.
+    ``dist_cols`` names optional bigint columns for each code's exact
+    squared L2, ‖v_s‖² + min_c(‖c‖² − 2·v_s·c).
+
+    The model ships to workers in the task closure (the "broadcast the
+    model" layout: a few MB even at k·dim ~ 10⁶) and each Arrow batch
+    runs one int64 matmul + argmin per codebook.  Every product and
+    partial sum is bounded by subdim·(max|v| + max|c|)², so a batch
+    past 2⁶³ raises ``OverflowError`` before any arithmetic instead of
+    returning wrong codes."""
     import numpy as np
-    import pandas as pd  # noqa: F401  (mapInPandas contract)
 
-    C = np.asarray(centroids, dtype=np.int64)  # k × dim
-    cc = (C * C).sum(axis=1)  # ‖c‖², k
+    books = [np.asarray(cb, dtype=np.int64) for cb in codebooks]  # k × subdim
+    subdim = books[0].shape[1]
+    cmax = max(max(-int(C.min()), int(C.max())) for C in books)
 
-    out_fields = df.schema.fields
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields]
-        + [f"`{cell_col}` int"]
+    def check(vmax: int) -> None:
+        if subdim * (vmax + cmax) ** 2 >= 2**63:
+            raise OverflowError(
+                f"assign_codes_int: subdim {subdim} x (max|v| {vmax} + "
+                f"max|c| {cmax})^2 exceeds int64"
+            )
+
+    check(0)
+    norms = [(C * C).sum(axis=1) for C in books]  # ‖c‖², k per codebook
+    dist_cols = dist_cols or []
+    schema = StructType(
+        df.schema.fields
+        + [StructField(c, IntegerType()) for c in code_cols]
+        + [StructField(c, LongType()) for c in dist_cols]
     )
 
     def _assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
-                yield pdf.assign(**{cell_col: []})
+                yield pdf.assign(**{c: [] for c in code_cols + dist_cols})
                 continue
             V = np.array(pdf[vec_col].tolist(), dtype=np.int64)  # B × dim
-            # ‖v‖² is constant per row — drop it from the argmin
-            d = cc[None, :] - 2 * (V @ C.T)  # B × k, exact int64
+            check(max(-int(V.min()), int(V.max())))
             pdf = pdf.copy()
-            pdf[cell_col] = np.argmin(d, axis=1).astype("int32")
+            rows = np.arange(len(pdf))
+            for s, (C, cc) in enumerate(zip(books, norms)):
+                Vs = V[:, s * subdim : (s + 1) * subdim]
+                # ‖v‖² is constant per row, so the argmin leaves it out
+                d = cc[None, :] - 2 * (Vs @ C.T)  # B × k
+                code = np.argmin(d, axis=1)
+                pdf[code_cols[s]] = code.astype("int32")
+                if dist_cols:
+                    pdf[dist_cols[s]] = (Vs * Vs).sum(axis=1) + d[rows, code]
             yield pdf
 
-    return df.mapInPandas(_assign, schema=out_schema)
-
-
-
-
-def assign_cells_int(
-    df: DataFrame,
-    centroids: list[list[int]],
-    vec_col: str,
-    cell_col: str = "cell",
-) -> DataFrame:
-    """``df`` plus ``cell_col``, the index of each row's nearest integer
-    centroid.  The path is chosen by model size: the literal plan
-    (nearest_cell_int) up to ``ARROW_ASSIGN_LITERAL_LIMIT`` k×dim
-    components, the Arrow argmin (assign_cells_arrow_int) past it.  Both
-    are exact and bit-identical, so the choice never changes a result.
-    ``vec_col`` must already be array<bigint> micro-units."""
-    if len(centroids) * len(centroids[0]) > ARROW_ASSIGN_LITERAL_LIMIT:
-        return assign_cells_arrow_int(df, centroids, vec_col, cell_col)
-    return df.withColumn(cell_col, nearest_cell_int(F.col(vec_col), centroids))
+    return df.mapInPandas(_assign, schema=schema)
 
 
 def _lloyd_int(
@@ -235,9 +175,10 @@ def _lloyd_int(
     """The one Lloyd loop: m × k × subdim micro-unit centroids, one
     codebook per contiguous subspace slice (m=1 is plain k-means).
     Seeds are the first k vectors in (md5(id), id) order, sliced per
-    subspace.  Each round assigns every subspace (assign_cells_int),
-    shuffles one sum/count row per (cell, coordinate) and floor-divides
-    on the driver; empty cells keep their centroid."""
+    subspace.  Each round assigns every subspace in one pass
+    (assign_codes_int), shuffles one sum/count row per (cell,
+    coordinate) and floor-divides on the driver; empty cells keep their
+    centroid."""
     qcol = F.col(vec_col) if pre_quantized else quantize_micro(vec_col)
     seeds = (
         embeddings.select(
@@ -260,16 +201,6 @@ def _lloyd_int(
         for s in range(m)
     ]
     vecs = embeddings.select(qcol.alias("__v"))
-    subs = ["__v"]
-    if m > 1:
-        subs = [f"__v{s}" for s in range(m)]
-        vecs = vecs.select(
-            "__v",
-            *[
-                F.slice("__v", s * subdim + 1, subdim).alias(sub)
-                for s, sub in enumerate(subs)
-            ],
-        )
     cells = [f"__c{s}" for s in range(m)]
     # the cell of coordinate __pos is the one of its subspace (m=1 skips
     # the array lookup); the driver splits __pos back into (subspace,
@@ -278,9 +209,7 @@ def _lloyd_int(
         F.array(*cells), F.expr(f"CAST(__pos div {subdim} AS INT)") + 1
     )
     for _ in range(iters):
-        assigned = vecs
-        for s, sub in enumerate(subs):
-            assigned = assign_cells_int(assigned, models[s], sub, cells[s])
+        assigned = assign_codes_int(vecs, models, "__v", cells)
         stats = (
             assigned.select(*cells, F.posexplode("__v").alias("__pos", "__x"))
             .groupBy(cell.alias("__cell"), "__pos")

@@ -2744,30 +2744,25 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize to micro-units, distances are exact bigint Σ(xi−ci)², means
     are floor-divided integer centroids — so three Lloyd rounds produce
     bit-identical models on Spark and on the DuckDB oracle (which unrolls
-    the same three rounds in SQL).  Per iteration the model (k×dim int
-    literals) rides the plan and only k×dim sufficient-statistic rows
-    shuffle; assignment is a pure map.  Output: per-cell sizes + the
+    the same three rounds in SQL).  Per iteration the k×dim model ships
+    in the task closure and only k×dim sufficient-statistic rows
+    shuffle; assignment (with each vector's exact distance to its
+    centroid) is one Arrow map.  Output: per-cell sizes + the
     EXACT within-cell squared-distance total in micro-units² (the
     quantity Lloyd's monotonically decreases) — DECIMAL(38,0)
     accumulation internally, BIGINT on the wire (all-integer columns so
     no cross-engine DECIMAL canonicalization enters the value hash)."""
     from .operators.kmeans import (
+        assign_codes_int,
         kmeans_fit_int,
-        nearest_cell_int,
         quantize_micro,
-        sq_dist_int,
     )
 
     em = T(spark, sf_dir, "embeddings")
     model = kmeans_fit_int(em, k=8, iters=3)
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    assigned = qv.withColumn("cell", nearest_cell_int(F.col("__q"), model))
-    dist_cols = [
-        F.when(F.col("cell") == i, sq_dist_int(F.col("__q"), c))
-        for i, c in enumerate(model)
-    ]
     return (
-        assigned.withColumn("__d", F.coalesce(*dist_cols))
+        assign_codes_int(qv, [model], "__q", ["cell"], ["__d"])
         .groupBy(F.col("cell").cast("bigint").alias("cell"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
@@ -2796,8 +2791,8 @@ def q_vector_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``df.write.partitionBy(cell)``), that pruning happens in file
     metadata."""
     from .operators.kmeans import (
+        assign_codes_int,
         kmeans_fit_int,
-        nearest_cell_int,
         quantize_micro,
     )
 
@@ -2810,8 +2805,11 @@ def q_vector_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, c in enumerate(model)
     )
     probed = [i for _, i in scored[:3]]
-    cand = em.withColumn(
-        "cell", nearest_cell_int(quantize_micro("embedding"), model)
+    cand = assign_codes_int(
+        em.withColumn("__q", quantize_micro("embedding")),
+        [model],
+        "__q",
+        ["cell"],
     ).filter(F.col("cell").isin(probed))
     return brute_force_topk(cand, query, k=10)
 
@@ -11541,7 +11539,7 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     split should not separate, and the input a whitening decision
     needs.  The distributed shape is the Arrow ESCAPE HATCH done
     exactly: each Arrow batch computes its int64 Gram partial VᵀV (one
-    matmul over micro-quantized components — the assign_cells_arrow_int
+    matmul over micro-quantized components — the assign_codes_int
     discipline; |x|≤2e6, dim 64, ≤10k rows/batch keeps every cell
     inside int64), partials collapse by (i,j) key in DECIMAL(38,0),
     and cov_ij = (n·G_ij − S_i·S_j) / (n²·1e12) is exact integers into
@@ -17216,14 +17214,14 @@ def semdedup_census(em: DataFrame, k: int, iters: int = 2) -> DataFrame:
     q_semdedup_cells docstring for semantics and the integer threshold
     form."""
     from .operators.kmeans import (
-        assign_cells_int,
+        assign_codes_int,
         kmeans_fit_int,
         quantize_micro,
     )
 
     model = kmeans_fit_int(em, k=k, iters=iters)
     base = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    assigned = assign_cells_int(base, model, vec_col="__q", cell_col="cell")
+    assigned = assign_codes_int(base, [model], "__q", ["cell"])
     qv = cut_lineage(
         assigned.select(
             "vec_id",
@@ -18497,20 +18495,20 @@ def _pq_encoded(
 ) -> tuple[DataFrame, list, int]:
     """(encoded frame with code0..code{M-1} + per-subspace err cols,
     models, subdim) — the shared build for both PQ queries.  The encode
-    itself is a pure map over literal centroids and is rebuilt per call
+    itself is one Arrow map (assign_codes_int) and is rebuilt per call
     (DataFrames are session-bound); only the TRAINING memoizes."""
-    from .operators.kmeans import nearest_cell_int_struct, quantize_micro
+    from .operators.kmeans import assign_codes_int, quantize_micro
 
     models, subdim = _pq_models(em, cache_key=cache_key)
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    cols = [F.col("vec_id")]
-    for s in range(_PQ_M):
-        st = nearest_cell_int_struct(
-            F.slice(F.col("__q"), s * subdim + 1, subdim), models[s]
-        )
-        cols.append(st["i"].cast("int").alias(f"code{s}"))
-        cols.append(st["d"].cast("bigint").alias(f"__err{s}"))
-    return qv.select(*cols), models, subdim
+    enc = assign_codes_int(
+        qv,
+        models,
+        "__q",
+        [f"code{s}" for s in range(_PQ_M)],
+        [f"__err{s}" for s in range(_PQ_M)],
+    )
+    return enc, models, subdim
 
 
 _IVFPQ_COARSE_K = 8
@@ -18525,38 +18523,47 @@ def _ivfpq_index(
     q_ivfpq_topk and q_ivfpq_recall share ONE training per corpus per
     process instead of re-running it (round-7 verdict task 3).  Both
     models are plain integer lists — deterministic, session-independent."""
-    from .operators.kmeans import (
-        bigint_literal,
-        kmeans_fit_int,
-        nearest_cell_int,
-        pq_fit_int,
-        quantize_micro,
-    )
+    from .operators.kmeans import kmeans_fit_int, pq_fit_int
 
     if cache_key is not None and cache_key in _IVFPQ_INDEX_CACHE:
         return _IVFPQ_INDEX_CACHE[cache_key]
     coarse = kmeans_fit_int(em, k=_IVFPQ_COARSE_K, iters=2)
-    qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    coarse_lit = bigint_literal(coarse)
-    rv = cut_lineage(
-        qv.withColumn("cell", nearest_cell_int(F.col("__q"), coarse))
-        .withColumn(
-            "__r",
-            F.zip_with(
-                F.col("__q"),
-                F.element_at(coarse_lit, F.col("cell") + 1),
-                lambda x, y: x - y,
-            ),
-        )
-        .select("vec_id", F.col("__r").alias("embedding"))
-    )
     models = pq_fit_int(
-        rv, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS, pre_quantized=True
+        _coarse_residuals(em, coarse),
+        m=_PQ_M,
+        k=_PQ_K,
+        iters=_PQ_ITERS,
+        vec_col="__r",
+        pre_quantized=True,
     )
     out = (coarse, models)
     if cache_key is not None:
         _IVFPQ_INDEX_CACHE[cache_key] = out
     return out
+
+
+def _coarse_residuals(em: DataFrame, coarse: list) -> DataFrame:
+    """(vec_id, cell, __r): each vector's coarse cell and its exact
+    integer residual v − coarse[cell] in micro-units, lineage-cut — the
+    input of both the residual PQ training and the IVF-PQ encode."""
+    from .operators.kmeans import (
+        assign_codes_int,
+        bigint_literal,
+        quantize_micro,
+    )
+
+    qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
+    return cut_lineage(
+        assign_codes_int(qv, [coarse], "__q", ["cell"]).select(
+            "vec_id",
+            "cell",
+            F.zip_with(
+                F.col("__q"),
+                F.element_at(bigint_literal(coarse), F.col("cell") + 1),
+                lambda x, y: x - y,
+            ).alias("__r"),
+        )
+    )
 
 
 @q("q_maxsim_late_interaction")
@@ -18615,10 +18622,9 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_s[code_s]‖² in micro-unit bigints.  The compressed representation
     behind q_pq_adc_topk — 4 bytes/vector versus 512, the memory step
     that makes billion-vector ANN fit RAM.  Scale shape: M small Lloyd
-    runs (k×subdim sufficient-stat shuffles), then encode is a pure
-    map with M·k literal centroids (k·subdim = 256 literals per
-    subspace — the literal-plan regime; the Arrow argmin path takes
-    over past ARROW_ASSIGN_LITERAL_LIMIT).  The DuckDB oracle replays
+    runs (k×subdim sufficient-stat shuffles), then encode is one Arrow
+    map that assigns all M subspaces and their exact errors per batch
+    (operators/kmeans.py assign_codes_int).  The DuckDB oracle replays
     all four trainings as independent prefixed CTE chains over rebased
     subspace slices."""
     from functools import reduce
@@ -18730,9 +18736,8 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operator import add
 
     from .operators.kmeans import (
+        assign_codes_int,
         bigint_literal,
-        nearest_cell_int,
-        nearest_cell_int_struct,
         quantize_micro,
     )
 
@@ -18741,33 +18746,11 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse, models = _ivfpq_index(em, cache_key=sf_dir)
     dim = len(coarse[0])
     subdim = dim // _PQ_M
-    qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    coarse_lit = bigint_literal(coarse)
-    rv = cut_lineage(
-        qv.withColumn("cell", nearest_cell_int(F.col("__q"), coarse))
-        .withColumn(
-            "__r",
-            F.zip_with(
-                F.col("__q"),
-                F.element_at(coarse_lit, F.col("cell") + 1),
-                lambda x, y: x - y,
-            ),
-        )
-        .select("vec_id", "cell", "__r")
-    )
-    enc = rv.select(
-        "vec_id",
-        "cell",
-        *[
-            nearest_cell_int_struct(
-                F.slice(F.col("__r"), s * subdim + 1, subdim), models[s]
-            )["i"].cast("int").alias(f"code{s}")
-            for s in range(_PQ_M)
-        ],
-    )
     q_micro = [
         int(x)
-        for x in qv.filter(F.col("vec_id") == 0).first()["__q"]
+        for x in em.filter(F.col("vec_id") == 0)
+        .select(quantize_micro("embedding").alias("__q"))
+        .first()["__q"]
     ]
     probed = [
         i
@@ -18809,9 +18792,12 @@ def _ivfpq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = F.when(F.col("cell") == probed[0], dist_for(probed[0]))
     for c in probed[1:]:
         dist = dist.when(F.col("cell") == c, dist_for(c))
-    return enc.filter(
+    cand = _coarse_residuals(em, coarse).filter(
         F.col("cell").isin([int(c) for c in probed])
         & (F.col("vec_id") != 0)
+    )
+    return assign_codes_int(
+        cand, models, "__r", [f"code{s}" for s in range(_PQ_M)]
     ).select("vec_id", dist.cast("bigint").alias("adc_dist"))
 
 
@@ -18983,8 +18969,8 @@ def q_pq_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from operator import add
 
     from .operators.kmeans import (
+        assign_codes_int,
         bigint_literal,
-        nearest_cell_int_struct,
         pq_fit_int,
         quantize_micro,
         sq_dist_int,
@@ -18996,14 +18982,8 @@ def q_pq_train_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     models = pq_fit_int(samp, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)
     subdim = len(models[0][0])
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    enc = qv.select(
-        "vec_id",
-        *[
-            nearest_cell_int_struct(
-                F.slice(F.col("__q"), s * subdim + 1, subdim), models[s]
-            )["i"].cast("int").alias(f"code{s}")
-            for s in range(_PQ_M)
-        ],
+    enc = assign_codes_int(
+        qv, models, "__q", [f"code{s}" for s in range(_PQ_M)]
     )
     q_micro = qv.filter(F.col("vec_id") == 0).first()["__q"]
     adc = [

@@ -10,8 +10,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from java_etl_bi_generator_spark.operators.kmeans import (
+    assign_codes_int,
     kmeans_fit_int,
-    nearest_cell_int,
+    quantize_micro,
 )
 from java_etl_bi_generator_spark.operators.similarity import (
     brute_force_topk,
@@ -63,8 +64,11 @@ def test_ivf_recall_on_trained_cells(spark, emb):
     """Full lifecycle: train k-means, assign, probe — the index built
     with no prior labels must match the planted-cell quality."""
     model = kmeans_fit_int(emb, k=8, iters=3)
-    assigned = emb.withColumn(
-        "cell", nearest_cell_int("embedding", model)
+    assigned = assign_codes_int(
+        emb.withColumn("__q", quantize_micro("embedding")),
+        [model],
+        "__q",
+        ["cell"],
     ).cache()
     recalls = []
     for _, qv in _queries(emb).items():

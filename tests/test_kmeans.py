@@ -11,10 +11,16 @@ import pytest
 
 from java_etl_bi_generator_spark.catalog import load_table
 from java_etl_bi_generator_spark.operators.kmeans import (
+    assign_codes_int,
     kmeans_fit_int,
-    nearest_cell_int,
     quantize_micro,
 )
+
+
+def _cells(df, model):
+    """``df`` plus ``cell``, each row's nearest centroid of ``model``."""
+    q = df.withColumn("__q", quantize_micro("embedding"))
+    return assign_codes_int(q, [model], "__q", ["cell"])
 
 
 def _planted(spark, n_per=40, dim=8):
@@ -44,13 +50,9 @@ def test_kmeans_deterministic(spark):
 
 
 def test_nearest_cell_tie_breaks_low_index(spark):
-    # equidistant centroids -> lowest index wins (struct ordering)
+    # equidistant centroids -> lowest index wins (np.argmin's first minimum)
     df = spark.createDataFrame([([0.0, 0.0],)], "embedding array<double>")
-    cell = df.select(
-        nearest_cell_int(
-            quantize_micro("embedding"), [[1_000_000, 0], [-1_000_000, 0]]
-        ).alias("c")
-    ).first()["c"]
+    cell = _cells(df, [[1_000_000, 0], [-1_000_000, 0]]).first()["cell"]
     assert cell == 0
 
 
@@ -70,9 +72,7 @@ def test_empty_cell_keeps_centroid(spark):
     seeds = [[(i % 2) * 100_000_000, 0] for i in seed_ids]
     sizes = {
         r["cell"]: r["count"]
-        for r in df.select(
-            nearest_cell_int(quantize_micro("embedding"), model).alias("cell")
-        ).groupBy("cell").count().collect()
+        for r in _cells(df, model).groupBy("cell").count().collect()
     }
     empty = [c for c in range(3) if c not in sizes]
     assert empty, "3 cells over 2 distinct points must leave one empty"
@@ -121,9 +121,7 @@ def test_kmeans_int_recovers_planted_clusters(spark):
     centroids sit within jitter range of the planted centers."""
     df = _planted(spark)
     model = kmeans_fit_int(df, k=3, iters=4)
-    assigned = df.withColumn(
-        "cell", nearest_cell_int(quantize_micro("embedding"), model)
-    )
+    assigned = _cells(df, model)
     m = (
         assigned.groupBy("planted")
         .agg(F.countDistinct("cell").alias("ncells"),
@@ -148,16 +146,11 @@ def test_kmeans_int_partition_invariant(spark):
 
 
 def test_arrow_assign_matches_literal_path(spark):
-    """The two exact assignment paths — literal-plan nearest_cell_int
-    (small k) and the Arrow int64-matmul argmin (the k~sqrt(N) regime,
-    round-7 SemDeDup probe fix) — must be bit-identical, including
-    equal-distance ties (both take the LOWEST index: struct-min vs
-    np.argmin first-minimum)."""
-    import pyspark.sql.functions as F
-
-    from java_etl_bi_generator_spark.operators.kmeans import (
-        assign_cells_arrow_int,
-    )
+    """assign_codes_int returns the cells the retired literal-plan
+    argmin (struct-min over (dist, idx)) returned on these rows,
+    including the duplicate-centroid tie, which resolves to the LOWEST
+    index; its distance column is the exact squared L2 to that cell."""
+    import math
 
     rows = [
         (1, [0.1, 0.2, 0.3]),
@@ -169,26 +162,40 @@ def test_arrow_assign_matches_literal_path(spark):
     df = spark.createDataFrame(
         rows, "vec_id int, embedding array<double>"
     ).select("vec_id", quantize_micro("embedding").alias("__q"))
-    # centroids 0 and 1 are mirror images so vector 4/5 ties exist
     model = [
         [500000, 500000, 500000],
         [500000, 500000, 500000],   # exact duplicate → every row ties 0/1
         [-1000000, 1000000, 1000000],
     ]
-    lit = {
-        r["vec_id"]: r["cell"]
-        for r in df.withColumn(
-            "cell", nearest_cell_int(F.col("__q"), model)
-        ).collect()
+    out = {
+        r["vec_id"]: (r["cell"], r["d"])
+        for r in assign_codes_int(df, [model], "__q", ["cell"], ["d"])
+        .collect()
     }
-    arrow = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells_arrow_int(
-            df, model, vec_col="__q", cell_col="cell"
-        ).collect()
+    assert {i: c for i, (c, _) in out.items()} == {
+        1: 0, 2: 0, 3: 2, 4: 0, 5: 0
     }
-    assert lit == arrow
-    assert arrow[4] == 0  # the duplicate-centroid tie resolves low
+    for i, v in rows:
+        q = [math.floor(x * 1e6 + 0.5) for x in v]
+        cell, d = out[i]
+        assert d == sum((a - b) ** 2 for a, b in zip(q, model[cell]))
+
+
+def test_assign_codes_int_raises_on_int64_overflow(spark):
+    """Inputs whose squared L2 can leave int64 raise, as the exact
+    bigint distance does under ANSI, instead of returning cells from
+    wrapped-around arithmetic.  Large model values are caught before
+    any job, large vector values per Arrow batch."""
+    df = spark.createDataFrame(
+        [(1, [4e6, 0.0]), (2, [0.0, 0.0])],
+        "vec_id int, embedding array<double>",
+    ).select("vec_id", quantize_micro("embedding").alias("__q"))
+    with pytest.raises(Exception, match="exceeds int64"):
+        assign_codes_int(
+            df, [[[0, 0], [4_000_000_000_000, 0]]], "__q", ["cell"]
+        ).collect()
+    with pytest.raises(Exception, match="exceeds int64"):
+        assign_codes_int(df, [[[0, 0], [1, 0]]], "__q", ["cell"]).collect()
 
 
 def test_pq_fit_fused_matches_independent_runs(spark, sf_dir):
@@ -214,18 +221,20 @@ def test_pq_fit_fused_matches_independent_runs(spark, sf_dir):
         assert fused[s] == independent, f"subspace {s} diverged"
 
 
-def test_trainers_arrow_branch_matches_literal_branch(
-    spark, sf_dir, monkeypatch
-):
-    """With the model-size limit at 0 every Lloyd round assigns through
-    the Arrow argmin; both trainers must still return the models the
-    default (literal-plan) branch trains."""
-    from java_etl_bi_generator_spark.operators import kmeans
+def test_trainers_arrow_branch_matches_literal_branch(spark, sf_dir):
+    """Both trainers return, on the sf0.001 fixture, the models the
+    retired literal-plan assignment trained (md5 of the JSON model)."""
+    import json
+
     from java_etl_bi_generator_spark.operators.kmeans import pq_fit_int
 
+    def md5(model):
+        return hashlib.md5(json.dumps(model).encode()).hexdigest()
+
     em = load_table(spark, sf_dir, "embeddings")
-    km_literal = kmeans_fit_int(em, k=8, iters=2)
-    pq_literal = pq_fit_int(em, m=4, k=16, iters=2)
-    monkeypatch.setattr(kmeans, "ARROW_ASSIGN_LITERAL_LIMIT", 0)
-    assert kmeans_fit_int(em, k=8, iters=2) == km_literal
-    assert pq_fit_int(em, m=4, k=16, iters=2) == pq_literal
+    assert md5(kmeans_fit_int(em, k=8, iters=2)) == (
+        "d761b341e93b3cf5283366673bc6358b"
+    )
+    assert md5(pq_fit_int(em, m=4, k=16, iters=2)) == (
+        "c88ecf3bcfe12ce58f3563c9f0ccd2ff"
+    )

@@ -140,8 +140,9 @@ def test_documents_source_determinism_and_dup_structure(spark):
 
 def test_embeddings_source_structure(spark):
     from java_etl_bi_generator_spark.operators.kmeans import (
+        assign_codes_int,
         kmeans_fit_int,
-        nearest_cell_int,
+        quantize_micro,
     )
     from java_etl_bi_generator_spark.sources.synthetic import (
         SyntheticEmbeddingsDataSource,
@@ -170,7 +171,12 @@ def test_embeddings_source_structure(spark):
     # planted clusters are separable: k-means recovers a 1:1 mapping
     model = kmeans_fit_int(df, k=4, iters=4)
     m = (
-        df.withColumn("cell", nearest_cell_int("embedding", model))
+        assign_codes_int(
+            df.withColumn("__q", quantize_micro("embedding")),
+            [model],
+            "__q",
+            ["cell"],
+        )
         .groupBy("label")
         .agg(F.count_distinct("cell").alias("nc"), F.first("cell").alias("c"))
         .collect()
