@@ -1,24 +1,74 @@
-"""Connected components over near-duplicate pairs — the final step of
-corpus dedup: candidate pairs (from MinHash/SimHash/cosine) form a graph;
-each connected component is one duplicate cluster, and one representative
-per cluster is kept.
+"""Graph operators over edge-list DataFrames.
 
-Implemented as a TWO-PHASE loop (round 12): cheap propagate+jump label
-rounds solve the shallow graphs near-dup clustering actually produces,
-and alternating large-star/small-star edge contraction [Kiveris et al.
-2014] finishes the deep residual on the label-quotient graph.  The loop
-is driver-side control flow only; all data stays distributed, with
-``lineage.cut_lineage`` every round to cut the growing plan (reliable
-``checkpoint()`` when a checkpoint dir is configured — the cluster-safe
-form — else ``localCheckpoint``).
+``connected_components`` is the final step of corpus dedup: candidate
+pairs (from MinHash/SimHash/cosine) form a graph, each connected
+component is one duplicate cluster, and one representative per cluster
+is kept.  It labels the graph with a union-find on the driver whenever
+the distinct edges fit a bounded collect, and otherwise runs
+distributed label rounds until the label-quotient graph fits.  The
+other operators (PageRank, Bellman-Ford, k-core, label propagation) are
+bounded-round loops whose data stays distributed, with
+``lineage.cut_lineage`` cutting the growing plan (reliable
+``checkpoint()`` when a checkpoint dir is configured, else
+``localCheckpoint``).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import StructField, StructType
 
 from ..lineage import cut_lineage
+
+# Most edges connected_components collects to the driver: two Python
+# ints per edge, a few hundred MB of driver memory at most.
+DRIVER_EDGE_LIMIT = 1_000_000
+
+
+def _collect_at_most(df: DataFrame, n: int) -> list | None:
+    """The rows of ``df``, or None when it has more than ``n``."""
+    rows = df.limit(n + 1).collect()
+    return rows if len(rows) <= n else None
+
+
+def _union_find(edges) -> dict:
+    """node -> minimum node id of its component, over (a, b) ``edges``.
+
+    Path halving, and the smaller root wins every union, so each root is
+    its component's minimum.  A null endpoint joins nothing and keeps a
+    null label."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    return {x: find(x) for x in parent}
+
+
+def _label_frame(spark, labels: dict, id_type, names) -> DataFrame:
+    """A driver-side ``labels`` dict as a two-column frame of ``id_type``,
+    shipped through Arrow."""
+    import pyarrow as pa
+
+    table = pa.table(
+        {names[0]: list(labels.keys()), names[1]: list(labels.values())}
+    )
+    schema = StructType([StructField(n, id_type) for n in names])
+    return spark.createDataFrame(table, schema)
 
 
 def connected_components(
@@ -26,50 +76,44 @@ def connected_components(
     max_iterations: int = 20,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    label_rounds: int = 6,
 ) -> DataFrame:
     """(id_a, id_b) edges -> (node, component), component = min node id.
 
-    TWO-PHASE round-12 shape, from the round-11 driver-board adjudication
-    (q_grid_density_clusters 0.56x after the pure star-contraction
-    rewrite) plus a measured contraction trace: label propagation with
-    pointer jumping costs ONE shuffle per round (the propagate groupBy;
-    the node-grain joins broadcast on small graphs) and solves shallow
-    graphs in 2-5 rounds, while star contraction costs 4-5 exchanges per
-    round but O(log) rounds on deep chain graphs.  The sf0.1 LSH
-    star-edge graph (3,931 pairs) contracts its label-quotient graph
-    484 -> 208 -> 104 -> 54 edges in the first three label rounds and
-    then spends 12 MORE rounds chasing one residual chain — exactly the
-    regime where star contraction's chain-halving wins.  So:
+    One row per node; ``node`` and ``component`` keep the edges' id type.
 
-      phase 1 — up to ``label_rounds`` propagate+jump rounds (the round-10
-        loop, verbatim).  Shallow graphs (grid DBSCAN: 5 rounds, exact /
-        entity dedup: 2) converge here and return directly.
-      phase 2 — if the sum fixpoint is not reached, contract the LABEL
-        QUOTIENT graph (component-id endpoints of still-crossing edges —
-        a few dozen edges where phase 1 left thousands) with alternating
-        large-star/small-star, and compose: final(n) = comp2(label(n)).
-
-    Composition is exact: labels only ever decrease toward (and never
-    below) the component minimum, the minimum node always keeps itself,
-    and the quotient of a connected component is connected, so phase 2's
-    min-label per quotient component IS the component's min node id.
-    Phase 2 inherits ``max_iterations`` and fails loudly on a true
-    non-convergence (ADVICE r11) instead of emitting partial labels.
+    If the distinct edges number at most ``DRIVER_EDGE_LIMIT``, they are
+    collected and union-found on the driver, and the labels come back
+    through Arrow.  Otherwise up to ``max_iterations`` distributed
+    propagate+jump label rounds run: each round takes every node's
+    minimum neighbour label, then follows that label's own label.  After
+    each round the label-quotient edges (the endpoint labels of edges
+    that still cross two labels) get the same bounded collect, which is
+    the round's one action; once they fit, the union-find finishes them
+    and its labels are joined back.  This is exact: every label is a
+    node of the same component, the component's minimum keeps itself,
+    and the quotient of a connected component is connected.  A graph
+    whose quotient still does not fit after ``max_iterations`` rounds
+    raises ``RuntimeError``.
     """
-    edges = cut_lineage(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
+    spark = pairs.sparkSession
+    directed = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    sym = directed.union(
+        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
+    id_type = sym.schema["src"].dataType
+    found = _collect_at_most(directed.distinct(), DRIVER_EDGE_LIMIT)
+    if found is not None:
+        return _label_frame(
+            spark, _union_find(found), id_type, ("node", "component")
+        )
+
+    edges = cut_lineage(sym.distinct(), eager=False)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    prev_sum = None
-    converged = False
-    for _ in range(label_rounds):
+    for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
@@ -85,14 +129,8 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        # pointer jumping: follow the component's own (possibly smaller)
-        # label; the propagate result is pinned first because the
-        # self-join consumes it on both sides.  Both cuts are LAZY, so
-        # the sum aggregate below is the round's one ACTION — but not
-        # its one job: with AQE on, that action still runs each shuffle
-        # stage under the two cuts as its own job (4 + 3 + 2 = 9 jobs
-        # per round in a profile).  Lazy only saves each cut's own
-        # eager count job (r11 lesson).
+        # pointer jumping: the self-join reads the propagate result on
+        # both sides, so it is pinned first
         stepped = cut_lineage(new_labels, eager=False)
         roots = stepped.select(
             F.col("node").alias("__cnode"),
@@ -109,156 +147,37 @@ def connected_components(
             )
         )
         labels = cut_lineage(jumped, eager=False)
-        # Exact DECIMAL(38,0) sum: a bigint sum overflows (an ANSI error)
-        # on hashed 64-bit ids.  Labels only ever decrease, so an equal
-        # exact sum still means no label changed.
-        cur_sum = labels.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if converged:
-        return labels
-    # phase 2: star-contract the label quotient (tiny by now) and compose
-    la = labels.select(F.col("node").alias("src"), F.col("component").alias("__ca"))
-    lb = labels.select(F.col("node").alias("dst"), F.col("component").alias("__cb"))
-    quotient = (
-        edges.join(la, "src")
-        .join(lb, "dst")
-        .filter(F.col("__ca") != F.col("__cb"))
-        .select(F.col("__ca").alias("id_a"), F.col("__cb").alias("id_b"))
-    )
-    comp2 = _star_contract(quotient, max_iterations)
-    return labels.join(
-        comp2, labels.component == comp2.node, "left"
-    ).select(
-        labels.node.alias("node"),
-        F.coalesce(comp2.component, labels.component).alias("component"),
-    )
-
-
-def _star_contract(
-    pairs: DataFrame,
-    max_iterations: int = 20,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """(id_a, id_b) edges -> (node, component), component = min node id.
-
-    Round-12 shape: the same alternating large-star / small-star edge
-    contraction shipped in round 11, with the star-forest convergence test
-    FUSED into the round's large-star groupBy and moved to loop ENTRY.
-    Every star edge points child > parent (large-star emits m <= u < v,
-    small-star emits min(Γ⁻) < x), so over the symmetric edge set E a
-    node's child-degree is |{v < u}| and parent-degree |{v > u}| — ONE
-    groupBy(u) yields min(v) for the large-star rewire AND both counts
-    for the exact test (violation: both parent and child, or child of
-    two parents).  Checking the round's INPUT instead of its output is
-    the identical test one position earlier in the same contraction
-    sequence (both loops stop at the first star forest), and
-    contraction is the identity on a star forest, so outputs are
-    bit-identical; the redundant per-round ``distinct`` on the
-    large-star output is dropped (small-star's groupBy-min ignores
-    duplicates and its own distinct dedups the union).  Net per round
-    vs the r11 loop: 5-6 exchanges -> 3 and no separate 2|E|-row
-    violations pass — the shallow-graph scheduling cost the r11 driver
-    board flagged (q_grid_density_clusters 0.56x).
-    """
-    E = cut_lineage(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
-        .distinct()
-    )
-    nodes = E.select(F.col("u").alias("node")).distinct()
-    stars = E.filter(F.col("u") > F.col("v")).select(
-        F.col("u").alias("s"), F.col("v").alias("t")
-    )
-
-    def head(edges: DataFrame) -> DataFrame:
-        # fused round head: large-star minimum + star-forest test counts
-        return edges.groupBy("u").agg(
-            F.min("v").alias("__mn"),
-            F.sum(F.when(F.col("u") > F.col("v"), 1).otherwise(0)).alias(
-                "__nc"
-            ),
-            F.sum(F.when(F.col("u") < F.col("v"), 1).otherwise(0)).alias(
-                "__np"
-            ),
+        la = labels.select(
+            F.col("node").alias("src"), F.col("component").alias("__ca")
         )
-
-    def n_violations(g: DataFrame) -> int:
-        return g.filter(
-            ((F.col("__np") > 0) & (F.col("__nc") > 0))
-            | (F.col("__nc") > 1)
-        ).count()
-
-    converged = False
-    for _ in range(max_iterations):
-        g = head(E)
-        # The round's ONE action: materializes the previous round's
-        # lazily-cut stars in passing (the r11 job-count lesson).  g is
-        # NOT cut: the large-star join below recomputes the tiny
-        # edge-grain aggregate inside the next action's job, where its
-        # exchange is shared with the join's probe side — cutting it
-        # would either add a job (eager) or put two joins between lazy
-        # cuts (the measured r11 pathology).
-        if n_violations(g) == 0:
-            converged = True
-            break
-        # large-star: (v, m(u)) for v in Γ(u), v > u; m ≤ u < v keeps
-        # every emitted edge strictly parent-pointing (a > b).  No
-        # distinct: duplicates collapse in sm's min and ss's distinct.
-        lm = g.select(
-            "u", F.least(F.col("u"), F.col("__mn")).alias("__m")
+        lb = labels.select(
+            F.col("node").alias("dst"), F.col("component").alias("__cb")
         )
-        ls = (
-            E.join(lm, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("__m").alias("b"))
+        # edges are symmetric, so each crossing pair appears once as a < b
+        found = _collect_at_most(
+            edges.join(la, "src")
+            .join(lb, "dst")
+            .filter(F.col("__ca") < F.col("__cb"))
+            .select("__ca", "__cb")
+            .distinct(),
+            DRIVER_EDGE_LIMIT,
         )
-        # small-star: per parent a, rewire Γ⁻(a) ∪ {a} to min(Γ⁻(a)).
-        sm = ls.groupBy("a").agg(F.min("b").alias("__m"))
-        ss = (
-            ls.join(sm, "a")
-            .select(F.col("b").alias("x"), F.col("__m").alias("m"))
-            .unionAll(sm.select(F.col("a").alias("x"), F.col("__m").alias("m")))
-            .filter(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("s"), F.col("m").alias("t"))
-            .distinct()
-        )
-        stars = cut_lineage(ss, eager=False)
-        # E must stay free of duplicate edges: the fused head would
-        # count a repeated edge twice, and __nc > 1 would then read as
-        # a node with two parents (a false violation).  ss's distinct,
-        # with every star edge s > t, guarantees it.
-        E = stars.select(F.col("s").alias("u"), F.col("t").alias("v")).unionAll(
-            stars.select(F.col("t").alias("u"), F.col("s").alias("v"))
-        )
-    if not converged:
-        # The cap-exhausted path's final contraction is unchecked above;
-        # re-test it and FAIL LOUDLY on true non-convergence instead of
-        # silently emitting min-parent labels that are not a valid
-        # partition labeling (ADVICE r11: the silent-cap failure mode).
-        E = stars.select(F.col("s").alias("u"), F.col("t").alias("v")).unionAll(
-            stars.select(F.col("t").alias("u"), F.col("s").alias("v"))
-        )
-        v = n_violations(head(E))
-        if v != 0:
-            raise RuntimeError(
-                f"connected_components: star contraction not converged "
-                f"after {max_iterations} rounds ({v} star-forest "
-                f"violations) — raise max_iterations"
+        if found is not None:
+            finish = _label_frame(
+                spark, _union_find(found), id_type, ("__label", "__root")
             )
-    # min-parent extraction: a no-op at convergence (each child has
-    # exactly one parent in a star forest); kept for the one-row-per-
-    # node contract.
-    roots = stars.groupBy("s").agg(F.min("t").alias("__comp")).select(
-        F.col("s").alias("node"), "__comp"
-    )
-    return nodes.join(roots, "node", "left").select(
-        "node", F.coalesce(F.col("__comp"), F.col("node")).alias("component")
+            return labels.join(
+                finish, labels.component == F.col("__label"), "left"
+            ).select(
+                "node",
+                F.coalesce(F.col("__root"), F.col("component")).alias(
+                    "component"
+                ),
+            )
+    raise RuntimeError(
+        f"connected_components: label quotient still above "
+        f"{DRIVER_EDGE_LIMIT} edges after {max_iterations} rounds; "
+        f"raise max_iterations"
     )
 
 

@@ -3748,7 +3748,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("q_dedup_clusters")
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2: near-dup candidate pairs -> connected components -> cluster
-    assignment (iterative min-label propagation; hash-checked against a
+    assignment (min node id per component; hash-checked against a
     DuckDB recursive-CTE oracle)."""
     from .operators.graph import connected_components
 
@@ -13004,9 +13004,8 @@ def q_grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy down to cell counts; adjacency is the bounded ×9
     neighborhood explode + equi-join of q_knn_grid_join (never a
     point-pair or cell-theta join at data grain); components come from
-    `operators.graph.connected_components` (large-star/small-star
-    edge contraction, lineage-cut per round) on the bounded core-cell
-    graph.  The DuckDB
+    `operators.graph.connected_components` (a driver-side union-find
+    over the bounded core-cell graph).  The DuckDB
     oracle rebuilds the identical graph and closes it with a recursive
     CTE.  At tiny SFs no cell reaches density 5 and the result is
     legitimately empty — the driver-gate SF (0.01) yields a non-trivial

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from java_etl_bi_generator_spark.catalog import load_table
 from java_etl_bi_generator_spark.operators.dedup import (
@@ -77,59 +78,134 @@ def test_connected_components_clusters(spark):
     assert comps[5] == comps[6] == 5
 
 
-def test_connected_components_large_star_small_star(spark):
-    """r11 change 21: the large-star/small-star rewrite must converge to
-    the exact min-label partition on the topologies that stressed the
-    old label loop — deep chains (the LSH star-edge failure mode that
-    needed 16 rounds), cycles, self-loops — and keep the one-row-per-
-    node output contract."""
+def _cc_reference(pairs):
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    comps: dict[int, list[int]] = {}
+    for x in list(parent):
+        comps.setdefault(find(x), []).append(x)
+    return sorted(
+        (x, min(members))
+        for members in comps.values()
+        for x in members
+    )
+
+
+CC_TOPOLOGIES = {
+    # 60-deep chain: the old propagate+jump loop needed ~log-squared
+    # rounds here; every path must still produce the exact min labels.
+    "deep_chain": [(i, i + 1) for i in range(60)],
+    "cycle": [(i, (i + 1) % 23) for i in range(23)],
+    "self_loops_and_edges": [(5, 5), (7, 8), (9, 9), (8, 11)],
+    "sibling_stars": [(100, i) for i in range(1, 8)]
+    + [(200, i) for i in range(4, 12)],
+    # hashed 64-bit ids: a bigint fixpoint sum over these overflows
+    # (ANSI ARITHMETIC_OVERFLOW)
+    "ids_near_2_62": [(2**62, 2**62 + 1), (2**62 + 1, 2**62 + 2)],
+}
+
+
+def _assert_cc_topologies(spark):
     from java_etl_bi_generator_spark.operators.graph import (
         connected_components,
     )
 
-    def reference(pairs):
-        parent: dict[int, int] = {}
-
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comps: dict[int, list[int]] = {}
-        for x in list(parent):
-            comps.setdefault(find(x), []).append(x)
-        return sorted(
-            (x, min(members))
-            for members in comps.values()
-            for x in members
-        )
-
-    cases = {
-        # 60-deep chain: the old propagate+jump loop needed ~log-squared
-        # rounds here; LS/SS must still produce the exact min labels.
-        "deep_chain": [(i, i + 1) for i in range(60)],
-        "cycle": [(i, (i + 1) % 23) for i in range(23)],
-        "self_loops_and_edges": [(5, 5), (7, 8), (9, 9), (8, 11)],
-        "sibling_stars": [(100, i) for i in range(1, 8)]
-        + [(200, i) for i in range(4, 12)],
-        # hashed 64-bit ids: a bigint fixpoint sum over these overflows
-        # (ANSI ARITHMETIC_OVERFLOW)
-        "ids_near_2_62": [(2**62, 2**62 + 1), (2**62 + 1, 2**62 + 2)],
-    }
-    for name, pairs in cases.items():
+    for name, pairs in CC_TOPOLOGIES.items():
         df = spark.createDataFrame(
             [(int(a), int(b)) for a, b in pairs], ["id_a", "id_b"]
         )
         rows = connected_components(df).collect()
         got = sorted((r["node"], r["component"]) for r in rows)
-        assert got == reference(pairs), name
-        # one row per node, no duplicates from the star extraction
+        assert got == _cc_reference(pairs), name
+        # one row per node, no duplicates from the label join-back
         assert len({r["node"] for r in rows}) == len(rows), name
+
+
+def test_connected_components_large_star_small_star(spark):
+    """Exact min-label partition on the topologies that stressed earlier
+    loops — deep chains (the LSH star-edge failure mode that needed 16
+    rounds), cycles, self-loops — with one row per node."""
+    _assert_cc_topologies(spark)
+
+
+def test_connected_components_over_edge_limit(spark, monkeypatch):
+    """The same topologies with the driver edge limit patched down to 1,
+    so every one runs distributed label rounds and finishes on the label
+    quotient."""
+    from java_etl_bi_generator_spark.operators import graph
+
+    assert all(len(set(p)) > 1 for p in CC_TOPOLOGIES.values())
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 1)
+    _assert_cc_topologies(spark)
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    from java_etl_bi_generator_spark.operators import graph
+
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 2)
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "id_a bigint, id_b bigint"
+    )
+    with pytest.raises(RuntimeError, match="max_iterations"):
+        graph.connected_components(df, max_iterations=1)
+
+
+def _assert_cc_contract(spark):
+    from pyspark.sql.types import IntegerType, LongType
+
+    from java_etl_bi_generator_spark.operators.graph import (
+        connected_components,
+    )
+
+    edges = [(1, 2), (2, 3), (3, 1), (7, 8), (8, 9), (9, 10), (4, 4)]
+    for ddl, id_type in (("int", IntegerType()), ("bigint", LongType())):
+        df = spark.createDataFrame(edges, f"id_a {ddl}, id_b {ddl}")
+        out = connected_components(df)
+        assert [(f.name, f.dataType) for f in out.schema.fields] == [
+            ("node", id_type),
+            ("component", id_type),
+        ], ddl
+        rows = out.collect()
+        assert sorted((r["node"], r["component"]) for r in rows) == (
+            _cc_reference(edges)
+        ), ddl
+        assert len({r["node"] for r in rows}) == len(rows), ddl
+
+
+def test_connected_components_output_contract(spark):
+    """Empty input gives an empty (node, component) frame; int and bigint
+    ids keep their type; one row per node."""
+    from java_etl_bi_generator_spark.operators.graph import (
+        connected_components,
+    )
+
+    empty = connected_components(
+        spark.createDataFrame([], "id_a bigint, id_b bigint")
+    )
+    assert empty.columns == ["node", "component"]
+    assert empty.count() == 0
+    _assert_cc_contract(spark)
+
+
+def test_connected_components_output_contract_over_edge_limit(
+    spark, monkeypatch
+):
+    """The same type and one-row-per-node pins on the label-round path
+    (an empty edge set always fits the driver collect)."""
+    from java_etl_bi_generator_spark.operators import graph
+
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 2)
+    _assert_cc_contract(spark)
 
 
 def test_bellman_ford_hops_and_weights(spark):
