@@ -15,6 +15,7 @@ import os
 import re
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -131,6 +132,16 @@ ISOLATION_THRESHOLD = 1.0
 assert LIKE_FOR_LIKE[-1] == "q_basket_pairs"
 
 
+def noop_seconds(build) -> float:
+    """Seconds to build a query's DataFrame with ``build()`` and run every
+    stage of it through the ``noop`` sink (nothing is materialized on the
+    driver), on the ``time.perf_counter`` clock.  Every script that times
+    a query calls this, so they all time the same plan the same way."""
+    t0 = time.perf_counter()
+    build().write.mode("overwrite").format("noop").save()
+    return time.perf_counter() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -145,10 +156,7 @@ def main() -> None:
     # is negligible (~1k-6k rows/table).
     warm_dir = "/root/testdata/sf0.001"
     for name in HEADLINE:
-        try:
-            qs[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+        noop_seconds(partial(qs[name], spark, warm_dir))
 
     # Min of three measured iterations per query: the steady-state plan
     # cost, insulated from one-off GC pauses / host contention (JMH-style;
@@ -157,12 +165,9 @@ def main() -> None:
     times: dict[str, float] = {}
     for _ in range(3):
         for name in HEADLINE:
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = round(time.time() - t0, 3)
+            dt = round(noop_seconds(partial(qs[name], spark, sf_dir)), 3)
             if name not in times or dt < times[name]:
                 times[name] = dt
-
 
     # Isolated re-measurement of the heavy tail (round-5 verdict task 6,
     # widened by round-6 verdict task 3): the round-4 basket/rfm drift
@@ -180,20 +185,10 @@ def main() -> None:
     spark.stop()
     spark = get_spark(app_name="bench-isolated")
     for name in heavy:
-        try:
-            qs[name](spark, warm_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-        except Exception:
-            pass
-        for _ in range(6):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            dt = round(time.time() - t0, 3)
-            if name not in isolated or dt < isolated[name]:
-                isolated[name] = dt
+        noop_seconds(partial(qs[name], spark, warm_dir))
+        isolated[name] = round(
+            min(noop_seconds(partial(qs[name], spark, sf_dir)) for _ in range(6)), 3
+        )
 
     best = {n: min(times[n], isolated.get(n, times[n])) for n in HEADLINE}
     total = round(sum(best.values()), 3)

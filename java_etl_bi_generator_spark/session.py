@@ -107,12 +107,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "Etc/UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Off by default (headless bench/parity runs); scripts/profile_query.py
-        # sets SPARK_GRAFT_UI=1 to read per-stage metrics from /api/v1.
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
+        # Headless: per-stage metrics come from the event log
+        # (scripts/profile_query.py), not the UI.
+        .config("spark.ui.enabled", "false")
         # Static confs, effective only when THIS builder launches the JVM
         # (getOrCreate on a live session ignores them): keep the managed-
         # table warehouse and Derby's derby.log out of the caller's CWD.

@@ -192,12 +192,12 @@ DIMS_SCHEMA = StructType(
 )
 
 
-def image_dims_arrow(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def image_dims_arrow(media: DataFrame) -> DataFrame:
     """Pixel dimensions for png/gif/jpeg via the Arrow decode path —
     the variable-offset JPEG SOF scan cannot be a codegen expression, so
-    it runs in bounded ``mapInPandas`` batches (each task holds at most
-    ``batch_size`` payloads; no collect, no driver loop).  PNG/GIF dims
-    here agree byte-for-byte with the codegen ``image_header_dims``."""
+    it runs in ``mapInPandas`` batches of the session's Arrow batch size
+    (no collect, no driver loop).  PNG/GIF dims here agree byte-for-byte
+    with the codegen ``image_header_dims``."""
 
     def _dims(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -232,8 +232,6 @@ def image_dims_arrow(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 }
             )
 
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
     return media.select("media_id", "content").mapInPandas(
         _dims, schema=DIMS_SCHEMA
     )
@@ -318,11 +316,11 @@ AUDIO_META_SCHEMA = StructType(
 )
 
 
-def audio_meta_arrow(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def audio_meta_arrow(media: DataFrame) -> DataFrame:
     """Audio container metadata via the Arrow decode path — the general
     RIFF walk for layouts the codegen fixed-offset parse returns nulls
-    on.  Bounded ``mapInPandas`` batches, same shape as
-    ``image_dims_arrow`` / ``video_header_meta``."""
+    on.  ``mapInPandas`` batches, same shape as ``image_dims_arrow`` /
+    ``video_header_meta``."""
 
     def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -350,10 +348,6 @@ def audio_meta_arrow(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 }
             )
 
-    spark = media.sparkSession
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
-    )
     return (
         media.filter(F.col("modality") == "audio")
         .select("media_id", "content")
@@ -611,10 +605,10 @@ VIDEO_META_SCHEMA = StructType(
 )
 
 
-def video_header_meta(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def video_header_meta(media: DataFrame) -> DataFrame:
     """Container metadata for video rows via the Arrow decode path —
     completes the per-modality REAL header parses (PNG/GIF/JPEG dims,
-    WAV sample rate, MP4 brand/duration) without any codec.  Bounded
+    WAV sample rate, MP4 brand/duration) without any codec.
     ``mapInPandas`` batches, same shape as ``image_dims_arrow``."""
 
     def _meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -637,10 +631,6 @@ def video_header_meta(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 }
             )
 
-    spark = media.sparkSession
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
-    )
     return (
         media.filter(F.col("modality") == "video")
         .select("media_id", "content")

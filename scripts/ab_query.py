@@ -9,8 +9,11 @@ A/B/A/B across processes by the calling shell.  This script is one lap:
     python scripts/ab_query.py q_kcore            # one fresh-process lap
     python scripts/ab_query.py q_kcore --laps 3   # 3 timed laps, one JVM
 
+The variants under test are two checkouts of the repository: run this
+script from each in turn.  Each lap is ``bench.noop_seconds`` at
+$SPARK_GRAFT_SF_DIR (default sf0.1) after one warm-up at
+$SPARK_GRAFT_WARM_DIR (default sf0.001), the same timer ``bench.py`` uses.
 Prints one JSON line: {"query": ..., "laps": [s, ...], "min": s}.
-Environment toggles (SPARK_GRAFT_*) select the code variant under test.
 """
 
 from __future__ import annotations
@@ -18,11 +21,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+from functools import partial
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import noop_seconds  # noqa: E402
 from java_etl_bi_generator_spark.queries import registry  # noqa: E402
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
 
@@ -35,15 +39,10 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     spark = get_spark(app_name=f"ab:{name}")
-    qs = registry()
-    fn = qs[name]
+    fn = registry()[name]
     # warm codegen/JIT at the tiny SF so laps measure steady-state plans
-    fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-    times = []
-    for _ in range(laps):
-        t0 = time.time()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        times.append(round(time.time() - t0, 3))
+    noop_seconds(partial(fn, spark, warm_dir))
+    times = [round(noop_seconds(partial(fn, spark, sf_dir)), 3) for _ in range(laps)]
     print(json.dumps({"query": name, "laps": times, "min": min(times)}))
     return 0
 

@@ -20,12 +20,13 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+from bench import noop_seconds  # noqa: E402
 from java_etl_bi_generator_spark.operators.dedup import (  # noqa: E402
     cut_passages,
     duplicated_passages,
@@ -47,23 +48,20 @@ def main() -> None:
             docs = spark.read.parquet(
                 write_table(spark, tmp, "documents", BASE_DOCS * f)
             )
-            n_spans = None
-            best = {}
-            for hashed in (False, True):
-                times = []
-                for _ in range(2):
-                    t0 = time.time()
-                    spans = duplicated_passages(
-                        docs, "text", "doc_id", k=8, hash_shuffle_key=hashed
-                    )
-                    cut = cut_passages(docs, spans, "text", "doc_id").select(
-                        "doc_id", "n_tokens_after", F.md5("clean_text")
-                    )
-                    cut.write.format("noop").mode("overwrite").save()
-                    times.append(time.time() - t0)
-                    if n_spans is None:
-                        n_spans = spans.count()
-                best[hashed] = min(times)
+
+            def build(hashed: bool):
+                spans = duplicated_passages(
+                    docs, "text", "doc_id", k=8, hash_shuffle_key=hashed
+                )
+                return cut_passages(docs, spans, "text", "doc_id").select(
+                    "doc_id", "n_tokens_after", F.md5("clean_text")
+                )
+
+            best = {
+                hashed: min(noop_seconds(partial(build, hashed)) for _ in range(2))
+                for hashed in (False, True)
+            }
+            n_spans = duplicated_passages(docs, "text", "doc_id", k=8).count()
             print(
                 f"| {BASE_DOCS * f} | {n_spans} | {best[False]:.2f} "
                 f"| {best[True]:.2f} |",

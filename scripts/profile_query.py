@@ -1,154 +1,113 @@
 #!/usr/bin/env python
-"""Per-stage profile of one (or more) registry queries — guide §1's
-empirical loop without the interactive UI: run the query via the noop
-sink in a fresh session with the UI enabled, then read the REST API
-(/api/v1) for per-stage wall time, shuffle bytes, input bytes and task
-counts, printed slowest-first.
+"""Layered record of one or more registry queries, read from the Spark
+event log with the Spark UI off.
+
+Each query is warmed once at $SPARK_GRAFT_WARM_DIR (default sf0.001), then
+timed once at $SPARK_GRAFT_SF_DIR (default sf0.1) by ``bench.noop_seconds``
+under the job group ``"<name>|"``.  After ``spark.stop()`` the event log
+is parsed by perfbench's own reader (``perfbench/spans.read_event_log``)
+and folded by ``pass_stats`` into one line per query: jobs, stages,
+tasks, jobs launched in the timed window without the query's group
+(``unattributed``, from a thread that did not inherit it), driver gap
+(time in the window with no Spark job running), task CPU and shuffle.
+A slowest-first per-stage table of the group's stages, summed from the
+task records, follows.
 
 Usage::
 
     python scripts/profile_query.py q_kcore [q_pagerank ...]
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python scripts/profile_query.py q_kcore
+    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python scripts/profile_query.py q_kcore
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
+from collections import Counter, defaultdict
+from functools import partial
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import noop_seconds  # noqa: E402
 from java_etl_bi_generator_spark.queries import registry  # noqa: E402
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
+from perfbench.spans import pass_stats, read_event_log  # noqa: E402
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-
-def get_spark_with_ui(app_name: str) -> SparkSession:
-    """session.py's configuration, with the UI forced on for /api/v1."""
-    os.environ["SPARK_GRAFT_UI"] = "1"
-    spark = get_spark(app_name=app_name)
-    if spark.sparkContext.uiWebUrl is None:
-        raise SystemExit(
-            "Spark UI is disabled in this session — profile_query.py needs "
-            "a fresh python process (the session factory honors "
-            "SPARK_GRAFT_UI=1 only at JVM launch)"
-        )
-    return spark
+MB = 1 / (1024 * 1024)
 
 
-def rest(base: str, path: str):
-    with urllib.request.urlopen(base + path) as r:
-        return json.loads(r.read())
+def stage_rows(log: dict, group: str) -> list[tuple]:
+    """Per-stage task sums of the jobs in ``group``, slowest first."""
+    jobs = {jid for jid, j in log["jobs"].items() if j["group"] == group}
+    per_stage: dict[int, Counter] = defaultdict(Counter)
+    for t in log["tasks"]:
+        if log["stage_job"].get(t["stage"]) in jobs:
+            c = per_stage[t["stage"]]
+            c["tasks"] += 1
+            for k in ("run_s", "cpu_s", "in_b", "sr_b", "sw_b"):
+                c[k] += t[k]
+    return sorted(
+        ((c["run_s"], c["cpu_s"], sid, log["stage_job"][sid], c["tasks"],
+          c["in_b"] * MB, c["sr_b"] * MB, c["sw_b"] * MB)
+         for sid, c in per_stage.items()),
+        reverse=True,
+    )
 
 
 def main() -> int:
     names = sys.argv[1:]
     if not names:
         raise SystemExit("usage: profile_query.py q_name [q_name ...]")
+    qs = registry()
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    spark = get_spark_with_ui("profile-query")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    base = f"{ui}/api/v1/applications/{app_id}"
-    qs = registry()
 
-    for name in names:
-        # warm codegen/JIT so the measured run is steady-state
-        try:
-            qs[name](spark, warm_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-        except Exception:
-            pass
-        before_jobs = {j["jobId"] for j in rest(base, "/jobs")}
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        wall = time.time() - t0
-        spark.sparkContext.setJobDescription(None)
+    log_dir = tempfile.mkdtemp(prefix="profile_query_eventlog_")
+    try:
+        # the event-log confs perfbench/run.py launches traced runs with
+        os.environ["PYSPARK_SUBMIT_ARGS"] = (
+            f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir=file://{log_dir} "
+            "--conf spark.eventLog.compress=false "
+            "--conf spark.eventLog.rolling.enabled=false pyspark-shell")
+        spark = get_spark(app_name="profile-query")
+        sc = spark.sparkContext
+        windows = []
+        for name in names:
+            noop_seconds(partial(qs[name], spark, warm_dir))
+            sc.setJobGroup(f"{name}|", "profile_query")
+            t0 = time.time()
+            wall = noop_seconds(partial(qs[name], spark, sf_dir))
+            windows.append((name, wall, t0, time.time()))
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.stop()
+        log = read_event_log(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
-        jobs = [j for j in rest(base, "/jobs") if j["jobId"] not in before_jobs]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        rows = []
-        for sid in stage_ids:
-            try:
-                st = rest(base, f"/stages/{sid}")[0]
-            except Exception:
-                continue
-            dur = (st.get("executorRunTime") or 0) / 1000.0
-            rows.append(
-                (
-                    dur,
-                    sid,
-                    st.get("numCompleteTasks", 0),
-                    (st.get("inputBytes") or 0) / 1e6,
-                    (st.get("shuffleReadBytes") or 0) / 1e6,
-                    (st.get("shuffleWriteBytes") or 0) / 1e6,
-                    (st.get("name") or "")[:80],
-                )
-            )
-        rows.sort(reverse=True)
-        print(f"\n=== {name}: wall {wall:.2f}s, {len(jobs)} jobs, "
-              f"{len(rows)} stages (executorRunTime = cpu-sec summed over tasks)")
-        print(f"{'cpu-s':>8} {'stage':>6} {'tasks':>6} {'in MB':>8} "
-              f"{'shRd MB':>8} {'shWr MB':>8}  name")
-        for dur, sid, nt, inb, srd, swr, nm in rows[:14]:
-            print(f"{dur:8.2f} {sid:6d} {nt:6d} {inb:8.1f} {srd:8.1f} "
-                  f"{swr:8.1f}  {nm}")
-
-        # SQL-tab equivalent: per-operator metrics of the executions this
-        # query ran (the noop save plus any eager-checkpoint jobs).
-        try:
-            sqls = rest(base, "/sql?details=true&planDescription=false&length=500")
-        except Exception as e:  # endpoint shape varies across versions
-            print(f"  (sql endpoint unavailable: {e})")
-            sqls = []
-        import re as _re
-
-        def _ms(v: str) -> float:
-            """Parse a metric value like '1.2 s', '345 ms', 'total (min, med, max...)\n1.2 s (...)' to seconds."""
-            first = v.split("(")[0].strip().split("\n")[0].strip()
-            m = _re.match(r"([\d.,]+)\s*(ms|s|m|h)?", first)
-            if not m:
-                return 0.0
-            x = float(m.group(1).replace(",", ""))
-            unit = m.group(2) or "ms"
-            return x * {"ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0}[unit]
-
-        for ex in sqls:
-            if ex.get("status") == "RUNNING":
-                continue
-            nodes = ex.get("nodes") or []
-            if not nodes:
-                continue
-            hot = []
-            for nd in nodes:
-                t = 0.0
-                info = []
-                for mt in nd.get("metrics") or []:
-                    mn = mt.get("name", "")
-                    mv = mt.get("value", "")
-                    if "time" in mn or "duration" in mn:
-                        t = max(t, _ms(mv))
-                    if mn in ("number of output rows", "shuffle bytes written",
-                              "data size"):
-                        info.append(f"{mn.split()[-1]}={mv.split()[0]}")
-                hot.append((t, nd.get("nodeId"), nd.get("nodeName"), " ".join(info)))
-            hot.sort(reverse=True)
-            dur_s = (ex.get("duration") or 0) / 1000.0
-            if dur_s < 0.2:
-                continue
-            print(f"  -- execution {ex.get('id')} ({dur_s:.2f}s): hottest operators")
-            for t, nid, nn, info in hot[:10]:
-                if t <= 0.01:
-                    continue
-                print(f"     {t:8.2f}s  [{nid}] {nn}  {info}")
+    for name, wall, t0, t1 in windows:
+        s = pass_stats(log, name, t0, t1)
+        print(
+            f"\n=== {name} at {sf_dir}: wall_s={wall:.2f} "
+            f"jobs={s['spark.jobs']} stages={s['spark.stages']} "
+            f"tasks={s['spark.tasks']} "
+            f"unattributed={s['spark.jobs_unattributed']} "
+            f"driver_gap_s={s['spark.driver_gap_s']:.2f} "
+            f"task_cpu_s={s['spark.task_cpu_s']:.2f} "
+            f"shuffle_write_mb={s['spark.shuffle_write_mb']:.1f} "
+            f"shuffle_read_mb={s['spark.shuffle_read_mb']:.1f}"
+        )
+        print(f"{'run-s':>8} {'cpu-s':>8} {'stage':>6} {'job':>5} {'tasks':>6} "
+              f"{'in MB':>8} {'shRd MB':>8} {'shWr MB':>8}")
+        for run_s, cpu_s, sid, jid, nt, inb, srd, swr in stage_rows(log, f"{name}|")[:14]:
+            print(f"{run_s:8.2f} {cpu_s:8.2f} {sid:6d} {jid:5d} {nt:6d} "
+                  f"{inb:8.1f} {srd:8.1f} {swr:8.1f}")
     return 0
 
 

@@ -20,9 +20,11 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import noop_seconds  # noqa: E402
 from java_etl_bi_generator_spark.queries import registry  # noqa: E402
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
 from synthetic_tables import write_table  # noqa: E402
@@ -92,13 +94,9 @@ def _probe(spark, qs, probes, tmp, label, n):
             skipped.append(name)
             times[name] = None
             continue
-        qs[name](spark, tmp).write.mode("overwrite").format("noop").save()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            qs[name](spark, tmp).write.mode("overwrite").format("noop").save()
-            best = min(best, time.time() - t0)
-        times[name] = best
+        build = partial(qs[name], spark, tmp)
+        noop_seconds(build)  # warm
+        times[name] = min(noop_seconds(build) for _ in range(2))
     for name in skipped:
         print(f"NOTE: {name} skipped at {n:,} rows (declared ceiling "
               f"{PROBE_MAX_ROWS[name]:,}: exact all-pairs semantics are "

@@ -13,7 +13,8 @@ Usage::
                                   [--ratio 30] [--floor 1.0]
 
 Per query: times at 1x and factor-x synthesized volume (min-of-2 each,
-noop count sink).  FAILS (exit 1) when
+``bench.noop_seconds``: the same noop-sink plan ``bench.py`` and
+``ab_query.py`` time, every output column computed).  FAILS (exit 1) when
 
     t_factor > ratio * max(t_1x, floor)
 
@@ -35,10 +36,11 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import noop_seconds  # noqa: E402
 from java_etl_bi_generator_spark.queries import registry  # noqa: E402
 from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
 from synthetic_tables import write_sf01_multiple  # noqa: E402
@@ -48,15 +50,6 @@ def _generate(spark, factor: int) -> str:
     tmp = tempfile.mkdtemp(prefix=f"volume_gate_{factor}x_")
     write_sf01_multiple(spark, tmp, factor)
     return tmp
-
-
-def _time(fn, spark, sf_dir: str) -> float:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        fn(spark, sf_dir)
-        best = min(best, time.time() - t0)
-    return best
 
 
 def main() -> None:
@@ -90,13 +83,10 @@ def main() -> None:
     failed = []
     try:
         for name in names:
-            fn = qs[name]
-
-            def run(spark_, sf, _fn=fn):
-                return _fn(spark_, sf).count()
-
-            t1 = _time(run, spark, d1)
-            tF = _time(run, spark, dF)
+            t1, tF = (
+                min(noop_seconds(partial(qs[name], spark, d)) for _ in range(2))
+                for d in (d1, dF)
+            )
             limit = ratio * max(t1, floor)
             verdict = "OK  " if tF <= limit else "FAIL"
             if tF > limit:

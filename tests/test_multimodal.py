@@ -4,6 +4,8 @@ columns (sources/multimodal.py)."""
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_image_header_dims_parses_real_png_and_gif(spark):
     """Header parsing is REAL byte arithmetic (not a stub): hand-built
@@ -768,3 +770,19 @@ def test_jpeg_header_meta_stays_in_codegen(spark):
     plan = jpeg_header_meta_canonical(df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+@pytest.mark.parametrize(
+    "name", ["image_dims_arrow", "audio_meta_arrow", "video_header_meta"]
+)
+def test_arrow_media_pass_leaves_session_batch_size_alone(spark, name):
+    """Building an Arrow media pass must not rewrite the session's Arrow
+    batch size: every later Arrow pass in the session (the k-means
+    assignment, the Gram partials) reads it."""
+    from java_etl_bi_generator_spark.sources import multimodal
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    getattr(multimodal, name)(multimodal.synthetic_media(spark, 6))
+    assert spark.conf.get(key) == before

@@ -1,12 +1,19 @@
 """Nothing the engine does on the driver goes unseen: every Spark job a
 query launches, from any driver thread, lands in the caller's job group,
-and a session conf that cannot be applied is reported, not skipped
-silently."""
+a session conf that cannot be applied is reported, not skipped
+silently, the shared timer runs the whole plan, and the per-query
+profile reads the event log with the Spark UI off."""
 
 from __future__ import annotations
 
+import os
+import re
+import subprocess
+import sys
+
 import pytest
 
+from bench import noop_seconds
 from java_etl_bi_generator_spark import session
 from java_etl_bi_generator_spark.queries import registry
 
@@ -66,3 +73,45 @@ def test_apply_runtime_confs_warns_on_refused_conf(spark, monkeypatch):
     with pytest.warns(RuntimeWarning, match="spark.sql.warehouse.dir"):
         session.apply_runtime_confs(spark)
     assert spark.conf.get("spark.sql.session.timeZone") == "Etc/UTC"
+
+
+def test_noop_seconds_runs_every_output_column(spark):
+    """``noop_seconds`` times the plan ``bench.py`` reports: a Python UDF
+    in an output column runs once per row, where ``.count()`` prunes the
+    column and never runs it."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        calls.add(1)
+        return x
+
+    df = spark.range(50).withColumn("y", bump("id"))
+    assert df.count() == 50
+    assert calls.value == 0
+    noop_seconds(lambda: df)
+    assert calls.value == 50
+
+
+def test_profile_query_reads_event_log_with_ui_off(sf_dir):
+    """``scripts/profile_query.py`` in a fresh process (the UI is off in
+    every session) prints the query's jobs from the event log, all of
+    them in the query's job group."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_WARM_DIR=sf_dir)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "profile_query.py"), "q_filter"],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    header = [ln for ln in proc.stdout.splitlines() if ln.startswith("=== q_filter ")]
+    assert len(header) == 1, proc.stdout[-2000:]
+    fields = dict(re.findall(r"(\w+)=([\d.]+)", header[0]))
+    assert int(fields["jobs"]) > 0
+    assert int(fields["stages"]) > 0
+    assert int(fields["unattributed"]) == 0
