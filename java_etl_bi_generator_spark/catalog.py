@@ -4,14 +4,27 @@ layout: ``{sf_dir}/{table}.parquet``).
 Scale note: each ``load_table`` is a plain parquet scan — Catalyst pushes
 filters and prunes columns into the scan, so callers should express
 everything declaratively and never pre-``collect``.
+
+Schema inference reads the parquet footers with a Spark job of its own.
+``load_table`` pays it once per table: the inferred schema is kept per
+file identity (the table path plus the name, size and mtime of every
+file under it) and later loads read through ``spark.read.schema``, which
+launches no job.  Rewriting the table changes its identity, so the next
+load infers again.
 """
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import apply_runtime_confs
+
+# path -> (file identity, inferred schema); one entry per table path
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 TABLES = (
     "region",
@@ -44,13 +57,45 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Downstream code can therefore always assume ``ts`` is TIMESTAMP.
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every file under ``path``, or
+    None for a path this process cannot stat (a remote store)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    found = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            found.append(
+                (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
+            )
+    return tuple(sorted(found))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when the
+    files under ``path`` changed since the last read."""
+    identity = _file_identity(path)
+    cached = _SCHEMAS.get(path)
+    if identity is not None and cached is not None and cached[0] == identity:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if identity is not None:
+        _SCHEMAS[path] = (identity, df.schema)
     return df
 
 

@@ -53,12 +53,18 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     on a 1000-executor cluster), else ``localCheckpoint`` (executor
     block storage; fine where driver and executor share a fate).
 
-    ``eager=True`` materializes now, with a count job of its own.
-    ``eager=False`` defers that to the first action on the result (a
-    stage's funnel count, a loop's convergence aggregate), which saves
-    that one job.  It does not fold the upstream into a single job:
-    with AQE on, the first action still runs each shuffle stage under
-    the cut as a job of its own.
+    What runs when, with AQE on (the session default):
+
+    - ``eager=True`` runs everything now: each shuffle stage under the
+      cut as a job of its own, then a count job that stores the blocks.
+    - ``eager=False`` still runs the shuffle stages under the cut now,
+      at call time, as jobs: building the checkpoint RDD makes AQE plan
+      its final stage, and AQE plans a stage only after the shuffles it
+      reads have run.  It defers only the last stage, the one after
+      the final exchange: that stage runs, and its blocks are stored,
+      in the first action on the result (a stage's funnel count, a
+      loop's convergence aggregate), which saves the count job.  A plan
+      with no exchange runs nothing at call time.
     """
     if checkpoint_dir(df.sparkSession) is not None:
         return df.checkpoint(eager=eager)

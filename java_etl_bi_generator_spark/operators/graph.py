@@ -20,16 +20,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import StructField, StructType
 
 from ..lineage import cut_lineage
+from .bounded import collect_at_most, local_frame
 
 # Most edges connected_components collects to the driver: two Python
 # ints per edge, a few hundred MB of driver memory at most.
 DRIVER_EDGE_LIMIT = 1_000_000
-
-
-def _collect_at_most(df: DataFrame, n: int) -> list | None:
-    """The rows of ``df``, or None when it has more than ``n``."""
-    rows = df.limit(n + 1).collect()
-    return rows if len(rows) <= n else None
 
 
 def _union_find(edges) -> dict:
@@ -60,15 +55,12 @@ def _union_find(edges) -> dict:
 
 
 def _label_frame(spark, labels: dict, id_type, names) -> DataFrame:
-    """A driver-side ``labels`` dict as a two-column frame of ``id_type``,
-    shipped through Arrow."""
-    import pyarrow as pa
-
-    table = pa.table(
-        {names[0]: list(labels.keys()), names[1]: list(labels.values())}
+    """A driver-side ``labels`` dict as a two-column frame of ``id_type``."""
+    return local_frame(
+        spark,
+        {names[0]: list(labels.keys()), names[1]: list(labels.values())},
+        StructType([StructField(n, id_type) for n in names]),
     )
-    schema = StructType([StructField(n, id_type) for n in names])
-    return spark.createDataFrame(table, schema)
 
 
 def connected_components(
@@ -101,7 +93,7 @@ def connected_components(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
     id_type = sym.schema["src"].dataType
-    found = _collect_at_most(directed.distinct(), DRIVER_EDGE_LIMIT)
+    found = collect_at_most(directed.distinct(), DRIVER_EDGE_LIMIT)
     if found is not None:
         return _label_frame(
             spark, _union_find(found), id_type, ("node", "component")
@@ -154,7 +146,7 @@ def connected_components(
             F.col("node").alias("dst"), F.col("component").alias("__cb")
         )
         # edges are symmetric, so each crossing pair appears once as a < b
-        found = _collect_at_most(
+        found = collect_at_most(
             edges.join(la, "src")
             .join(lb, "dst")
             .filter(F.col("__ca") < F.col("__cb"))

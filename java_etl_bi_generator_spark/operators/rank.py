@@ -33,10 +33,15 @@ silently depend on Spark reusing the exchange between branches (it often
 does, but AQE is free not to, and a caller-added payload column can change
 canonicalization).  The cut also means the upstream subtree executes once.
 
-The pin is LAZY (``eager=False``): all branches share one checkpointed RDD
-instance, so each partition is computed (and its ``__pid`` fixed) exactly
-once by whichever job touches it first, persisted to memory/disk — the
-eager variant would cost one extra full pass for no additional safety.
+The pin is LAZY (``eager=False``), which fixes less than it may seem.
+With AQE on, the call itself runs the range exchange's upstream: the
+boundary-sampling job and the shuffle map stage, each a job, so the
+boundaries are fixed when the pin returns.  Only the stage after the
+exchange is deferred: all branches share one checkpointed RDD instance,
+so each post-exchange partition is computed (and its ``__pid`` fixed)
+exactly once, by whichever later job touches it first, and persisted to
+memory/disk.  The eager variant would add one count job for no
+additional safety.
 """
 
 from __future__ import annotations

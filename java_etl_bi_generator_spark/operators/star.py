@@ -18,12 +18,17 @@ Reference mapping (file:line cites into /root/reference):
 - ``build_fact``            : passo2's hand-rolled broadcast hash left joins
   with ``-1`` for misses (:140-180, join probes at :153-159).
 
-Scale posture: surrogate ids come from the distributed two-phase rank
-(``operators.rank.global_rank``) — no single-partition window anywhere,
-so even a data-grain natural-key dimension builds at any cardinality;
-fact-side joins broadcast the dims (the reference's HashMaps, done
-right).  The source is scanned once and reused — the reference scans the
-file twice (:61, :142).
+Scale posture: a dimension of at most ``DRIVER_DIM_LIMIT`` distinct keys
+is numbered on the driver from one bounded, Spark-sorted collect and
+comes back as a local relation, so writing it or broadcasting it into
+the fact re-runs nothing.  SIGA's three keyed dims (tens to thousands of
+rows) take that path, and ``dim_tempo``'s date bounds ride along
+dim_geracao's collect.  A larger dimension gets its ids from the
+distributed two-phase rank (``operators.rank.global_rank``), with no
+single-partition window anywhere, so even a data-grain natural-key
+dimension builds at any cardinality.  Fact-side joins broadcast the dims
+(the reference's HashMaps, done right).  The source is scanned once and
+reused; the reference scans the file twice (:61, :142).
 """
 
 from __future__ import annotations
@@ -32,6 +37,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions.dates import (
     date_key,
@@ -45,29 +51,59 @@ from ..functions.locale_ptbr import (
     null_or_empty_default,
     parse_ptbr_decimal,
 )
+from .bounded import collect_at_most, local_frame
 from .rank import global_rank
+
+# Most distinct keys build_dimension numbers on the driver.  A dimension
+# this small is shipped back in the plan and broadcast into every fact
+# join, as the reference's in-heap HashMaps are.
+DRIVER_DIM_LIMIT = 100_000
+
+
+def _number_keys(
+    df: DataFrame, key_cols: list[str], id_col: str, *aggs: Column
+) -> tuple[DataFrame, list | None]:
+    """``build_dimension``, plus the collected key rows (each carrying
+    ``aggs`` computed over its key) when the driver numbered them, else
+    None."""
+    order = [F.col(c).asc_nulls_first() for c in key_cols]
+    if aggs:
+        keys = df.groupBy(*key_cols).agg(*aggs)
+    else:
+        keys = df.select(*key_cols).distinct()
+    rows = collect_at_most(keys.orderBy(*order), DRIVER_DIM_LIMIT)
+    if rows is None:
+        ranked = global_rank(keys.select(*key_cols), order, rank_col=id_col)
+        dim = ranked.select(F.col(id_col).cast("int").alias(id_col), *key_cols)
+        return dim, None
+    schema = StructType(
+        [StructField(id_col, IntegerType(), False)]
+        + [df.schema[c] for c in key_cols]
+    )
+    columns = {id_col: list(range(1, len(rows) + 1))}
+    columns.update({c: [r[c] for r in rows] for c in key_cols})
+    # one partition, so a written dimension stays one part file
+    return local_frame(df.sparkSession, columns, schema).coalesce(1), rows
 
 
 def build_dimension(
     df: DataFrame, key_cols: list[str], id_col: str
 ) -> DataFrame:
-    """Distinct composite keys + dense surrogate ids 1..N.
+    """Distinct composite keys + dense surrogate ids 1..N, bit-identical
+    to ``row_number() OVER (ORDER BY key)`` (keys ascending, nulls
+    first).
 
-    ``distinct`` is a partial-aggregated shuffle on the key columns; ids
-    are then assigned by the DISTRIBUTED two-phase rank
-    (``operators.rank.global_rank``: range-partition on the key, rank in
-    parallel, broadcast prefix offsets) — bit-identical to ``row_number()
-    OVER (ORDER BY key)`` for a total order, but with no single-partition
-    window, so a natural-key dimension at data grain (one row per entity,
-    dim_empreendimento-shaped) builds at any cardinality.
+    Up to ``DRIVER_DIM_LIMIT`` distinct keys, Spark sorts them in one
+    bounded collect and the id is each key's 1-based position in that
+    order; the dimension comes back as a local relation, which launches
+    no job when it is written or broadcast.  Above the limit, ids come
+    from the DISTRIBUTED two-phase rank (``operators.rank.global_rank``:
+    range-partition on the key, rank in parallel, broadcast prefix
+    offsets), with no single-partition window, so a natural-key
+    dimension at data grain (one row per entity, dim_empreendimento-
+    shaped) builds at any cardinality.
     """
-    distinct = df.select(*key_cols).distinct()
-    ranked = global_rank(
-        distinct,
-        [F.col(c).asc_nulls_first() for c in key_cols],
-        rank_col=id_col,
-    )
-    return ranked.select(F.col(id_col).cast("int").alias(id_col), *key_cols)
+    return _number_keys(df, key_cols, id_col)[0]
 
 
 def dedup_first_row(
@@ -178,10 +214,19 @@ def siga_pipeline(spark: SparkSession, src: DataFrame) -> SigaOutputs:
     """
     src = src.cache()  # reference scans the CSV twice (:61, :142); we don't
 
-    dim_geracao = build_dimension(
+    # the date bounds ride along dim_geracao's key collect: per-key
+    # min/max, finished on the driver (exact: dates compare exactly)
+    parsed_date = parse_date_lenient("DatEntradaOperacao")
+    bounds = (F.min(parsed_date).alias("d0"), F.max(parsed_date).alias("d1"))
+    dim_geracao, key_rows = _number_keys(
         src, ["SigTipoGeracao", "DscOrigemCombustivel", "DscFonteCombustivel"],
-        "ID_Geracao",
+        "ID_Geracao", *bounds,
     )
+    if key_rows is None:
+        key_rows = src.select(*bounds).collect()
+    d0 = min((r["d0"] for r in key_rows if r["d0"] is not None), default=None)
+    d1 = max((r["d1"] for r in key_rows if r["d1"] is not None), default=None)
+    dim_tempo = None if d0 is None else build_calendar_dim(spark, d0, d1)
     dim_status_src = src.select(
         "DscFaseUsina", "DscTipoOutorga",
         null_or_empty_default("IdcGeracaoQualificada").alias("IdcGeracaoQualificada"),
@@ -197,14 +242,6 @@ def siga_pipeline(spark: SparkSession, src: DataFrame) -> SigaOutputs:
         src.select("CodCEG", "NomEmpreendimento", "DscPropriRegimePariticipacao"),
         ["CodCEG"],
     )
-
-    parsed_date = parse_date_lenient("DatEntradaOperacao")
-    minmax = src.select(
-        F.min(parsed_date).alias("dmin"), F.max(parsed_date).alias("dmax")
-    ).first()
-    dim_tempo = None
-    if minmax["dmin"] is not None:
-        dim_tempo = build_calendar_dim(spark, minmax["dmin"], minmax["dmax"])
 
     fato = build_fact(
         src.withColumn(

@@ -11982,9 +11982,12 @@ def _qls_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dl, margin_x1000): the hashed-linear-model margin per
     document — shared by q_quality_linear_scorer (the scoring surface)
     and q_preference_pairs (the DPO dataset construction), so the
-    model arithmetic is single-sourced."""
+    model arithmetic is single-sourced.  The tokenized docs are
+    ``spread`` before the per-token hash, join and partial aggregate:
+    a corpus stored as one small file is otherwise one scan task, and
+    that whole compute-dense stage ran on it."""
     D = 1024
-    base = _tokenized_docs(spark, sf_dir)
+    base = spread(_tokenized_docs(spark, sf_dir), "doc_id")
     model = spark.range(D).select(
         F.col("id").cast("int").alias("slot"),
         (

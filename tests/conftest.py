@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -11,6 +12,10 @@ from java_etl_bi_generator_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+# job groups live as long as the shared session, so each count gets a
+# name no earlier test used
+_JOB_GROUPS = itertools.count()
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -21,6 +26,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (Spark jobs ``fn()`` launched, its result),
+    counted in a job group of the test's own."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count_jobs_{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count
 
 
 def pytest_terminal_summary(terminalreporter, exitstatus, config):

@@ -161,3 +161,14 @@ print("HASH=" + h)
     h_local = run("local")
     h_reliable = run("reliable", str(tmp_path / "ckpt_ab"))
     assert h_local == h_reliable
+
+
+def test_lazy_cut_runs_upstream_shuffle_at_call_time(spark, count_jobs):
+    """Under AQE a lazy cut is not free at call time: the shuffle stage
+    under it runs as a job when the cut is built; only the stage after
+    the exchange waits for the first action."""
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    jobs, cut = count_jobs(lambda: cut_lineage(df, eager=False))
+    assert jobs >= 1
+    assert sorted(r["count"] for r in cut.collect()) == [142] + [143] * 6
+

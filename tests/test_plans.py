@@ -189,18 +189,22 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir):
     assert not offenders, f"cartesian product planned by: {offenders}"
 
 
-def test_build_dimension_has_no_single_partition_window(spark, sf_dir):
+def test_build_dimension_has_no_single_partition_window(spark, sf_dir, monkeypatch):
     """Surrogate-key assignment must never funnel the distinct key set
     through one partition: every Window node in build_dimension's plan
     carries the __pid partition key (input side) or runs over the tiny
-    per-partition offset table."""
+    per-partition offset table.  The driver limit is patched to 0, so
+    the distributed side is the one inspected even at a fixture size
+    whose keys the driver would number."""
     from java_etl_bi_generator_spark.catalog import load_table
-    from java_etl_bi_generator_spark.operators.star import build_dimension
+    from java_etl_bi_generator_spark.operators import star
 
-    dim = build_dimension(
+    monkeypatch.setattr(star, "DRIVER_DIM_LIMIT", 0)
+    dim = star.build_dimension(
         load_table(spark, sf_dir, "orders"), ["o_custkey"], "cust_dim_id"
     )
     plan = dim._jdf.queryExecution().executedPlan().toString()
+    assert "__pid" in plan
     for line in plan.splitlines():
         if "Window [" in line and "__pid" not in line:
             raise AssertionError(f"single-partition window: {line}")

@@ -2,13 +2,21 @@
 a synthetic SIGA-shaped fixture through ``siga_pipeline``, asserting the
 star-schema quirk semantics — dense ids from 1, first-wins dedup, ``-1``
 missing FKs, ``0`` missing date keys, ``"N/A"`` defaults, comma-decimal
-2-dp measures, calendar min..max inclusive."""
+2-dp measures, calendar min..max inclusive.
+
+Every assertion runs on both sides of ``star.DRIVER_DIM_LIMIT``: the
+dims numbered on the driver (the fixture's size) and, with the limit
+patched to 0, the distributed ``global_rank`` path."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from java_etl_bi_generator_spark.operators import star
 from java_etl_bi_generator_spark.operators.star import siga_pipeline
+from java_etl_bi_generator_spark.sources.csv_ref import write_reference_csv
 
 ROWS = [
     # CodCEG, Nome, TipoGer, Origem, Fonte, Fase, Outorga, Qualif, UF, Mun,
@@ -33,10 +41,62 @@ COLS = (
 ).split()
 
 
+TABLES = ("dim_geracao", "dim_status", "dim_localizacao",
+          "dim_empreendimento", "dim_tempo", "fato_geracao")
+KEYED_DIMS = ("dim_geracao", "dim_status", "dim_localizacao")
+
+# Spark jobs of siga_pipeline plus its six writes on this fixture; the
+# driver-numbered dims launch 17 where the global_rank dims launched 46
+SIGA_JOB_CEILING = 17
+
+
+def _siga(spark, dim_limit: int | None = None):
+    with pytest.MonkeyPatch.context() as mp:
+        if dim_limit is not None:
+            mp.setattr(star, "DRIVER_DIM_LIMIT", dim_limit)
+        return siga_pipeline(spark, spark.createDataFrame(ROWS, COLS))
+
+
 @pytest.fixture(scope="module")
 def outputs(spark):
-    src = spark.createDataFrame(ROWS, COLS)
-    return siga_pipeline(spark, src)
+    return _siga(spark)
+
+
+@pytest.fixture(scope="module")
+def distributed_outputs(spark):
+    return _siga(spark, 0)
+
+
+def _rows(outputs, table):
+    return sorted(map(tuple, getattr(outputs, table).collect()))
+
+
+def test_both_sides_of_the_dim_limit_agree(outputs, distributed_outputs):
+    driver, distributed = outputs, distributed_outputs
+    for t in TABLES:
+        assert _rows(driver, t) == _rows(distributed, t), t
+    for t in KEYED_DIMS:
+        plan = getattr(driver, t)._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Window" not in plan, t
+        plan = getattr(distributed, t)._jdf.queryExecution().executedPlan().toString()
+        assert "__pid" in plan, t
+
+
+def test_siga_pass_job_ceiling(spark, tmp_path, count_jobs):
+    """The whole reference program on the fixture, writes included,
+    stays within SIGA_JOB_CEILING jobs, and each keyed dim is written
+    as one part file."""
+
+    def run():
+        out = _siga(spark)
+        for t in TABLES:
+            write_reference_csv(getattr(out, t), str(tmp_path / t))
+
+    jobs, _ = count_jobs(run)
+    assert 0 < jobs <= SIGA_JOB_CEILING
+    for t in KEYED_DIMS:
+        parts = [f for f in os.listdir(tmp_path / t) if f.startswith("part-")]
+        assert len(parts) == 1, (t, parts)
 
 
 def test_dim_geracao_dense_ids(outputs):
@@ -97,3 +157,14 @@ def test_fact_missing_dim_is_minus_one(spark, outputs):
                      passthrough=[F.col("k")])
     got = {r["k"]: r["dim_id"] for r in out.collect()}
     assert got == {"X": 1, "Y": -1}
+
+
+def test_every_assertion_holds_on_the_distributed_side(distributed_outputs):
+    for check in (
+        test_dim_geracao_dense_ids,
+        test_dim_status_na_default,
+        test_dim_empreendimento_first_wins,
+        test_dim_tempo_inclusive_no_gaps,
+        test_fact_quirks,
+    ):
+        check(distributed_outputs)
