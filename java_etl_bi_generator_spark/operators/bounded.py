@@ -9,12 +9,24 @@ distinct keys this way.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def collect_at_most(df: DataFrame, n: int) -> list | None:
-    """The rows of ``df``, or None when it has more than ``n``."""
+def collect_at_most(
+    df: DataFrame, n: int, order: Sequence[Column] = ()
+) -> list | None:
+    """The rows of ``df``, sorted by ``order`` when it is given, or None
+    when it has more than ``n``.
+
+    Sorted, the top n + 1 rows are taken on the executors (per
+    partition, then merged in one task), so the driver receives at most
+    n + 1 rows.  A sorted frame collected directly would send every
+    partition's top n + 1 to the driver and merge them there."""
+    if order:
+        df = df.orderBy(*order).limit(n + 1).coalesce(1)
     rows = df.limit(n + 1).collect()
     return rows if len(rows) <= n else None
 

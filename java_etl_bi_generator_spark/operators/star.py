@@ -23,10 +23,13 @@ is numbered on the driver from one bounded, Spark-sorted collect and
 comes back as a local relation, so writing it or broadcasting it into
 the fact re-runs nothing.  SIGA's three keyed dims (tens to thousands of
 rows) take that path, and ``dim_tempo``'s date bounds ride along
-dim_geracao's collect.  A larger dimension gets its ids from the
+dim_geracao's collect.  The collect takes the top ``DRIVER_DIM_LIMIT +
+1`` keys on the executors, so whatever the key count the driver receives
+at most that many rows.  A larger dimension gets its ids from the
 distributed two-phase rank (``operators.rank.global_rank``), with no
 single-partition window anywhere, so even a data-grain natural-key
-dimension builds at any cardinality.  Fact-side joins broadcast the dims
+dimension builds at any cardinality; it pays the probe (one more
+distinct of the keys) first.  Fact-side joins broadcast the dims
 (the reference's HashMaps, done right).  The source is scanned once and
 reused; the reference scans the file twice (:61, :142).
 """
@@ -56,8 +59,10 @@ from .rank import global_rank
 
 # Most distinct keys build_dimension numbers on the driver.  A dimension
 # this small is shipped back in the plan and broadcast into every fact
-# join, as the reference's in-heap HashMaps are.
-DRIVER_DIM_LIMIT = 100_000
+# join, as the reference's in-heap HashMaps are.  Measured with
+# scripts/dim_limit_probe.py (SCALING.md): past about 10k keys the driver
+# path is slower than global_rank.
+DRIVER_DIM_LIMIT = 10_000
 
 
 def _number_keys(
@@ -71,7 +76,7 @@ def _number_keys(
         keys = df.groupBy(*key_cols).agg(*aggs)
     else:
         keys = df.select(*key_cols).distinct()
-    rows = collect_at_most(keys.orderBy(*order), DRIVER_DIM_LIMIT)
+    rows = collect_at_most(keys, DRIVER_DIM_LIMIT, order)
     if rows is None:
         ranked = global_rank(keys.select(*key_cols), order, rank_col=id_col)
         dim = ranked.select(F.col(id_col).cast("int").alias(id_col), *key_cols)
@@ -94,9 +99,10 @@ def build_dimension(
     first).
 
     Up to ``DRIVER_DIM_LIMIT`` distinct keys, Spark sorts them in one
-    bounded collect and the id is each key's 1-based position in that
-    order; the dimension comes back as a local relation, which launches
-    no job when it is written or broadcast.  Above the limit, ids come
+    bounded collect (at most ``DRIVER_DIM_LIMIT + 1`` rows reach the
+    driver) and the id is each key's 1-based position in that order;
+    the dimension comes back as a local relation, which launches no job
+    when it is written or broadcast.  Above the limit, ids come
     from the DISTRIBUTED two-phase rank (``operators.rank.global_rank``:
     range-partition on the key, rank in parallel, broadcast prefix
     offsets), with no single-partition window, so a natural-key

@@ -29,19 +29,35 @@ def sf_dir() -> str:
 
 
 @pytest.fixture
-def count_jobs(spark):
-    """``count_jobs(fn)`` -> (Spark jobs ``fn()`` launched, its result),
-    counted in a job group of the test's own."""
+def job_ids(spark):
+    """``job_ids(fn)`` -> (ids of the Spark jobs ``fn()`` launched, its
+    result), found through a job group of the test's own."""
     sc = spark.sparkContext
+    # the three thread-local properties setJobGroup sets
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
 
-    def count(fn):
-        group = f"count_jobs_{next(_JOB_GROUPS)}"
+    def run(fn):
+        group = f"job_ids_{next(_JOB_GROUPS)}"
+        saved = [sc.getLocalProperty(p) for p in props]
         sc.setJobGroup(group, group)
         try:
             out = fn()
         finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+            for p, v in zip(props, saved):
+                sc.setLocalProperty(p, v)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run
+
+
+@pytest.fixture
+def count_jobs(job_ids):
+    """``count_jobs(fn)`` -> (Spark jobs ``fn()`` launched, its result)."""
+
+    def count(fn):
+        ids, out = job_ids(fn)
+        return len(ids), out
 
     return count
 
