@@ -12,13 +12,18 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 
+def h32(col: Column) -> Column:
+    """First 32 bits of md5 of a string column as a non-negative bigint —
+    the portable hash the sketches and samplers key on (bit 63 never set,
+    so no signed-overflow divergence between engines)."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
+
+
 def md5_uniform(key: Column) -> Column:
     """A deterministic draw u in (0,1) from the md5 of ``key``: the first
     8 hex chars as a 32-bit int, then (h + 0.5)/2^32 — an exact rational
     strictly inside the interval, identical in any engine."""
-    h = F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
-    )
+    h = h32(key.cast("string"))
     return (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
 
 

@@ -50,6 +50,7 @@ from .functions.locale_ptbr import (
 )
 from .functions.ranking_eval import NDCG_WEIGHTS
 from .functions.rounding import dsum, pround
+from .functions.sampling import h32 as _h32
 from .functions.text import (
     STOPWORDS_EN,
     bpe_ish_token_count,
@@ -68,6 +69,19 @@ from .operators.dedup import (
     prefix_jaccard_pairs,
     simhash64,
     winnow_fingerprints,
+)
+from .operators.curation import (
+    decontam_grams,
+    dsir_scores,
+    gopher_keep,
+    gopher_measures,
+    gopher_rules,
+    lang_hits,
+    lang_pred,
+    mixing_weights,
+    ngram_hits,
+    pack_sequences,
+    temperature_shares,
 )
 from .operators.similarity import brute_force_topk, ivf_topk
 from .operators.star import (
@@ -3027,17 +3041,14 @@ def q_domain_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pretraining DATA-MIXING weights — the knob between curation and
     tokenization in every LLM data pipeline (The Pile / LLaMA-style
     fixed-ratio mixing): per source, the token mass, its natural share,
-    and the up-to-uniform CAP weight w = min(1, target/actual) with
-    target = total_tokens/n_sources — an over-represented source is
-    downsampled to the uniform share, an under-represented one keeps
-    weight 1 (capping, not upsampling: repeating data has its own
-    cost).  tokens_after_cap = floor(actual·w) shows the post-mixing
-    budget per source.  Every number derives from exact integer token
-    counts (the shared whitespace tokenization, _N_TOKENS oracle twin);
-    shares and weights are pinned fixed-order divisions.  Scale shape:
-    one token-count map + one shuffle to the SOURCE grain (a handful of
-    rows), then arithmetic on that tiny frame — corpus-size-invariant
-    output."""
+    and the up-to-uniform CAP weight of operators/curation.py's
+    ``mixing_weights``.  tokens_after_cap = floor(actual·w) shows the
+    post-mixing budget per source.  Every number derives from exact
+    integer token counts (the shared whitespace tokenization, _N_TOKENS
+    oracle twin); shares and weights are pinned fixed-order divisions.
+    Scale shape: one token-count map + one shuffle to the SOURCE grain
+    (a handful of rows), then arithmetic on that tiny frame —
+    corpus-size-invariant output."""
     from .functions.text import token_count
 
     docs = T(spark, sf_dir, "documents")
@@ -3045,26 +3056,12 @@ def q_domain_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(token_count("text")).cast("bigint").alias("tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
     )
-    tot = per_src.agg(
-        F.sum("tokens").cast("bigint").alias("total_tokens"),
-        F.count(F.lit(1)).cast("bigint").alias("n_sources"),
-    )
-    j = per_src.join(F.broadcast(tot))
-    target = F.col("total_tokens").cast("double") / F.col(
-        "n_sources"
-    ).cast("double")
-    share = F.col("tokens").cast("double") / F.col(
-        "total_tokens"
-    ).cast("double")
-    w = F.when(
-        F.col("tokens").cast("double") > target,
-        target / F.col("tokens").cast("double"),
-    ).otherwise(F.lit(1.0))
-    return j.select(
+    w = F.col("mix_weight")
+    return mixing_weights(per_src).select(
         "source",
         "n_docs",
         "tokens",
-        pround(share, 6).alias("natural_share"),
+        pround(F.col("natural_share"), 6).alias("natural_share"),
         pround(w, 6).alias("mix_weight"),
         F.floor(F.col("tokens").cast("double") * w)
         .cast("bigint")
@@ -3124,21 +3121,18 @@ def q_language_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFra
     §3.1] — the third mixing knob next to q_domain_mixing_weights'
     uniform cap and q_token_budget's epoch cap: sample language i with
     probability q_i ∝ p_i^α (α=0.7), flattening the head so
-    low-resource languages are seen more without the hard cap.  Float
-    discipline: each per-language ln(p_i) is pinned to the ×1e6 micro
-    grid first; exp(0.7·l6/1e6) is one per-row IEEE expression on that
-    identical pinned input (the churn-sigmoid precedent); the weight is
-    RE-pinned to micro units before the k-row normalizing sum, so the
-    denominator is order-free integer addition; shares/boosts are
-    pinned divisions.  Scale shape: one token-count scan to the
-    LANGUAGE grain (a handful of rows), then constant-size arithmetic
-    — corpus-size-invariant output."""
+    low-resource languages are seen more without the hard cap.  The
+    shares are operators/curation.py's ``temperature_shares`` (its float
+    discipline is documented there: exp(0.7·l6/1e6) is one per-row IEEE
+    expression on a micro-pinned input, the churn-sigmoid precedent);
+    shares/boosts are pinned divisions.  Scale shape: one token-count
+    scan to the LANGUAGE grain (a handful of rows), then constant-size
+    arithmetic — corpus-size-invariant output."""
     from .functions.text import token_count
 
     docs = T(spark, sf_dir, "documents")
-    # cut at the language grain: the ~|langs|-row frame feeds FOUR
-    # consumers (total, join, normalizer, output) — without the cut each
-    # re-derivation rescans the whole corpus to rebuild 5 rows
+    # cut at the language grain: the final plan reads the ~|langs|-row
+    # pinned frame, never the corpus (pinned in tests/test_plans.py)
     per_lang = cut_lineage(
         docs.groupBy("lang").agg(
             F.sum(token_count("text")).cast("bigint").alias("tokens"),
@@ -3146,23 +3140,9 @@ def q_language_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFra
         ),
         eager=False,
     )
-    tot = per_lang.agg(F.sum("tokens").cast("bigint").alias("total_tokens"))
-    j = per_lang.join(F.broadcast(tot))
-    p = F.col("tokens").cast("double") / F.col("total_tokens").cast("double")
-    l6 = F.floor(F.log(p) * F.lit(1e6) + F.lit(0.5)).cast("bigint")
-    w6 = F.floor(
-        F.exp(F.lit(0.7) * (l6.cast("double") / F.lit(1e6))) * F.lit(1e6)
-        + F.lit(0.5)
-    ).cast("bigint")
-    scored = cut_lineage(
-        j.select("lang", "n_docs", "tokens", "total_tokens", w6.alias("w6")),
-        eager=False,
-    )
-    norm = scored.agg(F.sum("w6").cast("bigint").alias("sum_w6"))
-    out = scored.join(F.broadcast(norm))
-    nat = F.col("tokens").cast("double") / F.col("total_tokens").cast("double")
-    temp = F.col("w6").cast("double") / F.col("sum_w6").cast("double")
-    return out.select(
+    nat = F.col("natural_share")
+    temp = F.col("temperature_share")
+    return temperature_shares(per_lang).select(
         "lang",
         "n_docs",
         "tokens",
@@ -3234,82 +3214,25 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary — the point of DSIR at scale: the two feature models are
     FIXED-SIZE (≤B rows each, broadcastable) no matter how large the
     corpus vocabulary grows, where Moore-Lewis's LMs are
-    vocabulary-sized.  Target = the 'src7' feed, raw = whole corpus;
-    both bucket models add-one smoothed over B buckets; each bucket's
-    ln ratio is pinned to ×1e6 micro-units on the ≤B-row model frame,
-    so per-doc accumulation is order-free integer math and the float
-    score is ONE pinned division.  ``selected`` = per-token log-weight
-    above the CORPUS-AVERAGE log-weight (DSIR selects by rank, not by
-    sign — with a small target and B=1024 the add-one smoothing drags
-    every absolute ratio negative), tested by the exact bigint
-    cross-multiplication __s6·T_tokens > S_total·n_tokens (no float
-    threshold).  Scale shape: one scan+explode to the (doc, bucket)
-    grain, two bounded B-row aggregates joined back by broadcast, one
-    doc-grain collapse."""
+    vocabulary-sized.  Scoring and ``selected`` are operators/curation.py's
+    ``dsir_scores`` (target feed, smoothing, micro-pinning and the exact
+    selection test are documented there); this query adds
+    ``dsir_logw``, the per-token log-weight as ONE pinned division.
+    Scale shape: one scan+explode to the (doc, bucket) grain, two
+    bounded B-row aggregates joined back by broadcast, one doc-grain
+    collapse."""
     docs = T(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    tb = docs.select(
-        "doc_id", "source", F.explode(tokens("text")).alias("tok")
-    ).select(
-        "doc_id",
-        "source",
-        (_h32(F.col("tok")) % F.lit(1024)).alias("b"),
-    )
-    tb = cut_lineage(tb)  # model build + per-doc fold both consume it
-    model = tb.groupBy("b").agg(
-        F.sum(F.when(F.col("source") == "src7", 1).otherwise(0))
-        .cast("bigint")
-        .alias("c_tgt"),
-        F.count(F.lit(1)).cast("bigint").alias("c_raw"),
-    )
-    scalars = tb.agg(
-        F.sum(F.when(F.col("source") == "src7", 1).otherwise(0))
-        .cast("bigint")
-        .alias("t_tgt"),
-        F.count(F.lit(1)).cast("bigint").alias("t_raw"),
-    )
-    lp = lambda c, t: F.floor(  # noqa: E731
-        F.log(
-            (c.cast("double") + F.lit(1.0))
-            / (t.cast("double") + F.lit(1024.0))
-        )
-        * 1000000
-        + F.lit(0.5)
-    ).cast("bigint")
-    scored_model = model.crossJoin(F.broadcast(scalars)).select(
-        "b",
-        (
-            lp(F.col("c_tgt"), F.col("t_tgt"))
-            - lp(F.col("c_raw"), F.col("t_raw"))
-        ).alias("lr6"),
-    )
-    per_doc = (
-        tb.join(F.broadcast(scored_model), "b")
-        .groupBy("doc_id", "source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum("lr6").cast("bigint").alias("__s6"),
-        )
-    )
-    corpus = per_doc.agg(
-        F.sum("__s6").cast("bigint").alias("s_total"),
-        F.sum("n_tokens").cast("bigint").alias("t_tokens"),
-    )
-    return per_doc.crossJoin(F.broadcast(corpus)).select(
+    return dsir_scores(docs).select(
         "doc_id",
         "source",
         "n_tokens",
         pround(
-            F.col("__s6").cast("double")
+            F.col("s6").cast("double")
             / F.lit(1e6)
             / F.col("n_tokens").cast("double"),
             4,
         ).alias("dsir_logw"),
-        (
-            F.col("__s6").cast("decimal(38,0)")
-            * F.col("t_tokens").cast("decimal(38,0)")
-            > F.col("s_total").cast("decimal(38,0)")
-            * F.col("n_tokens").cast("decimal(38,0)")
-        ).alias("selected"),
+        "selected",
     )
 
 
@@ -4834,21 +4757,17 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q("q_lang_id")
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4: stopword-hit language heuristic with deterministic tie-break."""
+    """L4: stopword-hit language heuristic with deterministic tie-break
+    (operators/curation.py ``lang_hits`` / ``lang_pred``)."""
     docs = T(spark, sf_dir, "documents").withColumn("__toks", tokens("text"))
     toks = F.col("__toks")
-    en = stopword_count_of(toks, STOPWORDS_EN)
-    pt = stopword_count_of(toks, ("de", "a", "o", "que", "e", "do", "da", "em", "um", "para"))
-    es = stopword_count_of(toks, ("de", "la", "que", "el", "en", "y", "a", "los", "se", "del"))
+    en, pt, es = lang_hits(toks)
     return docs.select(
         "doc_id",
         en.alias("en_hits"),
         pt.alias("pt_hits"),
         es.alias("es_hits"),
-        F.when((en >= pt) & (en >= es), "en")
-        .when(pt >= es, "pt")
-        .otherwise("es")
-        .alias("lang_pred"),
+        lang_pred(toks).alias("lang_pred"),
     )
 
 
@@ -7346,40 +7265,10 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum: bin = floor((cum_tokens − doc_tokens) / 512).  The streaming-
     packer approximation of bin packing: exact integer arithmetic,
     deterministic across engines and re-runs.  Emits per-bin document
-    count and fill level.
-
-    The prefix sum is DISTRIBUTED (a global ``Window.orderBy`` would pull
-    the whole corpus into one partition): doc-id range buckets carry
-    in-bucket running sums in parallel, a buckets-sized offset table
-    cumulates per-bucket totals, and a broadcast join adds the offsets —
-    the classic two-phase scan, identical output to the single-partition
-    form."""
-    docs = T(spark, sf_dir, "documents").select(
-        "doc_id", token_count_of(tokens("text")).alias("n_tok")
-    )
-    bucket = (F.col("doc_id") / F.lit(1000)).cast("bigint")
-    d = docs.withColumn("bucket", bucket)
-    in_w = (
-        Window.partitionBy("bucket")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = d.withColumn("in_cum", F.sum("n_tok").over(in_w))
-    totals = d.groupBy("bucket").agg(F.sum("n_tok").alias("btot"))
-    off_w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    offsets = totals.select(
-        "bucket",
-        (F.sum("btot").over(off_w) - F.col("btot")).alias("offset"),
-    )
-    packed = within.join(F.broadcast(offsets), "bucket").select(
-        "doc_id",
-        "n_tok",
-        (
-            (F.col("offset") + F.col("in_cum") - F.col("n_tok")) / F.lit(512)
-        ).cast("bigint").alias("bin_id"),
-    )
+    count and fill level.  The packing is operators/curation.py's
+    ``pack_sequences``, a distributed two-phase prefix sum, which the
+    flagship pipeline runs per split."""
+    packed = pack_sequences(T(spark, sf_dir, "documents"))
     return packed.groupBy("bin_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("bin_tokens"),
@@ -9192,19 +9081,11 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-evaluation surface: confusion matrix of the stopword
     language-ID heuristic against the labeled ``lang`` column, with
-    per-cell counts — the lang_id expression inlined next to the label so
-    the corpus scans ONCE (joining the declared q_lang_id back to the
-    table would scan twice)."""
+    per-cell counts — q_lang_id's ``lang_pred`` expression evaluated
+    next to the label so the corpus scans ONCE (joining the declared
+    q_lang_id back to the table would scan twice)."""
     docs = T(spark, sf_dir, "documents").withColumn("__toks", tokens("text"))
-    toks = F.col("__toks")
-    en = stopword_count_of(toks, STOPWORDS_EN)
-    pt = stopword_count_of(toks, ("de", "a", "o", "que", "e", "do", "da", "em", "um", "para"))
-    es = stopword_count_of(toks, ("de", "la", "que", "el", "en", "y", "a", "los", "se", "del"))
-    pred = (
-        F.when((en >= pt) & (en >= es), "en")
-        .when(pt >= es, "pt")
-        .otherwise("es")
-    )
+    pred = lang_pred(F.col("__toks"))
     return (
         docs.groupBy(F.col("lang").alias("lang_true"), pred.alias("lang_pred"))
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -9413,19 +9294,7 @@ def q_class_prf1(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").withColumn(
         "__toks", tokens("text")
     )
-    toks = F.col("__toks")
-    en = stopword_count_of(toks, STOPWORDS_EN)
-    pt = stopword_count_of(
-        toks, ("de", "a", "o", "que", "e", "do", "da", "em", "um", "para")
-    )
-    es = stopword_count_of(
-        toks, ("de", "la", "que", "el", "en", "y", "a", "los", "se", "del")
-    )
-    pred = (
-        F.when((en >= pt) & (en >= es), "en")
-        .when(pt >= es, "pt")
-        .otherwise("es")
-    )
+    pred = lang_pred(F.col("__toks"))
     cm = cut_lineage(
         docs.groupBy(F.col("lang").alias("t"), pred.alias("p")).agg(
             F.count(F.lit(1)).cast("bigint").alias("c")
@@ -9505,19 +9374,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").withColumn(
         "__toks", tokens("text")
     )
-    toks = F.col("__toks")
-    en = stopword_count_of(toks, STOPWORDS_EN)
-    pt = stopword_count_of(
-        toks, ("de", "a", "o", "que", "e", "do", "da", "em", "um", "para")
-    )
-    es = stopword_count_of(
-        toks, ("de", "la", "que", "el", "en", "y", "a", "los", "se", "del")
-    )
-    pred = (
-        F.when((en >= pt) & (en >= es), "en")
-        .when(pt >= es, "pt")
-        .otherwise("es")
-    )
+    pred = lang_pred(F.col("__toks"))
     cm = cut_lineage(
         docs.groupBy(
             F.col("lang").alias("t"), pred.alias("p")
@@ -14194,13 +14051,6 @@ def q_star_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 # counters / bit positions are all plain rows).
 
 
-def _h32(col: "F.Column") -> "F.Column":
-    """First 32 bits of md5 of a string column as a non-negative bigint —
-    the portable hash every sketch below keys on (bit 63 never set, so no
-    signed-overflow divergence between engines)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
-
-
 @q("q_hll_distinct")
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-count built from scratch (Flajolet et al. 2007):
@@ -15883,7 +15733,8 @@ def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume-independent) — and the gram table is LINEAGE-CUT, because
     three consumers (train set, heldout probe, per-doc base) would
     otherwise each re-derive the shingles (DataFrame lineage is not a
-    CTE)."""
+    CTE).  The shingles and the probe are operators/curation.py's
+    ``decontam_grams`` / ``ngram_hits``."""
     docs = T(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -15896,22 +15747,14 @@ def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = cut_lineage(
         spread(docs, "doc_id").select(
             "doc_id",
-            F.array_distinct(word_shingles("text", 5)).alias("grams"),
+            decontam_grams().alias("grams"),
             F.when(bucket < 80, "train").otherwise("heldout").alias("split"),
         )
     )
-    train_grams = (
-        tagged.filter(F.col("split") == "train")
-        .select(F.explode("grams").alias("g"))
-        .distinct()
-    )
-    held = tagged.filter(F.col("split") == "heldout").select(
-        "doc_id", F.explode("grams").alias("g")
-    )
-    hits = (
-        held.join(train_grams, "g", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
+    hits = ngram_hits(
+        tagged.select("doc_id", "split", F.explode("grams").alias("g")),
+        probe=F.col("split") == "heldout",
+        reference=F.col("split") == "train",
     )
     base = tagged.filter(F.col("split") == "heldout").select(
         "doc_id", F.size("grams").cast("bigint").alias("n_ngrams")
@@ -16050,45 +15893,17 @@ def q_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     a symbol-to-word ceiling, and an alpha-word floor — each emitted as
     its own boolean plus the conjunction, so downstream mixes can
     attribute WHY a document fell out (q_repetition_filter carries the
-    companion repetition signals).  Every rule is integer arithmetic
-    (mean-length bounds cross-multiplied: 3n ≤ Σlen ≤ 10n), one scan,
-    no shuffle, pure codegen."""
+    companion repetition signals).  The rules are operators/curation.py's
+    ``gopher_rules``, shared with q_curation_funnel and the flagship
+    pipeline.  Every rule is integer arithmetic (mean-length bounds
+    cross-multiplied: 3n ≤ Σlen ≤ 10n), one scan, no shuffle, pure
+    codegen."""
     docs = T(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    toks = tokens("text")
-    d = docs.select(
+    d = docs.select("doc_id", *gopher_measures(tokens("text")))
+    return d.select(
         "doc_id",
-        token_count_of(toks).cast("bigint").alias("n_words"),
-        F.length(F.regexp_replace(F.col("text"), r"\s", "")).cast("bigint")
-        .alias("sum_word_chars"),
-        stopword_count_of(toks).cast("bigint").alias("n_stop"),
-        punct_count("text").cast("bigint").alias("n_symbols"),
-        F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
-        .cast("bigint").alias("n_alpha_words"),
-    )
-    rules = d.select(
-        "doc_id",
-        ((F.col("n_words") >= 30) & (F.col("n_words") <= 100000)).alias(
-            "ok_word_count"
-        ),
-        (
-            (F.col("sum_word_chars") >= 3 * F.col("n_words"))
-            & (F.col("sum_word_chars") <= 10 * F.col("n_words"))
-        ).alias("ok_mean_word_len"),
-        (F.col("n_stop") >= 2).alias("ok_stopwords"),
-        (10 * F.col("n_symbols") <= F.col("n_words")).alias("ok_symbol_ratio"),
-        (10 * F.col("n_alpha_words") >= 8 * F.col("n_words")).alias(
-            "ok_alpha_words"
-        ),
-    )
-    return rules.select(
-        "*",
-        (
-            F.col("ok_word_count")
-            & F.col("ok_mean_word_len")
-            & F.col("ok_stopwords")
-            & F.col("ok_symbol_ratio")
-            & F.col("ok_alpha_words")
-        ).alias("keep"),
+        *[rule.alias(name) for name, rule in gopher_rules().items()],
+        gopher_keep().alias("keep"),
     )
 
 
@@ -17051,9 +16866,12 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents enter, survive exact dedup (first-wins on content sha),
     survive the Gopher quality gate, and carry no 5-gram contamination
     against the train split — the composition readout a dataset card
-    reports.  Reuses the registry's own building blocks (q_dedup_exact /
-    q_gopher_quality_rules / q_decontaminate_ngrams semantics) so the
-    funnel can never drift from the individual gates.  Each stage is a
+    reports.  The quality and contamination flags call the same
+    operators/curation.py functions as q_gopher_quality_rules
+    (``gopher_measures`` / ``gopher_keep``) and q_decontaminate_ngrams
+    (``decontam_grams`` / ``ngram_hits``), so they cannot drift from
+    those gates; the dedup flag is q_dedup_exact's keep-min-id rule
+    written as a window over the content hash.  Each stage is a
     flag computed independently, then ONE aggregation; counts are
     nested (stage N counts docs passing stages 1..N), matching how
     funnel stages read.  The flags-plus-grams frame is LINEAGE-CUT once
@@ -17074,28 +16892,12 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__sha",
     )
     w = Window.partitionBy("__sha").orderBy("doc_id")
-    toks = tokens("text")
     base = docs.select(
         "doc_id",
         "source",
         "text",
         (F.row_number().over(w) == 1).alias("dedup_ok"),
-        token_count_of(toks).cast("bigint").alias("n_words"),
-        F.length(F.regexp_replace(F.col("text"), r"\s", "")).cast("bigint")
-        .alias("sum_word_chars"),
-        stopword_count_of(toks).cast("bigint").alias("n_stop"),
-        punct_count("text").cast("bigint").alias("n_symbols"),
-        F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
-        .cast("bigint").alias("n_alpha_words"),
-    )
-    quality_ok = (
-        (F.col("n_words") >= 30)
-        & (F.col("n_words") <= 100000)
-        & (F.col("sum_word_chars") >= 3 * F.col("n_words"))
-        & (F.col("sum_word_chars") <= 10 * F.col("n_words"))
-        & (F.col("n_stop") >= 2)
-        & (10 * F.col("n_symbols") <= F.col("n_words"))
-        & (10 * F.col("n_alpha_words") >= 8 * F.col("n_words"))
+        *gopher_measures(tokens("text")),
     )
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
@@ -17110,27 +16912,22 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filters scan those cached rows, and the flags consumer below
     # never deserializes a gram.
     tagged = cut_lineage(
-        base.withColumn("quality_ok", quality_ok).withColumn(
+        base.withColumn("quality_ok", gopher_keep()).withColumn(
             "split", F.when(bucket < 80, "train").otherwise("heldout")
         )
     )
     grams = cut_lineage(
         tagged.select(
-            "doc_id",
-            F.explode(F.array_distinct(word_shingles("text", 5))).alias("g"),
-            "split",
+            "doc_id", F.explode(decontam_grams()).alias("g"), "split"
         ),
         eager=False,
     )
     tagged = tagged.drop("text")
-    train_grams = grams.filter(F.col("split") == "train").select("g").distinct()
-    dirty = (
-        grams.filter(F.col("split") == "heldout")
-        .join(train_grams, "g", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("contaminated", F.lit(True))
-    )
+    dirty = ngram_hits(
+        grams,
+        probe=F.col("split") == "heldout",
+        reference=F.col("split") == "train",
+    ).select("doc_id", F.lit(True).alias("contaminated"))
     flagged = tagged.join(dirty, "doc_id", "left").withColumn(
         "clean_ok",
         (F.col("split") == "train") | F.col("contaminated").isNull(),
