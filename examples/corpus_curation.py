@@ -43,6 +43,7 @@ from java_etl_bi_generator_spark.functions.text import (
     tokens,
 )
 from java_etl_bi_generator_spark.lineage import cut_lineage
+from java_etl_bi_generator_spark.operators.curation import split_bucket
 from java_etl_bi_generator_spark.operators.dedup import (
     cut_passages,
     duplicated_passages,
@@ -111,10 +112,7 @@ def curate(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     n3 = docs.count()
 
     # 4. deterministic split: stable under re-runs and appends
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     docs = docs.withColumn(
         "split",
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"),

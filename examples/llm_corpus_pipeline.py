@@ -221,11 +221,12 @@ def run(spark, sf_dir: str, out_dir: str) -> dict[str, int]:
     packed = pack_sequences(docs, "split")
     out_path = os.path.join(out_dir, "packed")
     packed.write.mode("overwrite").partitionBy("split").parquet(out_path)
-    funnel["packed_rows"] = spark.read.parquet(out_path).count()
-    funnel["packed_bins"] = (
-        spark.read.parquet(out_path).select("split", "bin_id").distinct()
-        .count()
-    )
+    written = spark.read.parquet(out_path).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count_distinct("split", "bin_id").alias("bins"),
+    ).first()
+    funnel["packed_rows"] = written["rows"]
+    funnel["packed_bins"] = written["bins"]
 
     print("\nfunnel reconciliation:")
     for stage, n in funnel.items():

@@ -9,6 +9,9 @@ it:
   q_langid_confusion, q_class_prf1, q_cohens_kappa).
 - ``gopher_measures`` / ``gopher_rules`` / ``gopher_keep``: the Gopher
   rule bundle (q_gopher_quality_rules, q_curation_funnel).
+- ``split_bucket``: the md5 split bucket of a document (q_corpus_sample,
+  q_split_assign, q_stratified_sample, q_contamination_check,
+  q_ngram_novelty, q_decontaminate_ngrams, q_curation_funnel).
 - ``decontam_grams`` / ``ngram_hits``: the 5-gram decontamination probe
   (q_decontaminate_ngrams, q_curation_funnel).
 - ``dsir_scores``: DSIR hashed-bucket importance selection
@@ -110,6 +113,15 @@ def gopher_rules() -> dict[str, Column]:
 def gopher_keep() -> Column:
     """True where every Gopher rule holds."""
     return functools.reduce(operator.and_, gopher_rules().values())
+
+
+def split_bucket() -> Column:
+    """A document's split bucket in [0, 100): the first 16 bits of
+    md5(doc_id) mod 100, so split membership is stable under re-runs,
+    reshuffles and appends.  The 80/20 train/heldout splits cut it at
+    80."""
+    h = F.md5(F.col("doc_id").cast("string"))
+    return F.conv(F.substring(h, 1, 4), 16, 10).cast("bigint") % 100
 
 
 def decontam_grams() -> Column:

@@ -81,6 +81,7 @@ from .operators.curation import (
     mixing_weights,
     ngram_hits,
     pack_sequences,
+    split_bucket,
     temperature_shares,
 )
 from .operators.similarity import brute_force_topk, ivf_topk
@@ -2758,10 +2759,12 @@ def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize to micro-units, distances are exact bigint Σ(xi−ci)², means
     are floor-divided integer centroids — so three Lloyd rounds produce
     bit-identical models on Spark and on the DuckDB oracle (which unrolls
-    the same three rounds in SQL).  Per iteration the k×dim model ships
-    in the task closure and only k×dim sufficient-statistic rows
-    shuffle; assignment (with each vector's exact distance to its
-    centroid) is one Arrow map.  Output: per-cell sizes + the
+    the same three rounds in SQL).  A corpus under the trainer's driver
+    bound trains on the driver from one collect; above it, per iteration
+    the k×dim model ships in the task closure and only k×dim
+    sufficient-statistic rows shuffle.  Assignment (with each vector's
+    exact distance to its centroid) is one Arrow map.  Output: per-cell
+    sizes + the
     EXACT within-cell squared-distance total in micro-units² (the
     quantity Lloyd's monotonically decreases) — DECIMAL(38,0)
     accumulation internally, BIGINT on the wire (all-integer columns so
@@ -4486,10 +4489,7 @@ def q_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable across engines, re-runs, repartitions, and appends — the
     property a training-data pipeline needs for auditable subsets."""
     docs = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     return (
         docs.withColumn("bucket", bucket)
         .filter(F.col("bucket") < 10)
@@ -4742,10 +4742,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc id — same portable-bucket construction as q_corpus_sample, so
     membership is stable under reshuffling and incremental appends."""
     docs = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     return docs.select(
         "doc_id",
         F.when(bucket < 80, "train")
@@ -6135,10 +6132,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable md5 hash-bucket as q_corpus_sample, so strata membership is
     reproducible under reshuffling and appends."""
     docs = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     rate = (
         F.when(F.col("lang") == "en", 10)
         .when(F.col("lang") == "pt", 30)
@@ -8920,10 +8914,7 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs before shipping an eval set).  Train hashes are a semi-join
     probe; one summary row so the metric is monitorable."""
     docs = T(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     hashed = docs.select(
         "doc_id",
         F.sha2(F.col("text"), 256).alias("hash"),
@@ -10298,10 +10289,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__toks", tokens("text"))
         .filter(F.size("__toks") >= 2)
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     with_split = docs.withColumn(
         "split", F.when(bucket < 80, "train").otherwise("heldout")
     )
@@ -15736,10 +15724,7 @@ def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE).  The shingles and the probe are operators/curation.py's
     ``decontam_grams`` / ``ngram_hits``."""
     docs = T(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     # ``spread``, not a bare keyed repartition: AQE coalesces the ~10 MB
     # text exchange back to a handful of tasks from its byte count, and
     # the 5-gram concat_ws is the dominant CPU of the query (measured
@@ -16899,10 +16884,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.row_number().over(w) == 1).alias("dedup_ok"),
         *gopher_measures(tokens("text")),
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = split_bucket()
     # The cut carries the RAW text, not the 5-gram array: profiled at
     # sf0.1, the old grams-array cache was re-read and re-exploded by
     # each of its three consumers (4.0 + 2.3 + 1.8 cpu-s of the
@@ -18274,7 +18256,7 @@ def _pq_models(
 ) -> tuple[list[list[list[int]]], int]:
     """M integer-pinned sub-quantizer codebooks; returns (models,
     subdim).  Trained by the FUSED trainer (operators/kmeans.py
-    pq_fit_int — one scan + one m·k·subdim stats shuffle per round),
+    pq_fit_int — all M codebooks in one pass per round),
     output-identical to M independent kmeans_fit_int runs over the
     slices (the form the DuckDB oracle unrolls; equivalence pinned in
     tests/test_kmeans.py).  Memoized on ``cache_key`` (the sf_dir)."""
@@ -18320,8 +18302,12 @@ def _ivfpq_index(
     the full training stack (k=8 coarse Lloyd's, then M=4×16-code
     residual codebooks), memoized on ``cache_key`` (the sf_dir) so
     q_ivfpq_topk and q_ivfpq_recall share ONE training per corpus per
-    process instead of re-running it (round-7 verdict task 3).  Both
-    models are plain integer lists — deterministic, session-independent."""
+    process instead of re-running it.  Both models are plain integer
+    lists — deterministic, session-independent.  Under the trainer's
+    driver bound (operators/kmeans.py ``DRIVER_LLOYD_LIMIT``) each
+    training is one bounded collect, the residual one reading the
+    coarse assignment once; above it the trainer pins its input, so the
+    rounds do not re-run the coarse assignment."""
     from .operators.kmeans import kmeans_fit_int, pq_fit_int
 
     if cache_key is not None and cache_key in _IVFPQ_INDEX_CACHE:
@@ -18343,8 +18329,10 @@ def _ivfpq_index(
 
 def _coarse_residuals(em: DataFrame, coarse: list) -> DataFrame:
     """(vec_id, cell, __r): each vector's coarse cell and its exact
-    integer residual v − coarse[cell] in micro-units, lineage-cut — the
-    input of both the residual PQ training and the IVF-PQ encode."""
+    integer residual v − coarse[cell] in micro-units — the input of both
+    the residual PQ training and the IVF-PQ encode.  Not pinned: each
+    consumer reads it once (the trainer pins it itself when its rounds
+    run distributed and re-read it)."""
     from .operators.kmeans import (
         assign_codes_int,
         bigint_literal,
@@ -18352,16 +18340,14 @@ def _coarse_residuals(em: DataFrame, coarse: list) -> DataFrame:
     )
 
     qv = em.select("vec_id", quantize_micro("embedding").alias("__q"))
-    return cut_lineage(
-        assign_codes_int(qv, [coarse], "__q", ["cell"]).select(
-            "vec_id",
-            "cell",
-            F.zip_with(
-                F.col("__q"),
-                F.element_at(bigint_literal(coarse), F.col("cell") + 1),
-                lambda x, y: x - y,
-            ).alias("__r"),
-        )
+    return assign_codes_int(qv, [coarse], "__q", ["cell"]).select(
+        "vec_id",
+        "cell",
+        F.zip_with(
+            F.col("__q"),
+            F.element_at(bigint_literal(coarse), F.col("cell") + 1),
+            lambda x, y: x - y,
+        ).alias("__r"),
     )
 
 
@@ -18420,8 +18406,10 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     M codes plus its exact total quantization error Σ_s ‖v_s −
     c_s[code_s]‖² in micro-unit bigints.  The compressed representation
     behind q_pq_adc_topk — 4 bytes/vector versus 512, the memory step
-    that makes billion-vector ANN fit RAM.  Scale shape: M small Lloyd
-    runs (k×subdim sufficient-stat shuffles), then encode is one Arrow
+    that makes billion-vector ANN fit RAM.  Scale shape: one fused
+    Lloyd run for all M (on the driver from one collect under the
+    trainer's bound, else one k×subdim sufficient-stat shuffle per
+    round), then encode is one Arrow
     map that assigns all M subspaces and their exact errors per batch
     (operators/kmeans.py assign_codes_int).  The DuckDB oracle replays
     all four trainings as independent prefixed CTE chains over rebased
@@ -18513,14 +18501,17 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (partition pruning when stored cell-partitioned), zero vector
     arithmetic per candidate.
     TRAINING cost is measured, not asserted (scripts/scale_probe.py pq;
-    SCALING.md round-8 table): 50k vectors → 24.3 s, 500k → 61.0 s on
-    local[32] — linear in N per Lloyd's round (k fixed, unlike
-    SemDeDup's k~√N), so full-corpus training holds to ~10M vectors
-    single-node; beyond that, sample-then-train (FAISS's bounded
-    30-256 points/centroid) keeps training constant-cost, and the
-    deterministic integer trainer preserves bit-identical replay on a
-    fixed-seed sample.  Within one process the fitted index is
-    memoized per sf_dir (_ivfpq_index), shared with q_ivfpq_recall."""
+    SCALING.md): up to the trainer's DRIVER_LLOYD_LIMIT (50k 64-dim
+    vectors) both trainings run on the driver from one collect each,
+    2.6 s against 5.8 s distributed at 50k on 4 cores; above it each
+    Lloyd's round is one scan + one sufficient-stats shuffle, linear in
+    N (k fixed, unlike SemDeDup's k~√N), so full-corpus training holds
+    to ~10M vectors single-node; beyond that, sample-then-train
+    (FAISS's bounded 30-256 points/centroid) keeps training
+    constant-cost, and the deterministic integer trainer preserves
+    bit-identical replay on a fixed-seed sample.  Within one process
+    the fitted index is memoized per sf_dir (_ivfpq_index), shared with
+    q_ivfpq_recall."""
     return _ivfpq_adc_scored(spark, sf_dir).orderBy(
         "adc_dist", "vec_id"
     ).limit(10)

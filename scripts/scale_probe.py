@@ -178,40 +178,73 @@ def main() -> None:
             )
             shutil.rmtree(tmp, ignore_errors=True)
     elif mode == "pq":
-        # PQ / IVF-PQ TRAINING-cost curve (round-7 verdict task 7): the
-        # per-query encode/search path is linear maps + table lookups,
-        # but training runs Lloyd's over ALL N vectors — this measures
-        # where full-corpus training stops being sensible and
-        # sample-then-train becomes mandatory (FAISS trains on 30-256
-        # points per centroid, i.e. a bounded SAMPLE, for exactly this
-        # reason; the SemDeDup N^1.5 lesson: measure before claiming).
-        # Defaults M=4, k=16, iters=2 (the query constants), coarse k=8.
+        # PQ / IVF-PQ TRAINING cost on both sides of the trainer's
+        # driver bound (operators/kmeans.py DRIVER_LLOYD_LIMIT, patched
+        # here: the driver side runs the rounds in numpy over one
+        # bounded collect, the distributed side one Spark job per round)
+        # — the measurement the bound is set from.  The query constants
+        # M=4, k=16, iters=2, coarse k=8; seconds are min-of-2 after a
+        # warm-up.  peak_rss_mb is the driver's (Python + JVM) VmHWM
+        # after each side, distributed first: the high-water mark only
+        # rises, so the driver column shows what the collect adds.
+        from java_etl_bi_generator_spark.operators import kmeans
         from java_etl_bi_generator_spark.queries import (
             _PQ_ITERS,
             _PQ_K,
             _PQ_M,
             _ivfpq_index,
         )
-        from java_etl_bi_generator_spark.operators.kmeans import (
-            pq_fit_int,
-        )
-        volumes = [int(float(a)) for a in args] or [50_000, 500_000]
-        print("| vectors | pq_train_s | ivfpq_train_s (coarse+residual) |")
-        print("|" + "---|" * 3)
-        for n in volumes:
-            tmp = tempfile.mkdtemp(prefix=f"scale_probe_pq_{n}_")
-            em = spark.read.parquet(write_table(spark, tmp, "embeddings", n))
-            t0 = time.time()
-            pq_fit_int(em, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)
-            t_pq = time.time() - t0
-            t1 = time.time()
-            _ivfpq_index(em, cache_key=None)  # uncached: measure train
-            t_ivfpq = time.time() - t1
-            print(
-                f"| {n:,} | {t_pq:.1f} | {t_ivfpq:.1f} |",
-                flush=True,
-            )
-            shutil.rmtree(tmp, ignore_errors=True)
+
+        def peak_rss_mb() -> float:
+            kb = 0
+            for pid in (os.getpid(), spark.sparkContext._gateway.proc.pid):
+                with open(f"/proc/{pid}/status") as f:
+                    kb += sum(int(line.split()[1]) for line in f
+                              if line.startswith("VmHWM:"))
+            return kb / 1024
+
+        def train_s(fn) -> float:
+            fn()  # warm
+            best = float("inf")
+            for _ in range(2):
+                t0 = time.perf_counter()
+                fn()
+                best = min(best, time.perf_counter() - t0)
+            return best
+
+        volumes = [int(float(a)) for a in args] or [
+            1_000, 5_000, 10_000, 20_000, 50_000,
+        ]
+        default_limit = kmeans.DRIVER_LLOYD_LIMIT
+        print("| vectors | components | pq distributed_s | pq driver_s | "
+              "ivfpq distributed_s | ivfpq driver_s | "
+              "peak_rss_mb distributed / driver |")
+        print("|" + "---|" * 7)
+        try:
+            for n in volumes:
+                tmp = tempfile.mkdtemp(prefix=f"scale_probe_pq_{n}_")
+                em = spark.read.parquet(
+                    write_table(spark, tmp, "embeddings", n)
+                )
+                dim = len(em.first()["embedding"])
+                row, rss = [], []
+                for limit in (0, n * dim):
+                    kmeans.DRIVER_LLOYD_LIMIT = limit
+                    row.append(train_s(lambda: kmeans.pq_fit_int(
+                        em, m=_PQ_M, k=_PQ_K, iters=_PQ_ITERS)))
+                    row.append(train_s(  # uncached: measure the training
+                        lambda: _ivfpq_index(em, cache_key=None)))
+                    rss.append(peak_rss_mb())
+                kmeans.DRIVER_LLOYD_LIMIT = default_limit
+                print(
+                    f"| {n:,} | {n * dim:,} | {row[0]:.2f} | {row[2]:.2f} | "
+                    f"{row[1]:.2f} | {row[3]:.2f} | "
+                    f"{rss[0]:.0f} / {rss[1]:.0f} |",
+                    flush=True,
+                )
+                shutil.rmtree(tmp, ignore_errors=True)
+        finally:
+            kmeans.DRIVER_LLOYD_LIMIT = default_limit
     elif mode == "graph":
         # iterative/graph family over the co-purchase graph the star
         # generator's lineitem induces (nodes scale with the part count)

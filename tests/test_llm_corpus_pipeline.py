@@ -63,15 +63,15 @@ language temperature sampling (alpha=0.7):
   zh     tokens=1669       p=0.1865 q=0.1936 boost=1.038
 """
 
-# Jobs of one run() at sf0.001 on the local[8] / 8-partition test
-# session with every counted stage pinned: 105 through localCheckpoint,
-# 117 through reliable checkpoint() (once an earlier test has set a
+# Jobs of one cold run() at sf0.001 on the local[8] / 8-partition test
+# session with every counted stage pinned: 64 through localCheckpoint,
+# 70 through reliable checkpoint() (once an earlier test has set a
 # checkpoint dir on the shared session, each cut adds a job that writes
 # its files).  Dropping the union, exact-dedup, near-dedup,
 # decontamination or DSIR pin adds 1-19 jobs on either path; the Gopher
 # pin saves re-tokenization rather than jobs, so the lazy-pin count
 # below guards it.
-JOB_CEILING = {"local": 105, "reliable": 117}
+JOB_CEILING = {"local": 64, "reliable": 70}
 LAZY_PINS = 6  # union, Gopher, exact, near, decontamination, DSIR
 
 
